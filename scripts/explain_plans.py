@@ -59,7 +59,7 @@ def main() -> None:
     gated = p._stage_gated(scored, sk)
     sections["stage6_gated"] = explain_str(gated)
     gated = gated.localCheckpoint()
-    rescored = p._stage_rescored(scored, pairsh, sk, cnt, n_items)
+    rescored = p._stage_rescored(scored, pairsh, sk, n_items)
     sections["stage7_rescored"] = explain_str(rescored)
     rescored = rescored.localCheckpoint()
     verified = p._stage_verified(rescored, gated)

@@ -27,18 +27,19 @@ def main(path=".bench_cache/images_big.parquet", n_base=300_000, cpus=32):
         if kind == "base":
             continue
         rid, bid = f"img{row_idx:010d}", f"img{base_idx:010d}"
-        same = labels.get(rid) == labels.get(bid)
+        # an id missing from the labels is a miss (and never a merge)
+        same = rid in labels and bid in labels and labels[rid] == labels[bid]
         if kind == "negative":
             neg_total += 1
             neg_bad += int(same)
         else:
             d = by_kind.setdefault(kind, [0, 0])
-            d[same] = d[same]  # noqa
-            if same: hits += 1; d[1] = d[1] + 1
-            else: misses += 1; d[0] = d[0] + 1
+            d[same] += 1
+            if same: hits += 1
+            else: misses += 1
     rec = hits / max(hits + misses, 1)
     print(json.dumps({
-        "recall": round(rec, 4), "hits": hits, "misses": misses,
+        "recall": rec, "hits": hits, "misses": misses,
         "neg_merged": neg_bad, "neg_total": neg_total,
         "by_kind": {k: {"miss": v[0], "hit": v[1]} for k, v in by_kind.items()},
     }))

@@ -21,6 +21,7 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 DEFAULT_DRIVER_THRESHOLD = 2_000_000
 
@@ -45,7 +46,6 @@ def connected_components(
     dst_col: str = "id_b",
     max_iter: int = 50,
     driver_threshold: int | None = None,
-    with_sizes: bool = False,
 ) -> DataFrame:
     """Returns (node_col, cluster_id) where cluster_id = min node id in the
     component. Deterministic; independent of input partitioning.
@@ -54,9 +54,6 @@ def connected_components(
     callers whose node universe IS the edge set (e.g. first-pass pair
     participants) skip the node left-join and, on the driver path, get a
     single Arrow local table with no Spark-side joins at all.
-    ``with_sizes=True`` appends a ``cluster_size`` column (isolated nodes
-    count 1): free on the driver path (np.bincount over the label codes),
-    one labels-table aggregation + join on the distributed path.
 
     Node and edge id columns MUST be non-null strings (the framework's
     image_ids are): both paths label a component by its MIN id, and "min"
@@ -81,10 +78,10 @@ def connected_components(
     probe = pairs.limit(driver_threshold + 1).toArrow()
     if probe.num_rows <= driver_threshold:
         return _driver_cc(
-            nodes, edges.sparkSession, probe, node_col, src_col, dst_col, with_sizes
+            nodes, edges.sparkSession, probe, node_col, src_col, dst_col
         )
     return _distributed_cc(
-        nodes, edges, node_col, src_col, dst_col, max_iter, with_sizes
+        nodes, edges, node_col, src_col, dst_col, max_iter
     )
 
 
@@ -143,39 +140,30 @@ def _driver_cc(
     node_col: str,
     src_col: str,
     dst_col: str,
-    with_sizes: bool,
 ) -> DataFrame:
     """Vectorized driver-side CC over an Arrow edge table (see _numpy_cc).
     Replaces the dict union-find whose per-edge Python loop was ~2 s of
     core-count-invariant driver time at bench scale (serial floor in the
     scaling legs)."""
-    import numpy as np
     import pandas as pd
 
     _check_edge_tbl(edge_tbl, src_col, dst_col)
     if edge_tbl.num_rows:
         uniq, label, _ = _numpy_cc(edge_tbl, src_col, dst_col)
         cols = {node_col: uniq, "cluster_id": uniq[label]}
-        if with_sizes:
-            cols["cluster_size"] = np.bincount(label)[label].astype(np.int64)
         lbl_df = spark.createDataFrame(pd.DataFrame(cols))
     else:
-        sz = ", cluster_size bigint" if with_sizes else ""
-        lbl_df = spark.createDataFrame(
-            [], f"{node_col} string, cluster_id string{sz}"
-        )
+        lbl_df = spark.createDataFrame([], f"{node_col} string, cluster_id string")
     if nodes is None:
         return lbl_df
-    out = nodes.select(node_col).join(lbl_df, node_col, "left")
-    proj = [
-        F.col(node_col),
-        F.coalesce(F.col("cluster_id"), F.col(node_col)).alias("cluster_id"),
-    ]
-    if with_sizes:
-        proj.append(
-            F.coalesce(F.col("cluster_size"), F.lit(1)).alias("cluster_size")
+    return (
+        nodes.select(node_col)
+        .join(lbl_df, node_col, "left")
+        .select(
+            node_col,
+            F.coalesce(F.col("cluster_id"), F.col(node_col)).alias("cluster_id"),
         )
-    return out.select(*proj)
+    )
 
 
 def pair_cluster_labels(
@@ -185,76 +173,57 @@ def pair_cluster_labels(
     dst_col: str = "id_b",
     driver_threshold: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Label every EDGE PAIR and every endpoint NODE with its connected
-    component and component size, in one pass.
+    """Label every EDGE and every endpoint NODE with its connected
+    component, in one pass.
 
     Returns ``(pair_df, node_df)``:
-      pair_df — (src_col, dst_col, pre_cluster, csize), one row per input
-      edge, labeled by the lexicographic-min member of its component;
-      node_df — (node_col, pre_cluster, csize) over the edge endpoints.
+      pair_df — every column of ``edges`` plus ``pre_cluster``, one row per
+      input edge, labeled by the lexicographic-min member of its component
+      (extra edge columns, e.g. a similarity, ride through, so callers need
+      no join back onto the edge table);
+      node_df — (node_col, pre_cluster) over the edge endpoints.
 
     Below ``driver_threshold`` edges, both tables come out of ONE driver
-    numpy CC pass over the collected Arrow edge list: the edge→label
+    numpy CC pass over the collected Arrow edge table: the edge→label
     assignment is a vectorized gather (uniq[label[src_codes]]), so the
     caller pays a single bounded collect and ZERO Spark joins or eager
-    checkpoints — this is what removes the rescore stage's serial floor
-    (BENCH/BASELINE.md per-stage attribution: the pre/bigp localCheckpoint
-    barriers plus two label joins were ~core-count-invariant seconds).
-    Above the threshold, node labels come from the distributed propagation
-    loop and pair labels from one shuffle join on ``src_col`` (both edge
-    endpoints share a component, so one side suffices). String-id contract
-    identical to connected_components."""
-    import numpy as np
+    checkpoints. Both tables then carry a broadcast hint: they hold at most
+    ``driver_threshold`` rows and already sit on the driver, so a consumer
+    join ships them instead of shuffling its other side. Above the
+    threshold, node labels come from the distributed propagation loop and
+    pair labels from one shuffle join on ``src_col`` (both edge endpoints
+    share a component, so one side suffices), with no hint. String-id
+    contract identical to connected_components."""
     import pandas as pd
 
     spark = edges.sparkSession
     driver_threshold = _resolve_driver_threshold(driver_threshold)
-    pairs = edges.select(src_col, dst_col)
-    probe = pairs.limit(driver_threshold + 1).toArrow()
+    probe = edges.limit(driver_threshold + 1).toArrow()
     if probe.num_rows > driver_threshold:
         node_df = _distributed_cc(
-            None, edges, node_col, src_col, dst_col, 50, True
-        ).withColumnRenamed("cluster_id", "pre_cluster").withColumnRenamed(
-            "cluster_size", "csize"
-        )
-        pair_df = pairs.join(
-            node_df.select(
-                F.col(node_col).alias(src_col), "pre_cluster", "csize"
-            ),
-            src_col,
-        ).select(src_col, dst_col, "pre_cluster", "csize")
+            None, edges, node_col, src_col, dst_col, 50
+        ).withColumnRenamed("cluster_id", "pre_cluster")
+        pair_df = edges.join(
+            node_df.withColumnRenamed(node_col, src_col), src_col
+        ).select(*edges.columns, "pre_cluster")
         return pair_df, node_df
     _check_edge_tbl(probe, src_col, dst_col)
+    label_field = T.StructField("pre_cluster", T.StringType())
+    pair_schema = T.StructType(edges.schema.fields + [label_field])
+    node_schema = T.StructType(
+        [T.StructField(node_col, T.StringType()), label_field]
+    )
     if probe.num_rows == 0:
-        schema_p = f"{src_col} string, {dst_col} string, pre_cluster string, csize bigint"
-        schema_n = f"{node_col} string, pre_cluster string, csize bigint"
-        return (
-            spark.createDataFrame([], schema_p),
-            spark.createDataFrame([], schema_n),
-        )
-    uniq, label, ca = _numpy_cc(probe, src_col, dst_col)
-    sizes = np.bincount(label)
-    node_df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                node_col: uniq,
-                "pre_cluster": uniq[label],
-                "csize": sizes[label].astype(np.int64),
-            }
-        )
+        pair_pdf, node_pdf = [], []
+    else:
+        uniq, label, ca = _numpy_cc(probe, src_col, dst_col)
+        node_pdf = pd.DataFrame({node_col: uniq, "pre_cluster": uniq[label]})
+        pair_pdf = probe.to_pandas()
+        pair_pdf["pre_cluster"] = uniq[label[ca]]
+    return (
+        F.broadcast(spark.createDataFrame(pair_pdf, pair_schema)),
+        F.broadcast(spark.createDataFrame(node_pdf, node_schema)),
     )
-    el = label[ca]
-    pair_df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                src_col: probe.column(src_col).to_numpy(zero_copy_only=False),
-                dst_col: probe.column(dst_col).to_numpy(zero_copy_only=False),
-                "pre_cluster": uniq[el],
-                "csize": sizes[el].astype(np.int64),
-            }
-        )
-    )
-    return pair_df, node_df
 
 
 def _distributed_cc(
@@ -264,7 +233,6 @@ def _distributed_cc(
     src_col: str,
     dst_col: str,
     max_iter: int,
-    with_sizes: bool,
 ) -> DataFrame:
     sym = (
         edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
@@ -324,14 +292,6 @@ def _distributed_cc(
             f"connected_components did not converge in {max_iter} iterations "
             f"(last delta: {changed} labels still changing)"
         )
-    out = labels.select(
+    return labels.select(
         F.col("u").alias(node_col), F.col("lbl").alias("cluster_id")
     )
-    if with_sizes:
-        out = out.join(
-            out.groupBy("cluster_id").agg(
-                F.count("*").alias("cluster_size")
-            ),
-            "cluster_id",
-        ).select(node_col, "cluster_id", "cluster_size")
-    return out

@@ -204,7 +204,8 @@ def winner_rescore(
 
     Every INFORMATIVE shingle (corpus df ≤ the banding stop-shingle limit)
     is owned by the highest-scoring first-pass item containing it (tie →
-    larger image_id, matching the Spark max_by struct order); each
+    larger image_id, matching the (item_score, image_id) rank of the Spark
+    kernel, udfs.make_rescore_arrow_fn); each
     first-pass pair is rescored on the shingles it still owns, tracking
     ``kmers_lost``; pairs with kmers_lost ≥ tau^ani_k · total_kmers drop.
 

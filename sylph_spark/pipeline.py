@@ -10,7 +10,8 @@ config hash):
   4. pair_shingles  pair → intersecting shingles + corpus multiplicities (J1, contain.rs:632-652)
   5. scored         corrected-containment scoring             (E1/E6/E7, contain.rs:601-745)
   6. gated          tau + SimHash hamming + suffix-array LCS  (north-rule verification; cluster edges)
-  7. rescored       winner-table shingle reassignment + derep (contain.rs:410-459,637-645,353-375)
+  7. rescored       per-cluster winner-table reassignment + derep, one cogrouped
+                    Arrow kernel per bucket of clusters (contain.rs:410-459,637-645,353-375)
   8. verified       rescored ∩ gated — the report table       (second-pass results, contain.rs:637-645)
   9. clusters       iterative connected components over GATED edges
  10. survivors      argmax representative per cluster         (winner argmax, contain.rs:410-459)
@@ -374,7 +375,6 @@ class DedupPipeline:
         scored: DataFrame,
         pair_shingles: DataFrame,
         sketches: DataFrame,
-        counts: DataFrame,
         n_items: int,
     ) -> DataFrame:
         """Two-pass winner-table rescoring (contain.rs:410-459 winner table,
@@ -399,139 +399,53 @@ class DedupPipeline:
         removing repeat k-mers from genome sketches BEFORE the winner
         table sees them (sketch.rs:595-600).
 
-        Scale shape: the winner table is shingle-keyed (same cardinality as
-        shingle_counts — one shuffle over item-shingle rows of first-pass
-        survivors only), and the rescore reads the pair intersections (with
-        multiplicities) straight from the materialized pair_shingles table
-        for the first-pass pair set (≪ candidates). No driver-side state."""
+        Scale shape: the winner table is state local to one cluster, so the
+        stage is ONE cogroup keyed by a bucket of clusters,
+        pmod(xxhash64(pre_cluster), spark.sql.shuffle.partitions). The pair
+        side is pair_shingles (intersections with multiplicities, already
+        materialized) joined to the per-pair labels; the item side is the
+        sketch shingle arrays joined to the per-node labels. Each bucket
+        crosses into Python once, where udfs.make_rescore_arrow_fn ranks
+        items, picks winners, counts kmers_lost, applies derep and scores
+        in whole-bucket numpy: two shuffles, no explode, no aggregate. A
+        bucket, not a cluster, is the group so each Arrow call carries many
+        small clusters (one call per cluster took 1.4 s against 0.95 s for
+        this barrier on a 1,500-image corpus, 4-core VM). A two-item
+        cluster is the trivial case: every winner is one of its own pair,
+        so the pair keeps its first-pass score with kmers_lost = 0."""
         cfg = self.cfg
         if not cfg.winner_rescore:
             return scored
-        first = scored.filter(F.col("adj_sim") >= cfg.tau)
-        # item score = best first-pass similarity the item participates in
-        # (the AniResult.final_est_ani analog of the genome's result row)
-        item_score = (
-            first.select(F.col("id_a").alias("image_id"), "adj_sim")
-            .unionByName(first.select(F.col("id_b").alias("image_id"), "adj_sim"))
-            .groupBy("image_id")
-            .agg(F.max("adj_sim").alias("item_score"))
-        )
-        # Only shingles that occur in a FIRST-PASS pair intersection can
-        # arbitrate a rescore (`owned` left-joins the winner table onto ex;
-        # winners for any other shingle are dead rows). pair_shingles already
-        # carries each intersecting shingle WITH its corpus count, so the
-        # repeat mask (cnt ≤ banding df limit — boilerplate never competes,
-        # sketch.rs:595-600) needs no join against the vocabulary-sized rare
-        # table: filter on the carried cnt and dedupe. |needed| ≈ shared
-        # shingles of first-pass pairs ≪ |rare| ≈ the whole vocabulary, so
-        # the winner-table semi-join broadcasts where the old rare join was
-        # a two-sided vocab-scale sort-merge — the stage attribution's
-        # worst-scaling heavy barrier (BENCH/BASELINE.md per-stage table).
-        limit = self._band_df_limit(n_items)
-        # preliminary clusters = competition scope (first-pass edges only).
-        # pair_cluster_labels returns BOTH the per-pair and the per-node
-        # label tables out of one driver CC pass below the edge threshold:
-        # no label join onto `first`, no pre/bigp localCheckpoint barriers
-        # (each was a core-count-invariant eager job — the rescore stage's
-        # measured serial floor, BENCH/BASELINE.md per-stage attribution).
-        # The whole rescore DAG now materializes lazily in the verified
-        # barrier as one job.
-        pair_lab, node_lab = pair_cluster_labels(first.select("id_a", "id_b"))
-        # 2-item-cluster bypass: a winner for shingle s is, by the max_by
-        # construction, an item CONTAINING s within the pair's cluster — in
-        # a cluster of exactly {a, b} that is always a or b, so every
-        # intersection shingle is kept, kmers_lost = 0, and the rescore
-        # recomputes the first-pass score from the identical covs vector.
-        # Those pairs (the dominant class: most duplicate groups are pairs)
-        # pass through as their first-pass rows verbatim; the winner table,
-        # the pair-shingle explode, and the re-aggregation run ONLY over
-        # clusters with >= 3 members, where competition can actually
-        # reassign a shingle. Shrinks the stage's shuffled volume by the
-        # 2-cluster pair fraction (~2/3 on the bench corpus) at any scale.
-        small = first.join(
-            pair_lab.filter(F.col("csize") == 2).select("id_a", "id_b"),
-            ["id_a", "id_b"],
-        )
-        # bigp feeds both the needed-shingle derivation and the pair explode
-        # (a small local/broadcast table — no eager checkpoint needed)
-        bigp = pair_lab.filter(F.col("csize") >= 3).select(
-            "id_a", "id_b", "pre_cluster"
-        )
-        needed = (
-            pair_shingles.join(bigp.select("id_a", "id_b"), ["id_a", "id_b"])
-            .select(F.explode("inter_cnt").alias("e"))
-            .filter(F.col("e.cnt") <= limit)
-            .select(F.col("e.shingle").alias("shingle"))
-            .distinct()
-        )
-        winner = (
-            sketches.join(item_score, "image_id")
-            .join(
-                node_lab.filter(F.col("csize") >= 3).select(
-                    "image_id", "pre_cluster"
-                ),
-                "image_id",
-            )
-            .select(
-                "image_id",
-                "pre_cluster",
-                "item_score",
-                F.explode("shingles").alias("shingle"),
-            )
-            .join(needed, "shingle")
-            .groupBy("pre_cluster", "shingle")
-            .agg(
-                F.expr("max_by(image_id, struct(item_score, image_id))").alias(
-                    "win_id"
-                )
+        # preliminary clusters = competition scope (first-pass edges only);
+        # below the driver threshold both label tables come out of one
+        # driver CC pass and are broadcast into the joins below, and the
+        # pair table carries adj_sim (the item-score input) through
+        pair_lab, node_lab = pair_cluster_labels(
+            scored.filter(F.col("adj_sim") >= cfg.tau).select(
+                "id_a", "id_b", "adj_sim"
             )
         )
-        # pair intersections come straight from the materialized
-        # pair_shingles table (multiplicities included) — no sketch joins,
-        # no array_intersect, no counts join in this pass; bigp already
-        # carries the pair's cluster label, so no second pre join either
-        ex = (
-            pair_shingles.join(bigp, ["id_a", "id_b"])
-            .select(
-                "id_a",
-                "id_b",
-                "pre_cluster",
-                "total_kmers",
-                F.explode("inter_cnt").alias("e"),
+        n_buckets = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        bucket = F.pmod(F.xxhash64("pre_cluster"), F.lit(n_buckets))
+        pairs = pair_shingles.join(pair_lab, ["id_a", "id_b"]).select(
+            bucket.alias("bucket"),
+            "id_a",
+            "id_b",
+            "adj_sim",
+            "total_kmers",
+            "inter_cnt",
+        )
+        items = sketches.select("image_id", "shingles").join(
+            node_lab, "image_id"
+        ).select(bucket.alias("bucket"), "image_id", "pre_cluster", "shingles")
+        return (
+            pairs.groupBy("bucket")
+            .cogroup(items.groupBy("bucket"))
+            .applyInArrow(
+                udfs.make_rescore_arrow_fn(cfg, self._band_df_limit(n_items)),
+                schema=udfs.SCORE_SCHEMA,
             )
-            .select(
-                "id_a",
-                "id_b",
-                "pre_cluster",
-                "total_kmers",
-                F.col("e.shingle").alias("shingle"),
-                F.col("e.cnt").alias("cnt"),
-            )
         )
-        owned = ex.join(winner, ["pre_cluster", "shingle"], "left").withColumn(
-            "kept",
-            F.col("win_id").isNull()
-            | (F.col("win_id") == F.col("id_a"))
-            | (F.col("win_id") == F.col("id_b")),
-        )
-        # ONE aggregation yields both the surviving coverage vector
-        # (collect_list skips the nulled-out lost shingles) and kmers_lost
-        res = owned.groupBy("id_a", "id_b", "total_kmers").agg(
-            F.collect_list(F.when(F.col("kept"), F.col("cnt"))).alias("covs"),
-            F.sum((~F.col("kept")).cast("int")).cast("int").alias("kmers_lost"),
-        )
-        # derep anti-filter (contain.rs:353-375): num_kmer_reassign must stay
-        # under ani_thresh^k · total — here tau^ani_k · total_kmers
-        res = res.filter(
-            F.col("kmers_lost")
-            < F.pow(F.lit(cfg.tau), F.lit(cfg.ani_k)) * F.col("total_kmers")
-        )
-        rescored_big = res.mapInArrow(
-            udfs.make_score_arrow_fn(self.cfg), schema=udfs.SCORE_SCHEMA
-        )
-        # 2-cluster pairs re-enter with their first-pass rows (kmers_lost is
-        # already 0 on the scored path — see make_score_arrow_fn)
-        return rescored_big.unionByName(small)
 
     def _gate_base(self, scored: DataFrame, sketches: DataFrame) -> DataFrame:
         """tau + SimHash-hamming gate with captions attached — the input to
@@ -669,7 +583,7 @@ class DedupPipeline:
         rescored = ensure(
             "rescored",
             lambda: self._stage_rescored(
-                scored, pair_shingles, sketches, counts, n_items
+                scored, pair_shingles, sketches, n_items
             ),
         )
         verified = ensure(
@@ -760,7 +674,7 @@ def run_volatile(
     scored = timed(
         "scored", lambda: p._stage_scored(pair_shingles).localCheckpoint()
     )
-    # gated (pandas_udf LCS gate) and rescored (winner-table join chain)
+    # gated (pandas_udf LCS gate) and rescored (cogrouped winner kernel)
     # depend only on scored/pair_shingles/sketches — not on each other — so
     # their materializations run as two concurrent jobs (guide §2.6: overlap
     # independent jobs so one barrier's straggler tail back-fills with the
@@ -778,7 +692,7 @@ def run_volatile(
             lambda: timed(
                 "rescored",
                 lambda: p._stage_rescored(
-                    scored, pair_shingles, sketches, counts, n_items
+                    scored, pair_shingles, sketches, n_items
                 ).localCheckpoint(),
             )
         )

@@ -683,17 +683,128 @@ def make_score_arrow_fn(cfg: SketchConfig, force_slow: bool = False):
     kernel loop. ``kmers_lost`` (winner-table reassignment count,
     contain.rs:641) is passed through when present (rescore pass), 0
     otherwise; CI columns are NaN unless bootstrapping."""
-    fast = not force_slow and cfg.estimator in ("ratio", "mme")
+    score = _batch_scorer(cfg, force_slow)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            has_lost = batch.schema.get_field_index("kmers_lost") >= 0
-            out = None
-            if fast:
-                out = _score_batch_fast(batch, cfg, has_lost)
-            if out is None:
-                out = _score_batch_slow(batch, cfg, has_lost)
-            yield out
+            yield score(batch)
+
+    return fn
+
+
+def _batch_scorer(cfg: SketchConfig, force_slow: bool = False):
+    """batch → scored batch, on the fast path for the ratio/mme estimators."""
+    fast = not force_slow and cfg.estimator in ("ratio", "mme")
+    score = _score_batch_fast if fast else _score_batch_slow
+
+    def run(batch: pa.RecordBatch) -> pa.RecordBatch:
+        return score(batch, cfg, batch.schema.get_field_index("kmers_lost") >= 0)
+
+    return run
+
+
+def _rescore_bucket(
+    pairs: pa.Table, items: pa.Table, limit: int, reass_frac: float
+) -> pa.RecordBatch:
+    """Winner-table reassignment for one bucket of preliminary clusters —
+    oracle.winner_rescore in whole-bucket numpy, no per-row Python.
+
+    ``pairs`` holds the bucket's first-pass pairs (id_a, id_b, adj_sim,
+    total_kmers, inter_cnt = [(shingle, corpus cnt)]); ``items`` holds every
+    endpoint of them (image_id, pre_cluster, shingles). Returns the scorer
+    input (id_a, id_b, total_kmers, covs, kmers_lost) of the pairs that pass
+    the derep filter (contain.rs:353-375), ``covs`` counting only the
+    shingles each pair still owns."""
+    import pyarrow.compute as pc
+
+    def col(t: pa.Table, name: str) -> pa.Array:
+        return t.column(name).combine_chunks()
+
+    n = pairs.num_rows
+    item_ids = col(items, "image_id")
+    ids_a, ids_b = col(pairs, "id_a"), col(pairs, "id_b")
+    ia = pc.index_in(ids_a, value_set=item_ids).to_numpy()
+    ib = pc.index_in(ids_b, value_set=item_ids).to_numpy()
+    # item score = best first-pass similarity the item takes part in; items
+    # rank by (item_score, image_id), so ties go to the larger image_id
+    score = np.full(len(item_ids), -np.inf)
+    adj = col(pairs, "adj_sim").to_numpy()
+    np.maximum.at(score, ia, adj)
+    np.maximum.at(score, ib, adj)
+    order = pc.sort_indices(
+        pa.table({"s": score, "id": item_ids}),
+        sort_keys=[("s", "ascending"), ("id", "ascending")],
+    ).to_numpy()
+    rank = np.empty_like(order)
+    rank[order] = np.arange(order.size)
+    cl = col(items, "pre_cluster").dictionary_encode().indices.to_numpy()
+    cl = cl.astype(np.int64)
+
+    inter = col(pairs, "inter_cnt")
+    pp = np.repeat(np.arange(n), pc.list_value_length(inter).to_numpy())
+    flat = inter.flatten()
+    fields = dict(zip((f.name for f in flat.type), flat.flatten()))
+    psh, pcnt = fields["shingle"].to_numpy(), fields["cnt"].to_numpy()
+    # shingles above the df limit never compete (repeat-mask analog,
+    # sketch.rs:595-600); a competing shingle is keyed by (cluster, shingle
+    # code), so clusters sharing a bucket never compete with each other
+    compete = pcnt <= limit
+    uniq = np.unique(psh[compete])
+    ish_list = col(items, "shingles")
+    ii = np.repeat(
+        np.arange(items.num_rows), pc.list_value_length(ish_list).to_numpy()
+    )
+    ish = ish_list.flatten().to_numpy()
+    pos = np.searchsorted(uniq, ish)
+    hit = pos < uniq.size
+    hit[hit] = uniq[pos[hit]] == ish[hit]
+    ii = ii[hit]
+    key = cl[ii] * uniq.size + pos[hit]
+    # winner per key = the highest-ranked item holding the shingle
+    o = np.lexsort((rank[ii], key))
+    win_key, win_item = key[o], ii[o]
+    last = np.ones(win_key.size, dtype=bool)
+    last[:-1] = win_key[1:] != win_key[:-1]
+    win_key, win_item = win_key[last], win_item[last]
+
+    # a competing pair shingle lies in both endpoints, so its key has a
+    # winner; the pair keeps it only when that winner is one of its own
+    pa_c, pb_c = ia[pp[compete]], ib[pp[compete]]
+    pkey = cl[pa_c] * uniq.size + np.searchsorted(uniq, psh[compete])
+    wi = win_item[np.searchsorted(win_key, pkey)]
+    kept = np.ones(psh.size, dtype=bool)
+    kept[compete] = (wi == pa_c) | (wi == pb_c)
+
+    lost = np.bincount(pp[~kept], minlength=n)
+    total = col(pairs, "total_kmers").to_numpy()
+    ok = lost < reass_frac * total
+    keep = kept & ok[pp]
+    offsets = np.zeros(int(ok.sum()) + 1, dtype=np.int32)
+    np.cumsum(np.bincount(pp[keep], minlength=n)[ok], out=offsets[1:])
+    sel = pa.array(np.flatnonzero(ok))
+    return pa.RecordBatch.from_arrays(
+        [
+            ids_a.take(sel),
+            ids_b.take(sel),
+            pa.array(total[ok].astype(np.int32)),
+            pa.ListArray.from_arrays(pa.array(offsets), pa.array(pcnt[keep])),
+            pa.array(lost[ok].astype(np.int32)),
+        ],
+        names=["id_a", "id_b", "total_kmers", "covs", "kmers_lost"],
+    )
+
+
+def make_rescore_arrow_fn(cfg: SketchConfig, limit: int):
+    """cogroup ``applyInArrow`` kernel of the rescored stage: (pair rows,
+    item rows) of one bucket of preliminary clusters → rescored rows in
+    SCORE_SCHEMA. ``limit`` is the banding df limit above which shingles
+    never compete."""
+    score = _batch_scorer(cfg)
+    reass_frac = cfg.tau**cfg.ani_k
+
+    def fn(pairs: pa.Table, items: pa.Table) -> pa.Table:
+        batch = _rescore_bucket(pairs, items, limit, reass_frac)
+        return pa.Table.from_batches([score(batch)])
 
     return fn
 

@@ -3,7 +3,12 @@
 import numpy as np
 import pytest
 
-from sylph_spark.cc import _distributed_cc, _driver_cc, connected_components
+from sylph_spark.cc import (
+    _distributed_cc,
+    _driver_cc,
+    connected_components,
+    pair_cluster_labels,
+)
 
 
 @pytest.fixture(scope="module")
@@ -34,51 +39,26 @@ class TestCC:
     def test_driver_equals_distributed(self, graph, spark):
         ndf, edf = graph
         a = _labels(
-            _driver_cc(
-                ndf, spark, edf.toArrow(), "image_id", "id_a", "id_b", False
-            )
+            _driver_cc(ndf, spark, edf.toArrow(), "image_id", "id_a", "id_b")
         )
         b = _labels(
-            _distributed_cc(ndf, edf, "image_id", "id_a", "id_b", 50, False)
+            _distributed_cc(ndf, edf, "image_id", "id_a", "id_b", 50)
         )
         assert a == b
 
-    def test_endpoint_nodes_and_sizes_paths_agree(self, graph, spark):
-        """nodes=None labels exactly the edge endpoints; with_sizes counts
-        component members — identically on both paths."""
+    def test_endpoint_nodes_paths_agree(self, graph, spark):
+        """nodes=None labels exactly the edge endpoints, identically on both
+        paths."""
         _, edf = graph
-
-        def rows(df):
-            return {
-                r["image_id"]: (r["cluster_id"], r["cluster_size"])
-                for r in df.collect()
-            }
-
-        a = rows(
-            _driver_cc(None, spark, edf.toArrow(), "image_id", "id_a", "id_b", True)
+        a = _labels(
+            _driver_cc(None, spark, edf.toArrow(), "image_id", "id_a", "id_b")
         )
-        b = rows(_distributed_cc(None, edf, "image_id", "id_a", "id_b", 50, True))
+        b = _labels(_distributed_cc(None, edf, "image_id", "id_a", "id_b", 50))
         assert a == b
         touched = {r["id_a"] for r in edf.collect()} | {
             r["id_b"] for r in edf.collect()
         }
         assert set(a) == touched
-        from collections import defaultdict
-
-        comp = defaultdict(set)
-        for n, (c, _) in a.items():
-            comp[c].add(n)
-        for n, (c, sz) in a.items():
-            assert sz == len(comp[c])
-
-    def test_isolated_nodes_size_one(self, spark):
-        ndf = spark.createDataFrame([("a",), ("b",), ("c",)], ["image_id"])
-        edf = spark.createDataFrame([("a", "b")], "id_a string, id_b string")
-        rows = {
-            r["image_id"]: (r["cluster_id"], r["cluster_size"])
-            for r in connected_components(ndf, edf, with_sizes=True).collect()
-        }
-        assert rows == {"a": ("a", 2), "b": ("a", 2), "c": ("c", 1)}
 
     def test_labels_are_min_member(self, graph):
         ndf, edf = graph
@@ -107,3 +87,44 @@ class TestCC:
         edf = spark.createDataFrame([], "id_a string, id_b string")
         lbl = _labels(connected_components(ndf, edf))
         assert lbl == {"a": "a", "b": "b"}
+
+
+class TestPairClusterLabels:
+    """Extra edge columns ride through on both paths (driver_threshold=0
+    forces the distributed one)."""
+
+    SCHEMA = "id_a string, id_b string, adj_sim double"
+
+    @pytest.mark.parametrize("threshold", [None, 0])
+    def test_pass_through_columns(self, spark, threshold):
+        edges = spark.createDataFrame(
+            [("a", "b", 0.9), ("b", "c", 0.7), ("x", "y", 0.8)], self.SCHEMA
+        )
+        pair_df, node_df = pair_cluster_labels(edges, driver_threshold=threshold)
+        assert pair_df.columns == ["id_a", "id_b", "adj_sim", "pre_cluster"]
+        assert sorted(tuple(r) for r in pair_df.collect()) == [
+            ("a", "b", 0.9, "a"),
+            ("b", "c", 0.7, "a"),
+            ("x", "y", 0.8, "x"),
+        ]
+        assert node_df.columns == ["image_id", "pre_cluster"]
+        assert sorted(tuple(r) for r in node_df.collect()) == [
+            ("a", "a"),
+            ("b", "a"),
+            ("c", "a"),
+            ("x", "x"),
+            ("y", "x"),
+        ]
+
+    @pytest.mark.parametrize("threshold", [None, 0])
+    def test_zero_edges(self, spark, threshold):
+        edges = spark.createDataFrame([], self.SCHEMA)
+        pair_df, node_df = pair_cluster_labels(edges, driver_threshold=threshold)
+        assert pair_df.dtypes == [
+            ("id_a", "string"),
+            ("id_b", "string"),
+            ("adj_sim", "double"),
+            ("pre_cluster", "string"),
+        ]
+        assert node_df.dtypes == [("image_id", "string"), ("pre_cluster", "string")]
+        assert pair_df.count() == 0 and node_df.count() == 0

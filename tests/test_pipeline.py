@@ -191,6 +191,25 @@ class TestResume:
             assert lin.count() == m.partitions
 
 
+def test_rescored_plan_shape(spark_result):
+    """Plan-shape guard for the rescored stage over committed stage tables:
+    one cogroup fed by two shuffles (the label tables are broadcast), no
+    explode and no aggregate — a refactor that brings back the winner-table
+    join chain fails here instead of showing up as bench drift."""
+    import re
+
+    pipe, out, _ = spark_result
+    n_items = pipe.catalog.manifest("sketches").rows
+    df = pipe._stage_rescored(
+        out["scored"], out["pair_shingles"], out["sketches"], n_items
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapCoGroupsInArrow" in plan
+    assert len(re.findall(r"\bExchange\b", plan)) <= 2, plan
+    assert "Generate" not in plan, plan
+    assert "Aggregate" not in plan, plan
+
+
 def test_lcs_short_circuit_identical(spark, spark_result):
     """VERDICT r4 #3: the in-UDF equal-caption short-circuit must not
     change the LCS values (vectorized path ≡ pure per-pair automaton),

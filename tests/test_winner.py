@@ -85,6 +85,96 @@ class TestWinnerRescoreOracle:
         assert len(out) == 1 and out["kmers_lost"].iloc[0] == 0
 
 
+class TestRescoreKernel:
+    """udfs.make_rescore_arrow_fn on one bucket that holds two preliminary
+    clusters must reproduce oracle.winner_rescore row for row."""
+
+    def test_two_cluster_bucket_matches_oracle(self):
+        import pyarrow as pa
+
+        from sylph_spark import udfs
+
+        # df limit 4: shingle 999 (in all 6 items) never competes; shingle
+        # 100 is informative and shared by both clusters {A,B,C,D} and {X,Y}
+        cfg = SketchConfig(band_max_df_abs=4)
+        sketches = [
+            _sketch("A", [1, 2, 3, 4, 100, 999]),
+            _sketch("B", [1, 2, 3, 4, 5, 100, 999]),
+            _sketch("C", [1, 2, 3, 9, 999]),
+            _sketch("D", [3, 9, 30, 999]),
+            _sketch("X", [100, 200, 201, 202, 999]),
+            _sketch("Y", [100, 200, 201, 202, 203, 999]),
+        ]
+        counts = oracle.corpus_counts(sketches)
+        assert oracle.band_df_limit(cfg, len(sketches)) == 4
+        assert counts[999] > 4 and counts[100] == 4
+        scored = pd.DataFrame(
+            [
+                {"id_a": "C", "id_b": "D", "adj_sim": 0.55},
+                {"id_a": "X", "id_b": "Y", "adj_sim": 0.95},
+                {"id_a": "A", "id_b": "C", "adj_sim": 0.6},
+                {"id_a": "A", "id_b": "B", "adj_sim": 0.9},
+            ]
+        )
+        by_id = {s.image_id: s for s in sketches}
+        inter_cnt, total = [], []
+        for r in scored.itertuples():
+            a, b = by_id[r.id_a].shingles, by_id[r.id_b].shingles
+            inter = np.intersect1d(a, b).tolist()
+            inter_cnt.append([{"shingle": s, "cnt": counts[s]} for s in inter])
+            total.append(min(a.size, b.size))
+        pairs = pa.table(
+            {
+                "id_a": scored["id_a"],
+                "id_b": scored["id_b"],
+                "adj_sim": scored["adj_sim"],
+                "total_kmers": pa.array(total, pa.int32()),
+                "inter_cnt": pa.array(
+                    inter_cnt,
+                    pa.list_(
+                        pa.struct([("shingle", pa.int64()), ("cnt", pa.int32())])
+                    ),
+                ),
+            }
+        )
+        order = ["Y", "C", "A", "X", "D", "B"]
+        items = pa.table(
+            {
+                "image_id": order,
+                "pre_cluster": ["X" if i in "XY" else "A" for i in order],
+                "shingles": [by_id[i].shingles.astype(np.int64) for i in order],
+            }
+        )
+        limit = oracle.band_df_limit(cfg, len(sketches))
+        got = (
+            udfs.make_rescore_arrow_fn(cfg, limit)(pairs, items)
+            .to_pandas()
+            .sort_values(["id_a", "id_b"])
+            .reset_index(drop=True)
+        )
+        exp = (
+            oracle.winner_rescore(scored, sketches, counts, cfg)
+            .astype({"lambda": float})  # None where no λ; the kernel has NaN
+            .sort_values(["id_a", "id_b"])
+            .reset_index(drop=True)
+        )
+        pd.testing.assert_frame_equal(
+            got[list(exp.columns)], exp, check_dtype=False
+        )
+        rows = {(r.id_a, r.id_b): r for r in got.itertuples()}
+        # A and B tie on item score 0.9; B (the larger id) owns 1-3, so
+        # (A,C) loses 3 of its 5 shingles and is derep-dropped
+        assert ("A", "C") not in rows
+        # B wins 100 inside {A,B,C,D} although Y (0.95) holds it too
+        assert rows[("A", "B")].kmers_lost == 0
+        assert rows[("A", "B")].contain_count == 6
+        # (C,D): 3 goes to B, 9 stays with C, 999 never competes
+        assert rows[("C", "D")].kmers_lost == 1
+        assert rows[("C", "D")].contain_count == 2
+        # the two-item cluster keeps every shared shingle
+        assert rows[("X", "Y")].kmers_lost == 0
+
+
 class TestArgmaxSurvivors:
     """Survivor = argmax by mean verified similarity, NOT min id."""
 
