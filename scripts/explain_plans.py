@@ -3,10 +3,10 @@ key entry queries to PLANS.md, and grep for the properties we require —
 pushed filters, pruned schemas, broadcast/codegen spans, no cartesian
 products. Run after plan-affecting changes.
 
-Covers the full 10-stage graph (sketches → shingle_counts → candidates →
-pair_shingles → scored → gated → rescored → verified → clusters →
-survivors). The CC stage is iterative (plan depends on convergence), so the
-audit captures its first-iteration edge/label plan via the stage inputs.
+Walks the pipeline's own stage graph (``pipeline.GRAPH``), so every stage
+is covered: each one is explained, then checkpointed, so the next stage's
+plan starts from materialised inputs. The CC stage is iterative (its plan
+depends on convergence), so the audit captures its post-CC label join.
 """
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ sys.path.insert(0, ".")
 
 from sylph_spark import fixtures
 from sylph_spark.config import SketchConfig
-from sylph_spark.pipeline import DedupPipeline, images_df_from_pandas
+from sylph_spark.pipeline import STAGES, DedupStages, Volatile, images_df_from_pandas
 from sylph_spark.session import build_spark
 
 
@@ -30,47 +30,29 @@ def explain_str(df) -> str:
     return buf.getvalue()
 
 
+class Explain(Volatile):
+    """Volatile materialiser that records each stage's formatted plan
+    before checkpointing it."""
+
+    def __init__(self):
+        self.plans: dict[str, str] = {}
+
+    def commit(self, node, build):
+        df = build()
+        self.plans[node.name] = explain_str(df)
+        return df.localCheckpoint()
+
+
 def main() -> None:
     spark = build_spark("plans", master="local[8]", shuffle_partitions=8)
     images, _ = fixtures.generate_corpus(60, 42)
-    cfg = SketchConfig()
-    p = DedupPipeline.__new__(DedupPipeline)
-    p.spark, p.cfg = spark, cfg
-    idf = images_df_from_pandas(spark, images)
-
-    sections = {}
-    sk = p._stage_sketches(idf)
-    sections["stage1_sketches"] = explain_str(sk)
-    sk = sk.localCheckpoint()
-    cnt = p._stage_shingle_counts(sk)
-    sections["stage2_shingle_counts"] = explain_str(cnt)
-    cnt = cnt.localCheckpoint()
-    n_items = sk.count()
-    n_vocab = cnt.count()
-    cand = p._stage_candidates(sk, cnt, n_items, n_vocab)
-    sections["stage3_candidates"] = explain_str(cand)
-    cand = cand.localCheckpoint()
-    pairsh = p._stage_pair_shingles(cand, sk, cnt)
-    sections["stage4_pair_shingles"] = explain_str(pairsh)
-    pairsh = pairsh.localCheckpoint()
-    scored = p._stage_scored(pairsh)
-    sections["stage5_scored"] = explain_str(scored)
-    scored = scored.localCheckpoint()
-    gated = p._stage_gated(scored, sk)
-    sections["stage6_gated"] = explain_str(gated)
-    gated = gated.localCheckpoint()
-    rescored = p._stage_rescored(scored, pairsh, sk, n_items)
-    sections["stage7_rescored"] = explain_str(rescored)
-    rescored = rescored.localCheckpoint()
-    verified = p._stage_verified(rescored, gated)
-    sections["stage8_verified"] = explain_str(verified)
-    verified = verified.localCheckpoint()
-    clusters = p._stage_clusters(sk, gated)
-    sections["stage9_clusters(post-CC label join)"] = explain_str(clusters)
-    clusters = clusters.localCheckpoint()
-    sections["stage10_survivors"] = explain_str(
-        p._stage_survivors(clusters, verified)
+    explain = Explain()
+    DedupStages(spark, SketchConfig()).run_graph(
+        images_df_from_pandas(spark, images), explain
     )
+    sections = {
+        f"stage{i}_{name}": explain.plans[name] for i, name in enumerate(STAGES, 1)
+    }
 
     import __spark_entry__ as E
 

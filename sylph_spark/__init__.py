@@ -11,8 +11,8 @@ Layout:
 - ``udfs``       Arrow-vectorized pandas UDF wrappers of the kernels
 - ``pipeline``   the Spark stages: sketch → counts → LSH → score → verify →
                  cluster → report
-- ``io.catalog`` checkpointed table catalog (Iceberg if jars present, else
-                 Parquet + manifest/snapshot metadata)
+- ``io.catalog`` checkpointed table catalog (Parquet + manifest/snapshot
+                 metadata)
 - ``operators``  reusable Spark operator library (dedup, similarity, text)
 """
 

@@ -8,11 +8,10 @@ SketchConfig hash; a stage is resumable iff a committed manifest with the
 same config hash exists (the batch analog of streaming state recovery —
 SURVEY.md §2.8).
 
-Backend: Iceberg when a runtime catalog is configured (``SYLPH_ICEBERG=1``
-with spark.jars.packages resolvable), else Parquet directories with
-``_MANIFEST.json`` / ``_LINEAGE`` metadata reproducing the needed semantics:
-atomic commit (manifest written last), snapshot id, per-partition lineage
-rows, and an append-only ``_metrics`` table. The pipeline sees one API.
+Backend: Parquet directories with ``_MANIFEST.json`` / ``_LINEAGE``
+metadata: atomic commit (manifest written last), snapshot id, per-file
+lineage rows read from the written part-file footers, and an append-only
+``_metrics`` table. Commits of different stages may run concurrently.
 """
 
 from __future__ import annotations
@@ -20,12 +19,14 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 @dataclass
@@ -45,6 +46,7 @@ class StageCatalog:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        self._metrics_lock = threading.Lock()
         os.makedirs(root, exist_ok=True)
 
     # -- paths ------------------------------------------------------------
@@ -92,25 +94,33 @@ class StageCatalog:
             shutil.rmtree(self._table_dir(name))
         df.write.mode("overwrite").parquet(data_dir)
 
-        written = self.spark.read.parquet(data_dir)
-        # per-partition lineage (north rule): rows per output partition
-        lineage = (
-            written.withColumn("part_id", F.spark_partition_id())
-            .groupBy("part_id")
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .withColumn("stage", F.lit(name))
-        )
+        # per-file lineage (north rule) from the part-file footers: one row
+        # per written file (an empty stage writes one 0-row file), read on
+        # the driver without re-reading the table
+        files = sorted(f for f in os.listdir(data_dir) if f.startswith("part-"))
+        counts = [pq.read_metadata(os.path.join(data_dir, f)).num_rows for f in files]
         lineage_dir = os.path.join(self._table_dir(name), "_LINEAGE")
-        lineage.write.mode("overwrite").parquet(lineage_dir)
-        lrows = self.spark.read.parquet(lineage_dir).collect()
-        rows = sum(r["rows"] for r in lrows)
+        os.makedirs(lineage_dir)
+        pq.write_table(
+            pa.table(
+                {
+                    # the writing task's partition id, part-<id>-<uuid>...
+                    "part_id": pa.array([int(f.split("-")[1]) for f in files], pa.int32()),
+                    "file": pa.array(files, pa.string()),
+                    "rows": pa.array(counts, pa.int64()),
+                    "stage": pa.array([name] * len(files), pa.string()),
+                }
+            ),
+            os.path.join(lineage_dir, "part-00000.parquet"),
+        )
+        rows = sum(counts)
 
         m = StageManifest(
             stage=name,
             config_hash=config_hash,
             snapshot_id=uuid.uuid4().hex,
             rows=rows,
-            partitions=len(lrows),
+            partitions=len(files),
             written_at=time.time(),
             extra=extra or {},
         )
@@ -133,7 +143,7 @@ class StageCatalog:
     # -- metrics ----------------------------------------------------------
     def _append_metric(self, stage: str, metric: str, value: float) -> None:
         p = os.path.join(self.root, "_metrics.jsonl")
-        with open(p, "a") as f:
+        with self._metrics_lock, open(p, "a") as f:
             f.write(
                 json.dumps(
                     {"stage": stage, "metric": metric, "value": float(value), "ts": time.time()}

@@ -1,8 +1,23 @@
-"""The staged Spark dedup pipeline (SURVEY.md §3 graft lifecycle).
+"""The staged Spark dedup pipeline (SURVEY.md §3 graft lifecycle): one stage
+graph, one runner, two materialisers.
 
-Stages (each commits a checkpointed table via StageCatalog; a killed job
-resumes at the first stage without a committed manifest for the current
-config hash):
+``GRAPH`` lists every node once: its name, its inputs and what the volatile
+path does with it. ``DedupStages.run_graph`` submits each node as soon as its
+inputs are ready, so independent stages run as concurrent Spark jobs
+(shingle_counts ∥ the sketch row count, then gated ∥ rescored, with clusters
+starting as soon as gated is done). The runner owns that order and overlap,
+times the volatile barriers and labels each stage's Spark jobs with the stage
+name. What materialising a stage means belongs to the materialiser:
+
+- ``Durable`` (``DedupPipeline.run``): each stage commits a table through
+  StageCatalog, or is skipped when a committed manifest matches the config
+  hash and input fingerprint, so a killed job resumes at the first stage
+  without one. Row counts come from the manifests.
+- ``Volatile`` (``run_volatile``): localCheckpoint barriers and ``count()``
+  row counts, no catalog. Checkpoints truncate lineage, so a lost executor
+  fails the run: this path is not fault-tolerant.
+
+Stages:
 
   1. sketches       images → per-item shingle sets + SimHash  (sketch.rs:276-475 analog)
   2. shingle_counts corpus-wide shingle multiplicities        (A1, sketch.rs:690-731)
@@ -37,6 +52,14 @@ Scale design notes (for the 10^12-row cluster, tested at local[*]):
 """
 
 from __future__ import annotations
+
+import contextlib
+import threading
+import time
+from concurrent.futures import Future, ThreadPoolExecutor
+from dataclasses import dataclass
+from functools import partial
+from typing import NamedTuple
 
 import pandas as pd
 
@@ -88,11 +111,10 @@ def lcs_prefilter_stats(
     suffix automaton (after the in-UDF equal-caption short-circuit) — ONE
     aggregation, no UDF run (the bench counter for the short-circuit's
     effectiveness)."""
-    p = DedupPipeline.__new__(DedupPipeline)
-    p.spark, p.cfg = spark, cfg
     automaton = F.col("cap_a") != F.col("cap_b")
     row = (
-        p._gate_base(scored, sketches)
+        DedupStages(spark, cfg)
+        ._gate_base(scored, sketches)
         .agg(
             F.count(F.lit(1)).alias("hamming_pairs"),
             F.sum(automaton.cast("long")).alias("lcs_udf_pairs"),
@@ -108,26 +130,61 @@ def lcs_prefilter_stats(
     }
 
 
-STAGES = [
-    "sketches",
-    "shingle_counts",
-    "candidates",
-    "pair_shingles",
-    "scored",
-    "gated",
-    "rescored",
-    "verified",
-    "clusters",
-    "survivors",
-]
+class Node(NamedTuple):
+    """One node of the stage graph. ``volatile`` is what the volatile path
+    does with it: "checkpoint" (localCheckpoint, timed under ``barrier``),
+    "time" (the node materialises itself, timed under ``barrier``), "lazy"
+    (left to Catalyst to fuse into the next barrier's job) or "count" (the
+    row count of its one input, not a stage table). The durable path
+    commits every stage."""
+
+    name: str
+    inputs: tuple[str, ...]
+    volatile: str
+    barrier: str | None = None
 
 
-class DedupPipeline:
-    def __init__(self, spark: SparkSession, cfg: SketchConfig, workdir: str):
+GRAPH = (
+    Node("sketches", ("images",), "checkpoint", "sketches"),
+    Node("shingle_counts", ("sketches",), "checkpoint", "shingle_counts"),
+    Node("n_items", ("sketches",), "count", "counts(2)"),
+    Node("n_vocab", ("shingle_counts",), "count", "counts(2)"),
+    Node("candidates", ("sketches", "shingle_counts", "n_items", "n_vocab"), "lazy"),
+    # pair_shingles feeds both scoring passes; lazy candidates
+    # materialises inside its barrier
+    Node(
+        "pair_shingles",
+        ("candidates", "sketches", "shingle_counts"),
+        "checkpoint",
+        "cands+pair_shingles",
+    ),
+    Node("scored", ("pair_shingles",), "checkpoint", "scored"),
+    Node("gated", ("scored", "sketches"), "checkpoint", "gated"),
+    Node(
+        "rescored",
+        ("scored", "pair_shingles", "sketches", "n_items"),
+        "checkpoint",
+        "rescored",
+    ),
+    # verified's one consumer (survivors' rep_score) references it once and
+    # both its join inputs are checkpointed: the tiny join fuses into the
+    # survivors job instead of paying its own barrier
+    Node("verified", ("rescored", "gated"), "lazy"),
+    # the CC driver loop (bounded Arrow collect + numpy) materialises itself
+    Node("clusters", ("sketches", "gated"), "time", "clusters(cc)"),
+    Node("survivors", ("clusters", "verified"), "lazy"),
+)
+STAGES = [n.name for n in GRAPH if n.volatile != "count"]
+
+
+class DedupStages:
+    """The stage builders (``_stage_<name>``, one per stage of ``GRAPH``)
+    and the runner that walks the graph; they need only the session and the
+    config."""
+
+    def __init__(self, spark: SparkSession, cfg: SketchConfig):
         self.spark = spark
         self.cfg = cfg
-        self.catalog = StageCatalog(spark, workdir)
-        self.h = cfg.config_hash()
 
     # -- stage bodies ------------------------------------------------------
 
@@ -547,66 +604,110 @@ class DedupPipeline:
 
     # -- orchestration -----------------------------------------------------
 
+    def run_graph(
+        self, images: DataFrame, mat, stage_times: dict | None = None
+    ) -> dict[str, DataFrame]:
+        """Materialise every node of ``GRAPH`` through ``mat`` (``commit``
+        a stage, give a stage's ``rows``) and return the ten stages.
+
+        Each node runs on its own thread as soon as its inputs are ready:
+        nodes that do not depend on each other run as concurrent Spark jobs,
+        so one barrier's straggler tail back-fills with the other's tasks.
+        Results are unchanged, since every plan is deterministic and the
+        scheduler only interleaves tasks. A node's jobs carry its name as
+        their Spark job description. With ``stage_times``, the wall seconds
+        of each node with a ``barrier`` accumulate under that key (both row
+        counts under "counts(2)"); overlapping barriers overlap on the wall
+        clock, so their sum can exceed the elapsed time."""
+        sc = self.spark.sparkContext
+        lock = threading.Lock()
+
+        def run_node(node: Node, futures: dict[str, Future]):
+            args = [futures[i].result() for i in node.inputs]
+            # only the sketch stage reads the ~100 KB image rows; its small
+            # batch confs are session-wide, which is safe because every
+            # other node depends on sketches and so cannot run beside it
+            scope = (
+                heavy_payload_batches(self.spark)
+                if "images" in node.inputs
+                else contextlib.nullcontext()
+            )
+            sc.setJobDescription(node.name)
+            try:
+                with scope:
+                    t0 = time.time()
+                    if node.volatile == "count":
+                        out = mat.rows(node.inputs[0], args[0])
+                    else:
+                        build = getattr(self, "_stage_" + node.name)
+                        out = mat.commit(node, partial(build, *args))
+                    dt = time.time() - t0
+            finally:
+                sc.setJobDescription(None)
+            if node.barrier is not None and stage_times is not None:
+                with lock:
+                    stage_times[node.barrier] = round(
+                        stage_times.get(node.barrier, 0.0) + dt, 3
+                    )
+            return out
+
+        futures: dict[str, Future] = {"images": Future()}
+        futures["images"].set_result(images)
+        # one thread per node, so a node blocked on its inputs never holds
+        # back one that is ready
+        with ThreadPoolExecutor(max_workers=len(GRAPH)) as pool:
+            for node in GRAPH:
+                futures[node.name] = pool.submit(run_node, node, futures)
+            return {name: futures[name].result() for name in STAGES}
+
+
+@dataclass
+class Durable:
+    """Catalog materialiser: commit each stage unless a committed manifest
+    matches the config hash and input fingerprint (checkpoint/resume, north
+    rule; the input side mirrors contain.rs:503-516 compatibility). Row
+    counts come from the manifests, with no count action."""
+
+    catalog: StageCatalog
+    h: str
+    fp: str
+    force: bool
+
+    def commit(self, node: Node, build) -> DataFrame:
+        cat = self.catalog
+        if self.force or not cat.has_valid(node.name, self.h, self.fp):
+            cat.write(build(), node.name, self.h, extra={"input_fp": self.fp})
+        return cat.read(node.name)
+
+    def rows(self, name: str, df: DataFrame) -> int:
+        return self.catalog.manifest(name).rows
+
+
+class Volatile:
+    """In-memory materialiser: localCheckpoint the "checkpoint" nodes, leave
+    the others as built, count rows with ``count()``."""
+
+    def commit(self, node: Node, build) -> DataFrame:
+        df = build()
+        return df.localCheckpoint() if node.volatile == "checkpoint" else df
+
+    def rows(self, name: str, df: DataFrame) -> int:
+        return df.count()
+
+
+class DedupPipeline(DedupStages):
+    def __init__(self, spark: SparkSession, cfg: SketchConfig, workdir: str):
+        super().__init__(spark, cfg)
+        self.catalog = StageCatalog(spark, workdir)
+        self.h = cfg.config_hash()
+
     def run(self, images: DataFrame, force: bool = False) -> dict[str, DataFrame]:
-        """Run all stages, skipping any whose committed manifest matches the
-        current config hash AND input fingerprint (checkpoint/resume, north
-        rule; the input side mirrors contain.rs:503-516 compatibility)."""
-        cat, h = self.catalog, self.h
+        """The shipped path: walk ``GRAPH`` with the ``Durable``
+        materialiser. Every stage is committed to (or resumed from) the
+        workdir catalog; ``force`` rewrites every stage. Returns the ten
+        committed stage tables."""
         fp = input_fingerprint(images)
-
-        def ensure(name: str, builder) -> DataFrame:
-            if force or not cat.has_valid(name, h, fp):
-                cat.write(builder(), name, h, extra={"input_fp": fp})
-            return cat.read(name)
-
-        # only the sketch stage touches ~100 KB binary rows: scope the small
-        # batch confs to it so every later (small-row) stage keeps the
-        # generic batch sizes
-        with heavy_payload_batches(self.spark):
-            sketches = ensure("sketches", lambda: self._stage_sketches(images))
-        counts = ensure(
-            "shingle_counts", lambda: self._stage_shingle_counts(sketches)
-        )
-        # row counts come from the committed manifests — no re-count actions
-        n_items = cat.manifest("sketches").rows
-        n_vocab = cat.manifest("shingle_counts").rows
-        candidates = ensure(
-            "candidates",
-            lambda: self._stage_candidates(sketches, counts, n_items, n_vocab),
-        )
-        pair_shingles = ensure(
-            "pair_shingles",
-            lambda: self._stage_pair_shingles(candidates, sketches, counts),
-        )
-        scored = ensure("scored", lambda: self._stage_scored(pair_shingles))
-        gated = ensure("gated", lambda: self._stage_gated(scored, sketches))
-        rescored = ensure(
-            "rescored",
-            lambda: self._stage_rescored(
-                scored, pair_shingles, sketches, n_items
-            ),
-        )
-        verified = ensure(
-            "verified", lambda: self._stage_verified(rescored, gated)
-        )
-        clusters = ensure(
-            "clusters", lambda: self._stage_clusters(sketches, gated)
-        )
-        survivors = ensure(
-            "survivors", lambda: self._stage_survivors(clusters, verified)
-        )
-        return {
-            "sketches": sketches,
-            "shingle_counts": counts,
-            "candidates": candidates,
-            "pair_shingles": pair_shingles,
-            "scored": scored,
-            "gated": gated,
-            "rescored": rescored,
-            "verified": verified,
-            "clusters": clusters,
-            "survivors": survivors,
-        }
+        return self.run_graph(images, Durable(self.catalog, self.h, fp, force))
 
 
 def run_volatile(
@@ -615,118 +716,18 @@ def run_volatile(
     cfg: SketchConfig,
     stage_times: dict | None = None,
 ) -> dict[str, DataFrame]:
-    """Run all stages in-memory (localCheckpoint between stages, no catalog).
-    For tests/smoke runs; production runs use DedupPipeline.run (resumable).
+    """Walk ``GRAPH`` with the ``Volatile`` materialiser: the same stages,
+    order and job overlap as ``DedupPipeline.run``, with localCheckpoint
+    barriers and no catalog. Checkpoints truncate lineage, so the run is not
+    fault-tolerant and cannot resume; use it for tests, smoke runs and the
+    bench, and ``DedupPipeline.run`` for production.
 
-    ``stage_times``: optional dict filled with the wall seconds each EAGER
-    materialization barrier took (localCheckpoint / count / the CC driver
-    loop) — the per-stage attribution behind the scaling-efficiency
-    evidence (BENCH/BASELINE.md). Lazy single-consumer stages (candidates,
-    verified, survivors) are fused by Catalyst into the next barrier and
-    show up there."""
-    import time as _t
-
-    def timed(name, fn):
-        t0 = _t.time()
-        out = fn()
-        if stage_times is not None:
-            stage_times[name] = round(
-                stage_times.get(name, 0.0) + _t.time() - t0, 3
-            )
-        return out
-
-    p = DedupPipeline.__new__(DedupPipeline)
-    p.spark, p.cfg = spark, cfg
-    # only sketches is consumed by 4 downstream stages — checkpoint it once;
-    # everything else is single-consumer and stays lazily fused by Catalyst
-    # (the CC loop materializes the edge chain exactly once itself)
-    with heavy_payload_batches(spark):  # image-bytes stage only
-        sketches = timed(
-            "sketches", lambda: p._stage_sketches(images).localCheckpoint()
-        )
-    # n_items (a 1-row count over the checkpointed sketches) is independent
-    # of the shingle_counts aggregation — overlap the two jobs (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        counts_f = pool.submit(
-            lambda: timed(
-                "shingle_counts",
-                lambda: p._stage_shingle_counts(sketches).localCheckpoint(),
-            )
-        )
-        n_items_f = pool.submit(
-            lambda: timed("counts(2)", lambda: sketches.count())
-        )
-        counts = counts_f.result()
-        n_items = n_items_f.result()
-    n_vocab = timed("counts(2)", lambda: counts.count())  # tiny count
-    candidates = p._stage_candidates(sketches, counts, n_items, n_vocab)
-    # pair_shingles feeds scored + rescored (both scoring passes);
-    # the lazy candidates stage materializes inside this barrier
-    pair_shingles = timed(
-        "cands+pair_shingles",
-        lambda: p._stage_pair_shingles(
-            candidates, sketches, counts
-        ).localCheckpoint(),
-    )
-    # scored feeds gated + rescored (item scores)
-    scored = timed(
-        "scored", lambda: p._stage_scored(pair_shingles).localCheckpoint()
-    )
-    # gated (pandas_udf LCS gate) and rescored (cogrouped winner kernel)
-    # depend only on scored/pair_shingles/sketches — not on each other — so
-    # their materializations run as two concurrent jobs (guide §2.6: overlap
-    # independent jobs so one barrier's straggler tail back-fills with the
-    # other's tasks). Results are unchanged: both plans are deterministic
-    # and the scheduler only interleaves their tasks. Their stage_times
-    # overlap on the wall clock (sum of stages ≥ elapsed).
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        gated_f = pool.submit(
-            lambda: timed(
-                "gated",
-                lambda: p._stage_gated(scored, sketches).localCheckpoint(),
-            )
-        )
-        rescored_f = pool.submit(
-            lambda: timed(
-                "rescored",
-                lambda: p._stage_rescored(
-                    scored, pair_shingles, sketches, n_items
-                ).localCheckpoint(),
-            )
-        )
-        gated = gated_f.result()
-        # clusters depends only on gated (see module docstring) — its CC
-        # driver loop (bounded Arrow collect + numpy) overlaps the tail of
-        # the rescored materialization (guide §2.6)
-        clusters_f = pool.submit(
-            lambda: timed(
-                "clusters(cc)", lambda: p._stage_clusters(sketches, gated)
-            )
-        )
-        rescored = rescored_f.result()
-        clusters = clusters_f.result()
-    # verified stays LAZY: its only downstream consumer (survivors'
-    # rep_score) references it once since the explode-based contrib, and
-    # both join inputs (rescored, gated) are already checkpointed — the
-    # tiny join fuses into the survivors job instead of paying its own
-    # materialization barrier (so it gets no stage_times entry: plan
-    # construction is not a barrier)
-    verified = p._stage_verified(rescored, gated)
-    survivors = p._stage_survivors(clusters, verified)
-    return {
-        "sketches": sketches,
-        "shingle_counts": counts,
-        "candidates": candidates,
-        "pair_shingles": pair_shingles,
-        "scored": scored,
-        "gated": gated,
-        "rescored": rescored,
-        "verified": verified,
-        "clusters": clusters,
-        "survivors": survivors,
-    }
+    ``stage_times``: optional dict filled with the wall seconds of each
+    eager barrier (see ``GRAPH``) — the per-stage attribution behind the
+    scaling-efficiency evidence (BENCH/BASELINE.md). Lazy stages
+    (candidates, verified, survivors) are fused by Catalyst into the next
+    barrier and show up there."""
+    return DedupStages(spark, cfg).run_graph(images, Volatile(), stage_times)
 
 
 def images_df_from_pandas(spark: SparkSession, images: pd.DataFrame) -> DataFrame:

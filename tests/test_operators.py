@@ -226,7 +226,7 @@ class TestStreaming:
     def test_incremental_sketch_equals_batch(self, spark, tmp_path):
         """Path-equivalence: streaming-ingested sketches ≡ batch sketches."""
         from sylph_spark.config import SketchConfig
-        from sylph_spark.pipeline import DedupPipeline, images_df_from_pandas
+        from sylph_spark.pipeline import DedupStages, images_df_from_pandas
         from sylph_spark.streaming.ingest import incremental_sketch_stream
 
         images, _ = fixtures.generate_corpus(30, 42)
@@ -249,11 +249,9 @@ class TestStreaming:
             r["image_id"]: (sorted(r["shingles"]), r["simhash"])
             for r in spark.read.parquet(str(tmp_path / "out")).collect()
         }
-        p = DedupPipeline.__new__(DedupPipeline)
-        p.spark, p.cfg = spark, SketchConfig()
         exp = {
             r["image_id"]: (sorted(r["shingles"]), r["simhash"])
-            for r in p._stage_sketches(
+            for r in DedupStages(spark, SketchConfig())._stage_sketches(
                 images_df_from_pandas(spark, images)
             ).collect()
         }

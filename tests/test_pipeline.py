@@ -4,12 +4,16 @@ checkpoint/resume path-equivalence (mirroring the reference's
 path-equivalence tests, /root/reference/tests/integration_test.rs:246-295).
 """
 
+import os
+import shutil
+
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from sylph_spark import fixtures, oracle
 from sylph_spark.config import SketchConfig
-from sylph_spark.pipeline import DedupPipeline, images_df_from_pandas
+from sylph_spark.pipeline import STAGES, DedupPipeline, images_df_from_pandas
 
 
 @pytest.fixture(scope="module")
@@ -30,6 +34,32 @@ def spark_result(spark, corpus, tmp_path_factory):
     pipe = DedupPipeline(spark, SketchConfig(), workdir)
     out = pipe.run(images_df_from_pandas(spark, images))
     return pipe, out, workdir
+
+
+@pytest.fixture(scope="module")
+def volatile_result(spark, corpus):
+    from sylph_spark.pipeline import run_volatile
+
+    images, _ = corpus
+    stage_times = {}
+    out = run_volatile(
+        spark, images_df_from_pandas(spark, images), SketchConfig(), stage_times
+    )
+    return out, stage_times
+
+
+def _canon(df) -> list[str]:
+    """A stage table as sorted row reprs, array values sorted (collect_list
+    order follows shuffle arrival order); repr keeps NaN comparable."""
+
+    def val(v):
+        if isinstance(v, list):
+            return sorted(val(x) for x in v)
+        if isinstance(v, tuple):
+            return tuple(val(x) for x in v)
+        return v
+
+    return sorted(repr(val(tuple(r))) for r in df.collect())
 
 
 class TestPipelineVsOracle:
@@ -183,12 +213,114 @@ class TestResume:
         assert not pipe.catalog.has_valid("sketches", pipe.h, other_fp)
 
     def test_manifests_and_lineage_exist(self, spark_result):
+        """Every stage's manifest counts the part files actually written,
+        and its lineage rows (one per file) sum to the manifest rows."""
         pipe, _, workdir = spark_result
-        for stage in ["sketches", "clusters", "survivors"]:
+        for stage in STAGES:
             m = pipe.catalog.manifest(stage)
-            assert m is not None and m.rows > 0
+            assert m is not None and m.rows > 0, stage
+            data = os.path.join(workdir, stage, "data")
+            parts = [f for f in os.listdir(data) if f.startswith("part-")]
+            assert m.partitions == len(parts), stage
             lin = pipe.catalog.lineage(stage)
-            assert lin.count() == m.partitions
+            assert lin.count() == m.partitions, stage
+            assert lin.agg(F.sum("rows")).first()[0] == m.rows, stage
+
+    @pytest.mark.parametrize("stage", ["pair_shingles", "rescored", "survivors"])
+    def test_resume_recommits_only_missing_stage(
+        self, spark, spark_result, corpus, tmp_path, stage
+    ):
+        """In-process resume at a stage boundary: a workdir whose ``stage``
+        has no committed manifest (its commit was killed) reruns exactly
+        that stage, while the concurrent runner skips every other one, and
+        the clusters and survivors are unchanged."""
+        images, _ = corpus
+        _, out1, workdir = spark_result
+        resumed = str(tmp_path / "resumed")
+        shutil.copytree(workdir, resumed)
+        os.remove(os.path.join(resumed, stage, "_MANIFEST.json"))
+        pipe = DedupPipeline(spark, SketchConfig(), resumed)
+        n_before = len(pipe.catalog.metrics())
+        out2 = pipe.run(images_df_from_pandas(spark, images))
+        new = pipe.catalog.metrics()[n_before:]
+        assert [m["stage"] for m in new if m["metric"] == "rows"] == [stage]
+        for s in ("clusters", "survivors"):
+            assert _canon(out2[s]) == _canon(out1[s]), s
+
+
+def test_catalog_commits_empty_stage(spark, tmp_path):
+    """An empty stage (no gated pairs on a corpus without duplicates)
+    commits with 0 rows, and its lineage still matches the written files."""
+    from sylph_spark.io.catalog import StageCatalog
+
+    cat = StageCatalog(spark, str(tmp_path))
+    m = cat.write(spark.range(5).filter("id < 0"), "gated", "h")
+    parts = [f for f in os.listdir(tmp_path / "gated" / "data") if f.startswith("part-")]
+    assert (m.rows, m.partitions) == (0, len(parts))
+    assert cat.read("gated").count() == 0
+    lin = cat.lineage("gated").collect()
+    assert len(lin) == len(parts) and sum(r["rows"] for r in lin) == 0
+
+
+def test_durable_equals_volatile(spark_result, volatile_result):
+    """The two materialisers of the one stage graph give the same ten stage
+    tables, row for row."""
+    _, durable, _ = spark_result
+    volatile, _ = volatile_result
+    for stage in STAGES:
+        assert durable[stage].columns == volatile[stage].columns, stage
+        assert _canon(durable[stage]) == _canon(volatile[stage]), stage
+
+
+def test_runner_order_and_overlap(spark):
+    """The runner starts each node only after all its inputs have finished,
+    and runs independent nodes concurrently (gated ∥ rescored), whatever
+    the materialiser does."""
+    import threading
+    import time
+
+    from sylph_spark.pipeline import GRAPH, DedupStages
+
+    spans, lock = {}, threading.Lock()
+    count_of = {n.inputs[0]: n.name for n in GRAPH if n.volatile == "count"}
+
+    class Probe:
+        def span(self, name):
+            t0 = time.monotonic()
+            time.sleep(0.05)
+            with lock:
+                spans[name] = (t0, time.monotonic())
+            return name
+
+        def commit(self, node, build):
+            return self.span(node.name)
+
+        def rows(self, name, df):
+            return self.span(count_of[name])
+
+    out = DedupStages(spark, SketchConfig()).run_graph("images", Probe())
+    assert out == {s: s for s in STAGES}
+    for node in GRAPH:
+        for i in node.inputs:
+            if i != "images":
+                assert spans[i][1] <= spans[node.name][0], (i, node.name)
+    gated, rescored = spans["gated"], spans["rescored"]
+    assert gated[0] < rescored[1] and rescored[0] < gated[1]
+
+
+def test_volatile_barrier_keys(volatile_result):
+    """run_volatile times exactly the eight barriers the benchmark maps."""
+    _, stage_times = volatile_result
+    assert set(stage_times) == {
+        "sketches",
+        "shingle_counts",
+        "counts(2)",
+        "cands+pair_shingles",
+        "scored",
+        "gated",
+        "rescored",
+        "clusters(cc)",
+    }
 
 
 def test_rescored_plan_shape(spark_result):

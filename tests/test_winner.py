@@ -196,10 +196,9 @@ class TestArgmaxSurvivors:
         assert by_cluster["z"] == "z"  # singleton falls back to itself
 
     def test_spark_stage_matches_oracle(self, spark):
-        from sylph_spark.pipeline import DedupPipeline
+        from sylph_spark.pipeline import DedupStages
 
-        p = DedupPipeline.__new__(DedupPipeline)
-        p.spark, p.cfg = spark, SketchConfig()
+        p = DedupStages(spark, SketchConfig())
         clusters = spark.createDataFrame(self.CLUSTERS)
         verified = spark.createDataFrame(self.VERIFIED)
         got = {
@@ -209,10 +208,9 @@ class TestArgmaxSurvivors:
         assert got == {("c", "a"), ("z", "z")}
 
     def test_tie_breaks_to_min_id(self, spark):
-        from sylph_spark.pipeline import DedupPipeline
+        from sylph_spark.pipeline import DedupStages
 
-        p = DedupPipeline.__new__(DedupPipeline)
-        p.spark, p.cfg = spark, SketchConfig()
+        p = DedupStages(spark, SketchConfig())
         clusters = spark.createDataFrame(
             pd.DataFrame({"image_id": ["x", "y"], "cluster_id": ["x", "x"]})
         )
