@@ -1,14 +1,13 @@
 """Isolation benchmarks for the optimization round (guide §1.4): times each
 declared bench query through the noop sink with per-phase breakdown
-(register / plan / execute), dumps .explain("formatted") for each, and
-times the dedup pipeline per stage at local[$SPARK_GRAFT_CPUS].
+(register / plan / execute) and times the dedup pipeline per stage at
+local[$SPARK_GRAFT_CPUS]. Physical plans: scripts/explain_plans.py.
 
 NOT part of the driver contract — bench.py is the frozen headline bench.
 
 Usage:
-    python bench_extra.py queries   [names...]   # per-query phases + plans
+    python bench_extra.py queries   [names...]   # per-query phases
     python bench_extra.py pipeline               # dedup stage times
-    python bench_extra.py plans <outdir>         # just dump plans
 """
 
 from __future__ import annotations
@@ -64,24 +63,6 @@ def run_queries(names=None):
     spark.stop()
 
 
-def dump_plans(outdir, suffix="before", names=None):
-    import __spark_entry__ as E
-
-    os.makedirs(outdir, exist_ok=True)
-    spark = _build()
-    qs = E.queries()
-    E._register(spark, SF_DIR)
-    for name in names or BENCH_QUERIES:
-        df = qs[name](spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as f:
-            f.write(plan)
-        print(f"wrote {name}_{suffix}.txt", flush=True)
-    spark.stop()
-
-
 def run_pipeline():
     from bench import _fixture_parquet, run_dedup
 
@@ -101,7 +82,3 @@ if __name__ == "__main__":
         run_queries(sys.argv[2:] or None)
     elif mode == "pipeline":
         run_pipeline()
-    elif mode == "plans":
-        outdir = sys.argv[2] if len(sys.argv) > 2 else "plans/r06"
-        suffix = sys.argv[3] if len(sys.argv) > 3 else "before"
-        dump_plans(outdir, suffix, sys.argv[4:] or None)

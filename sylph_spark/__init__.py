@@ -5,14 +5,20 @@ bluenote-1577/sylph, re-expressed Spark-first.
 Layout:
 - ``kernels``    pure-numpy math (hashing, FracMinHash, λ estimators, CI)
 - ``codecs``     self-contained image codecs (ppm/bmp/qpng/qjpg) + PSNR/phash
-- ``fixtures``   deterministic image+caption corpus generator (seed 42)
+- ``fixtures``   deterministic image+caption corpus generator (seed 42);
+                 ``fixtures_spark`` is its distributed counterpart
 - ``oracle``     single-node numpy reference pipeline (ground truth)
 - ``config``     SketchConfig — shingle/signature/band parameters
 - ``udfs``       Arrow-vectorized pandas UDF wrappers of the kernels
 - ``pipeline``   the Spark stages: sketch → counts → LSH → score → verify →
                  cluster → report
+- ``cc``         connected components (driver-side or distributed)
+- ``session``    SparkSession factory (one fixed table of settings);
+                 ``daemon`` preloads imports into the Python worker daemon
 - ``io.catalog`` checkpointed table catalog (Parquet + manifest/snapshot
-                 metadata)
+                 metadata); ``io.report`` TSV report sink
+- ``sources``    schema-enforced images source
+- ``streaming``  Structured Streaming incremental sketching
 - ``operators``  reusable Spark operator library (dedup, similarity, text)
 """
 
