@@ -16,6 +16,7 @@ pipeline stages (plan-independence across two shuffle-partition settings).
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -201,8 +202,7 @@ SHARED_SQL: dict[str, str] = {
     """,
     # Language-ID (training-data op): stopword-PROFILE hit-count argmax over
     # 4 languages via the length-replace trick, ties broken by profile order,
-    # 'other' on zero hits — the SQL twin of operators.text.language_id
-    # (same profiles, same tie-break); portable across dialects.
+    # 'other' on zero hits; portable across dialects.
     "txt_langid": None,  # filled in below (generated from LANG_PROFILES)
     # E10 k-mer identity estimate (contain.rs:901-951):
     # eps = Σcnt_{>1}/(Σcnt_{>1} + #cnt_{=1} + 0.1); identity = eps^{1/k}
@@ -222,12 +222,21 @@ SHARED_SQL: dict[str, str] = {
 }
 
 
+# Stopword profiles: the highest-frequency closed-class words of each
+# language, space-delimited so they match whole tokens only. Scoring is
+# argmax over the profiles, earlier entries winning ties.
+LANG_PROFILES: dict[str, list[str]] = {
+    "en": ["the", "and", "is", "of", "to"],
+    "fr": ["le", "la", "les", "et", "est"],
+    "de": ["der", "die", "und", "ist", "nicht"],
+    "es": ["el", "los", "que", "es", "una"],
+}
+
+
 def _langid_sql() -> str:
-    """Generate the txt_langid SQL from the SAME profiles the DataFrame
-    operator uses (operators.text.LANG_PROFILES): per-language stopword hit
-    counts over the lowercased space-padded text, CASE-chain argmax with
-    earlier profiles winning ties, 'other' on zero hits."""
-    from sylph_spark.operators.text import LANG_PROFILES
+    """Generate the txt_langid SQL from ``LANG_PROFILES``: per-language
+    stopword hit counts over the lowercased space-padded text, CASE-chain
+    argmax with earlier profiles winning ties, 'other' on zero hits."""
 
     def hits(word: str) -> str:
         token = f" {word} "
@@ -762,7 +771,9 @@ def _q_e2_mle_zip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.groupBy("grp").applyInPandas(fn, schema="grp string, mle_lambda double")
 
 
-_S2_ORACLE_PATH = "/root/repo/.bench_cache/s2_oracle.parquet"
+_S2_ORACLE_PATH = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), ".bench_cache", "s2_oracle.parquet"
+)
 
 
 def _ensure_s2_oracle_parquet() -> str:
@@ -774,8 +785,6 @@ def _ensure_s2_oracle_parquet() -> str:
     the routed groupBy) then hash-mismatches against this table. Rewritten
     on every call (cheap: 100-ish small fixture images) so it can never go
     stale against the fixture generator."""
-    import os
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 

@@ -4,8 +4,8 @@
 Stages checkpoint to the workdir catalog; a killed job resumes at the first
 stage without a committed manifest (same config hash). Examples:
 
-  # package the library
-  (cd /root/repo && zip -qr /tmp/sylph_spark.zip sylph_spark)
+  # package the library (from the repo root)
+  zip -qr /tmp/sylph_spark.zip sylph_spark
 
   # full run on an images parquet/iceberg table
   spark-submit --py-files /tmp/sylph_spark.zip scripts/run_pipeline.py \
@@ -29,7 +29,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--images", help="path to images table (parquet dir)")
+    ap.add_argument(
+        "--images",
+        help="images table: parquet path, or catalog table name (no '/'); "
+        "rows in formats with no native codec are left out",
+    )
     ap.add_argument("--fixture", type=int, default=0, help="generate N-base fixture corpus instead")
     ap.add_argument("--workdir", required=True, help="checkpoint/catalog directory")
     ap.add_argument("--cpus", type=int, default=0, help="local[N] cores (0 = spark default)")
@@ -38,7 +42,12 @@ def main() -> None:
     args = ap.parse_args()
 
     from sylph_spark.config import SketchConfig
-    from sylph_spark.pipeline import STAGES, DedupPipeline, images_df_from_pandas
+    from sylph_spark.pipeline import (
+        STAGES,
+        DedupPipeline,
+        images_df_from_pandas,
+        read_images,
+    )
     from sylph_spark.session import build_spark
 
     cfg = SketchConfig(**json.loads(args.config)) if args.config else SketchConfig()
@@ -51,7 +60,7 @@ def main() -> None:
         pdf, _ = fixtures.generate_corpus(n_base=args.fixture, seed=cfg.seed)
         images = images_df_from_pandas(spark, pdf)
     elif args.images:
-        images = spark.read.parquet(args.images)
+        images = read_images(spark, args.images)
     else:
         ap.error("one of --images / --fixture is required")
 

@@ -11,15 +11,15 @@ Layout:
 - ``config``     SketchConfig — shingle/signature/band parameters
 - ``udfs``       Arrow-vectorized pandas UDF wrappers of the kernels
 - ``pipeline``   the Spark stages: sketch → counts → LSH → score → verify →
-                 cluster → report
+                 cluster → survivors; ``read_images`` loads, checks and
+                 format-routes the input table
 - ``cc``         connected components (driver-side or distributed)
 - ``session``    SparkSession factory (one fixed table of settings);
                  ``daemon`` preloads imports into the Python worker daemon
 - ``io.catalog`` checkpointed table catalog (Parquet + manifest/snapshot
-                 metadata); ``io.report`` TSV report sink
-- ``sources``    schema-enforced images source
-- ``streaming``  Structured Streaming incremental sketching
-- ``operators``  reusable Spark operator library (dedup, similarity, text)
+                 metadata)
+- ``operators``  the DataFrame operators entry queries call (dedup-gated
+                 counts, image features, running-state thinning)
 """
 
 __version__ = "0.1.0"

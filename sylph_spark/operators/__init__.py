@@ -1,10 +1,3 @@
-from .dedup import (  # noqa: F401
-    dedup_gated_counts,
-    exact_dedup,
-    minhash_band_keys,
-    minhash_lsh_pairs,
-    ngram_jaccard_pairs,
-)
-from .similarity import cosine_knn, cosine_nn_blocked  # noqa: F401
-from .text import language_id, quality_features, text_fingerprint  # noqa: F401
+from .dedup import dedup_gated_counts  # noqa: F401
+from .multimodal import decode_any, image_features  # noqa: F401
 from .windowed import min_spacing_thin  # noqa: F401

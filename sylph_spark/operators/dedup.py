@@ -1,27 +1,10 @@
-"""Generic text-deduplication operators over any DataFrame with an id and a
-text column — the training-data-pipeline counterparts of the image pipeline
-(exact hash dedup, n-gram Jaccard, MinHash/LSH). All JVM-side (explode +
-joins + aggregates); no Python UDFs.
-
-These are the DataFrame-API versions of the SQL in ``__spark_entry__``
-(dd_exact_dedup / dd_ngram_jaccard / dd_minhash_sig), exposed as a library.
-"""
+"""Dedup-gated counting over any DataFrame with a key and a fingerprint
+column. All JVM-side; no Python UDFs."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(fp, rep_id, n_copies): one representative per exact-content group."""
-    return (
-        df.groupBy(F.md5(F.col(text_col)).alias("fp"))
-        .agg(
-            F.min(id_col).alias("rep_id"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
-    )
 
 
 def dedup_gated_counts(df: DataFrame, key_col: str, fingerprint_col: str) -> DataFrame:
@@ -33,127 +16,4 @@ def dedup_gated_counts(df: DataFrame, key_col: str, fingerprint_col: str) -> Dat
     return (
         df.groupBy(key_col)
         .agg(F.countDistinct(fingerprint_col).alias("dedup_cnt"))
-    )
-
-
-def _char_shingles(df: DataFrame, id_col: str, text_col: str, k: int, prefix: int):
-    s = F.lower(F.substring(F.col(text_col), 1, prefix))
-    return (
-        df.select(F.col(id_col).alias("doc_id"), s.alias("s"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.lit(1), F.greatest(F.length("s") - (k - 1), F.lit(1)))
-            ).alias("pos"),
-            "s",
-        )
-        .select("doc_id", F.expr(f"substr(s, pos, {k})").alias("g"))
-        .distinct()
-    )
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 8,
-    prefix: int = 160,
-    max_df: int = 100,
-    min_jaccard: float = 0.2,
-) -> DataFrame:
-    """Near-dup pairs by character k-gram Jaccard, with stop-shingle removal
-    (df > max_df) to keep the shingle self-join linear."""
-    sh = _char_shingles(df, id_col, text_col, k, prefix)
-    rare = sh.groupBy("g").agg(F.count(F.lit(1)).alias("df")).filter(
-        F.col("df") <= max_df
-    )
-    shr = sh.join(rare.select("g"), "g")
-    sizes = shr.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = shr.select(F.col("doc_id").alias("id_a"), "g")
-    b = shr.select(F.col("doc_id").alias("id_b"), "g")
-    inter = (
-        a.join(b, "g")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    return (
-        inter.join(sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na")), "id_a")
-        .join(sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("nb")), "id_b")
-        .withColumn("jaccard", F.col("i") / (F.col("na") + F.col("nb") - F.col("i")))
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def minhash_band_keys(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 8,
-    prefix: int = 160,
-    num_bands: int = 8,
-    rows_per_band: int = 2,
-) -> DataFrame:
-    """(doc_id, band, key): per-document LSH band keys from a banded MinHash
-    signature of ``num_bands × rows_per_band`` slots. All JVM-side.
-
-    One md5 per distinct (doc, shingle) row; the slot hashes derive from
-    the digest's two leading 32-bit halves via Kirsch-Mitzenmacher double
-    hashing g_i = (h1 + i·h2) mod 2^32 — B·R independent-enough hash
-    functions at the cost of ONE digest (the r3-measured hash bottleneck).
-    Each signature slot is the min of g_i over the document's shingles;
-    band j's key concatenates slots j·R .. j·R+R−1."""
-    b, r = num_bands, rows_per_band
-    sh = _char_shingles(df, id_col, text_col, k, prefix)
-    fp = F.md5(F.col("g"))
-    h1 = F.conv(F.substring(fp, 1, 8), 16, 10).cast("long")
-    h2 = F.conv(F.substring(fp, 9, 8), 16, 10).cast("long")
-    hashed = sh.select("doc_id", h1.alias("h1"), h2.alias("h2"))
-    m = F.lit(4294967296)
-    aggs = [
-        F.min((F.col("h1") + F.lit(i) * F.col("h2")) % m).alias(f"s{i}")
-        for i in range(b * r)
-    ]
-    sig = hashed.groupBy("doc_id").agg(*aggs)
-    keys = [
-        F.concat_ws(
-            "_", *[F.col(f"s{j * r + i}").cast("string") for i in range(r)]
-        ).alias(f"band{j}")
-        for j in range(b)
-    ]
-    wide = sig.select("doc_id", *keys)
-    # unpivot to tall (doc_id, band, key) — stack is a projection, no shuffle
-    stack = ", ".join(f"{j}, band{j}" for j in range(b))
-    return wide.selectExpr(
-        "doc_id", f"stack({b}, {stack}) AS (band, key)"
-    )
-
-
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 8,
-    prefix: int = 160,
-    num_bands: int = 8,
-    rows_per_band: int = 2,
-) -> DataFrame:
-    """Candidate near-dup pairs by banded MinHash LSH with OR-semantics
-    across bands: a pair is a candidate iff its signatures agree on ALL
-    ``rows_per_band`` slots of AT LEAST ONE band — detection probability
-    1−(1−J^R)^B, the S-curve (≈0.995 at J=0.7 under the 8×2 default,
-    where the old single 4-row band caught J^4 ≈ 24%). The bucket
-    self-join is keyed (band, key), so volume stays linear in bucket
-    sizes — same scale shape as the image pipeline's candidates stage."""
-    tall = minhash_band_keys(
-        df, id_col, text_col, k, prefix, num_bands, rows_per_band
-    )
-    a = tall.select(F.col("doc_id").alias("id_a"), "band", "key")
-    b = tall.select(F.col("doc_id").alias("id_b"), "band", "key")
-    return (
-        a.join(b, ["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
     )

@@ -1,12 +1,10 @@
-"""Multimodal column operators: decode / feature-extract / resize /
-frame-sample over opaque binary columns with typed metadata.
+"""Multimodal column operators: decode and feature-extract over opaque
+binary image columns with typed metadata.
 
-The Spark-side plumbing (schemas, Arrow batching, partitioning) is real and
-tested; payload decoding uses the self-contained codecs for the formats this
-repo defines, and STUBS (clearly marked) for external codec libraries
-(PIL/cv2/ffmpeg are not in this container). The stub boundary is
-``_decode_external`` — swap in a real decoder there and everything else
-works unchanged.
+Decoding uses the self-contained codecs for the formats this repo defines
+(``codecs.ALL_FMTS``); any other format raises ``NotImplementedError`` in
+``decode_any``, and ``image_features`` flags such rows instead of dropping
+them.
 """
 
 from __future__ import annotations
@@ -25,35 +23,14 @@ IMAGE_FEATURES_SCHEMA = (
     "phash long, decode_ok boolean"
 )
 
-FRAME_SAMPLE_SCHEMA = (
-    "media_id string, frame_idx int, frame_bytes binary, w int, h int"
-)
-
-
-def _decode_external(data: bytes, fmt: str) -> np.ndarray:
-    """STUB: external-codec decode (jpeg/png/webp/...). This container has no
-    image libraries; deployments plug PIL/cv2/turbojpeg in here."""
-    try:
-        import PIL.Image  # noqa: F401
-    except ImportError:
-        raise NotImplementedError(
-            f"external codec for fmt={fmt!r} requires PIL/cv2 (not installed); "
-            "formats handled natively: " + ", ".join(sorted(codecs.ALL_FMTS))
-        )
-    raise NotImplementedError("PIL path not wired in this environment")
-
 
 def decode_any(data: bytes, fmt: str) -> np.ndarray:
-    if fmt in codecs.ALL_FMTS:
-        return codecs.decode_image(data, fmt)
-    return _decode_external(data, fmt)
-
-
-def resize_nearest(img: np.ndarray, w: int, h: int) -> np.ndarray:
-    """Deterministic nearest-neighbor resize (pure numpy)."""
-    ys = (np.arange(h) * img.shape[0] // h).astype(np.int64)
-    xs = (np.arange(w) * img.shape[1] // w).astype(np.int64)
-    return img[ys][:, xs]
+    if fmt not in codecs.ALL_FMTS:
+        raise NotImplementedError(
+            f"no codec for fmt={fmt!r}; formats handled natively: "
+            + ", ".join(sorted(codecs.ALL_FMTS))
+        )
+    return codecs.decode_image(data, fmt)
 
 
 def image_features(images: DataFrame) -> DataFrame:
@@ -109,53 +86,3 @@ def image_features(images: DataFrame) -> DataFrame:
         fn, schema=IMAGE_FEATURES_SCHEMA
     )
 
-
-def frame_sample(media: DataFrame, every_n: int = 10, max_frames: int = 8) -> DataFrame:
-    """Video frame sampling plumbing. The container format this repo defines
-    for tests is ``rawvid``: a concatenation of qpng-encoded frames with a
-    4-byte big-endian length prefix each — real demux, real sampling. Other
-    containers (mp4 etc.) hit the external-codec stub."""
-    import struct
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            get = lambda name: batch.column(batch.schema.get_field_index(name))
-            ids = get("media_id").to_pylist()
-            blobs = get("bytes").to_pylist()
-            fmts = get("fmt").to_pylist()
-            out_id, out_idx, out_b, out_w, out_h = [], [], [], [], []
-            for mid, blob, fmt in zip(ids, blobs, fmts):
-                if fmt != "rawvid":
-                    raise NotImplementedError(
-                        f"container {fmt!r} needs ffmpeg (not installed)"
-                    )
-                pos = 0
-                frame_idx = 0
-                emitted = 0
-                while pos + 4 <= len(blob) and emitted < max_frames:
-                    (ln,) = struct.unpack_from(">I", blob, pos)
-                    frame = blob[pos + 4 : pos + 4 + ln]
-                    pos += 4 + ln
-                    if frame_idx % every_n == 0:
-                        img = codecs.decode_qpng(frame)
-                        out_id.append(mid)
-                        out_idx.append(frame_idx)
-                        out_b.append(frame)
-                        out_h.append(img.shape[0])
-                        out_w.append(img.shape[1])
-                        emitted += 1
-                    frame_idx += 1
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_id, pa.string()),
-                    pa.array(np.array(out_idx, np.int32)),
-                    pa.array(out_b, pa.binary()),
-                    pa.array(np.array(out_w, np.int32)),
-                    pa.array(np.array(out_h, np.int32)),
-                ],
-                names=["media_id", "frame_idx", "frame_bytes", "w", "h"],
-            )
-
-    return media.select("media_id", "bytes", "fmt").mapInArrow(
-        fn, schema=FRAME_SAMPLE_SCHEMA
-    )

@@ -67,7 +67,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import udfs
+from . import codecs, udfs
 from .cc import connected_components, pair_cluster_labels
 from .config import SketchConfig
 from .io.catalog import StageCatalog
@@ -730,16 +730,46 @@ def run_volatile(
     return DedupStages(spark, cfg).run_graph(images, Volatile(), stage_times)
 
 
+IMAGES_SCHEMA = T.StructType(
+    [
+        T.StructField("image_id", T.StringType(), False),
+        T.StructField("bytes", T.BinaryType(), False),
+        T.StructField("w", T.IntegerType(), False),
+        T.StructField("h", T.IntegerType(), False),
+        T.StructField("fmt", T.StringType(), False),
+        T.StructField("caption", T.StringType(), False),
+        T.StructField("phash", T.LongType(), False),
+    ]
+)
+
+
 def images_df_from_pandas(spark: SparkSession, images: pd.DataFrame) -> DataFrame:
-    schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType(), False),
-            T.StructField("bytes", T.BinaryType(), False),
-            T.StructField("w", T.IntegerType(), False),
-            T.StructField("h", T.IntegerType(), False),
-            T.StructField("fmt", T.StringType(), False),
-            T.StructField("caption", T.StringType(), False),
-            T.StructField("phash", T.LongType(), False),
-        ]
-    )
-    return spark.createDataFrame(images, schema=schema)
+    return spark.createDataFrame(images, schema=IMAGES_SCHEMA)
+
+
+def validate_images_schema(df: DataFrame) -> None:
+    """Raise ``ValueError`` naming every ``IMAGES_SCHEMA`` column that is
+    missing from ``df`` or has another type. Extra columns are allowed."""
+    actual = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    missing = [f.name for f in IMAGES_SCHEMA.fields if f.name not in actual]
+    if missing:
+        raise ValueError(f"images table missing columns: {missing}")
+    for f in IMAGES_SCHEMA.fields:
+        want = f.dataType.simpleString()
+        if actual[f.name] != want:
+            raise ValueError(
+                f"images.{f.name}: expected {want}, got {actual[f.name]}"
+            )
+
+
+def read_images(spark: SparkSession, path_or_table: str) -> DataFrame:
+    """Load the images table from a parquet path (or a catalog table name
+    if it contains no '/'), check it against ``IMAGES_SCHEMA`` and route out
+    the rows whose format has no native codec, so they never reach the sketch
+    stage (the extension-dispatch analog, sketch.rs:95-121)."""
+    if "/" in path_or_table:
+        df = spark.read.parquet(path_or_table)
+    else:
+        df = spark.read.table(path_or_table)
+    validate_images_schema(df)
+    return df.filter(F.col("fmt").isin(*sorted(codecs.ALL_FMTS)))

@@ -2,13 +2,10 @@
 key consistency, and a DuckDB spot-check of representative queries at
 sf0.001 (the full sf0.01 sweep lives in scripts/check_entry.py)."""
 
-import sys
-
 import duckdb
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
 import __spark_entry__ as E
 
 SF = "/root/testdata/sf0.001"

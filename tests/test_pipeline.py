@@ -533,3 +533,79 @@ def test_distributed_cc_pipeline_parity(spark, corpus, monkeypatch):
     monkeypatch.setenv("SYLPH_CC_DRIVER_THRESHOLD", "0")
     dist = stages(run_volatile(spark, df, cfg))
     assert dist == base
+
+
+def test_banding_join_path_parity(spark, corpus, volatile_result):
+    """A vocabulary above ``broadcast_rare_max`` bands through the explode /
+    join / ``make_band_fn`` path instead of the broadcast multi-family UDF.
+    Forcing that path (cap 0) must give the same candidate set, cluster
+    labels and survivors as the default broadcast path. The fixture's
+    duplicates are near-identical, so any banding finds them: the two band
+    UDFs are also compared row for row on its sketches."""
+    from dataclasses import replace
+    from types import SimpleNamespace
+
+    from sylph_spark import udfs
+    from sylph_spark.pipeline import run_volatile
+
+    images, _ = corpus
+    cfg = replace(SketchConfig(), broadcast_rare_max=0)
+    joined = run_volatile(spark, images_df_from_pandas(spark, images), cfg)
+    broadcast, _ = volatile_result
+    assert broadcast["candidates"].count() > 0
+    for stage in ("candidates", "clusters", "survivors"):
+        assert _canon(joined[stage]) == _canon(broadcast[stage]), stage
+
+    sk = broadcast["sketches"].toArrow()
+    vocab = np.unique(sk.column("shingles").combine_chunks().flatten().to_numpy())
+
+    def band_rows(fn, table):
+        return {
+            tuple(r.values())
+            for b in fn(iter(table.to_batches()))
+            for r in b.to_pylist()
+        }
+
+    fb, fr = cfg.family_bands, cfg.family_rows
+    families = (
+        ("shingles", 0, cfg.num_bands, cfg.rows_per_band),
+        ("img_shingles", cfg.num_bands, fb, fr),
+        ("cap_shingles", cfg.num_bands + fb, fb, fr),
+    )
+    per_family = set()
+    for col, offset, nb, rpb in families:
+        tbl = sk.select(["image_id", col]).rename_columns(["image_id", "shingles"])
+        per_family |= band_rows(udfs.make_band_fn(cfg, offset, nb, rpb), tbl)
+    multi = udfs.make_multi_band_fn(cfg, SimpleNamespace(value=vocab))
+    assert band_rows(multi, sk) == per_family
+
+
+def test_read_images_validates_and_routes(spark, corpus, tmp_path):
+    """The images reader checks the table against ``IMAGES_SCHEMA`` as
+    stored (a missing or mistyped column raises a ValueError naming it) and
+    routes out rows with no native codec before they reach the sketch
+    stage."""
+    from sylph_spark.pipeline import IMAGES_SCHEMA, read_images
+
+    images, _ = corpus
+    native = images_df_from_pandas(spark, images.iloc[:12])
+    jpeg = spark.createDataFrame(
+        [("img_jpeg", b"\xff\xd8\xff", 8, 8, "jpeg", "a caption", 0)],
+        IMAGES_SCHEMA,
+    )
+    path = str(tmp_path / "images")
+    native.unionByName(jpeg).write.parquet(path)
+    routed = read_images(spark, path)
+    assert sorted(r["image_id"] for r in routed.collect()) == sorted(
+        images.iloc[:12]["image_id"]
+    )
+
+    no_phash = str(tmp_path / "no_phash")
+    native.drop("phash").write.parquet(no_phash)
+    with pytest.raises(ValueError, match="phash"):
+        read_images(spark, no_phash)
+
+    wide_w = str(tmp_path / "wide_w")
+    native.withColumn("w", F.col("w").cast("long")).write.parquet(wide_w)
+    with pytest.raises(ValueError, match=r"images\.w"):
+        read_images(spark, wide_w)

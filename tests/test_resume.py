@@ -15,12 +15,15 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _run(workdir: str, timeout_kill: float | None = None):
+def _run(
+    workdir: str,
+    timeout_kill: float | None = None,
+    source: tuple[str, ...] = ("--fixture", "80"),
+):
     cmd = [
         sys.executable,
         os.path.join(REPO, "scripts", "run_pipeline.py"),
-        "--fixture",
-        "80",
+        *source,
         "--workdir",
         workdir,
         "--cpus",
@@ -53,3 +56,41 @@ class TestKillResume:
         assert resumed["survivors"] == fresh["survivors"]
         assert resumed["stages"] == fresh["stages"]
         assert resumed["config_hash"] == fresh["config_hash"]
+
+
+def test_cli_images_routes_unknown_formats(tmp_path):
+    """``--images`` on a parquet table holding one row in a format with no
+    native codec: the run completes on the native rows instead of failing
+    in the sketch stage."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sylph_spark import fixtures
+
+    images, _ = fixtures.generate_corpus(n_base=8, seed=42)
+    jpeg = {
+        "image_id": "img_jpeg",
+        "bytes": b"\xff\xd8\xff",
+        "w": 8,
+        "h": 8,
+        "fmt": "jpeg",
+        "caption": "a caption",
+        "phash": 0,
+    }
+    rows = {col: images[col].tolist() + [jpeg[col]] for col in jpeg}
+    schema = pa.schema(
+        [
+            ("image_id", pa.string()),
+            ("bytes", pa.binary()),
+            ("w", pa.int32()),
+            ("h", pa.int32()),
+            ("fmt", pa.string()),
+            ("caption", pa.string()),
+            ("phash", pa.int64()),
+        ]
+    )
+    src = tmp_path / "images"
+    src.mkdir()
+    pq.write_table(pa.table(rows, schema=schema), str(src / "part-0.parquet"))
+    out = _run(str(tmp_path / "run"), source=("--images", str(src)))
+    assert out["images_in"] == len(images)
