@@ -589,7 +589,7 @@ def _q_a8_tail_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT l_returnflag AS grp, CAST(l_quantity AS INT) AS cov FROM lineitem"
     )
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         stats = K.coverage_stats(pdf["cov"].to_numpy(), total_kmers=len(pdf))
         max_cov = stats["max_cov"]
         return pd.DataFrame(
@@ -629,7 +629,7 @@ def _q_e9_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT l_returnflag AS grp, CAST(l_quantity AS INT) % 4 AS cov FROM lineitem"
     )
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         lo, hi, llo, lhi = K.bootstrap_interval(pdf["cov"].to_numpy(), k=7.0)
         return pd.DataFrame(
             [
@@ -762,7 +762,7 @@ def _q_e2_mle_zip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT l_returnflag AS grp, CAST(l_quantity AS INT) % 5 AS cov FROM lineitem"
     )
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         lam = K.mle_zip(pdf["cov"].to_numpy(), k=7.0)
         return pd.DataFrame(
             [{"grp": key[0], "mle_lambda": lam if lam is not None else float("nan")}]
@@ -914,7 +914,7 @@ def _q_e4_nb_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT l_returnflag AS grp, CAST(l_quantity AS INT) % 6 AS cov FROM lineitem"
     )
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         lam = K.binary_search_lambda(pdf["cov"].to_numpy())
         return pd.DataFrame(
             [{"grp": key[0], "nb_lambda": lam if lam is not None else float("nan")}]

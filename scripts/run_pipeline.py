@@ -32,7 +32,7 @@ def main() -> None:
     ap.add_argument(
         "--images",
         help="images table: parquet path, or catalog table name (no '/'); "
-        "rows in formats with no native codec are left out",
+        "rows in formats with no native codec are left out (counted as images_routed_out)",
     )
     ap.add_argument("--fixture", type=int, default=0, help="generate N-base fixture corpus instead")
     ap.add_argument("--workdir", required=True, help="checkpoint/catalog directory")
@@ -54,6 +54,7 @@ def main() -> None:
     master = f"local[{args.cpus}]" if args.cpus else None
     spark = build_spark("sylph_dedup", master=master)
 
+    routed_out = 0
     if args.fixture:
         from sylph_spark import fixtures
 
@@ -61,6 +62,7 @@ def main() -> None:
         images = images_df_from_pandas(spark, pdf)
     elif args.images:
         images = read_images(spark, args.images)
+        routed_out = read_images(spark, args.images, native_only=False).count() - images.count()
     else:
         ap.error("one of --images / --fixture is required")
 
@@ -74,6 +76,7 @@ def main() -> None:
         json.dumps(
             {
                 "images_in": n_in,
+                "images_routed_out": routed_out,
                 "survivors": n_out,
                 "removed": n_in - n_out,
                 "wall_sec": round(dt, 2),

@@ -16,6 +16,7 @@ Layout:
 - ``cc``         connected components (driver-side or distributed)
 - ``session``    SparkSession factory (one fixed table of settings);
                  ``daemon`` preloads imports into the Python worker daemon
+                 and cuts the fixed cost of each Python task
 - ``io.catalog`` checkpointed table catalog (Parquet + manifest/snapshot
                  metadata)
 - ``operators``  the DataFrame operators entry queries call (dedup-gated

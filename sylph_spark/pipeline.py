@@ -762,14 +762,15 @@ def validate_images_schema(df: DataFrame) -> None:
             )
 
 
-def read_images(spark: SparkSession, path_or_table: str) -> DataFrame:
+def read_images(spark: SparkSession, path_or_table: str, native_only: bool = True) -> DataFrame:
     """Load the images table from a parquet path (or a catalog table name
     if it contains no '/'), check it against ``IMAGES_SCHEMA`` and route out
     the rows whose format has no native codec, so they never reach the sketch
-    stage (the extension-dispatch analog, sketch.rs:95-121)."""
+    stage (the extension-dispatch analog, sketch.rs:95-121). ``native_only=False``
+    keeps every row, for counting what the routing leaves out."""
     if "/" in path_or_table:
         df = spark.read.parquet(path_or_table)
     else:
         df = spark.read.table(path_or_table)
     validate_images_schema(df)
-    return df.filter(F.col("fmt").isin(*sorted(codecs.ALL_FMTS)))
+    return df.filter(F.col("fmt").isin(*sorted(codecs.ALL_FMTS))) if native_only else df

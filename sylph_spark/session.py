@@ -26,13 +26,18 @@ SETTINGS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    # Python workers are forked from the daemon process, so modules imported
-    # by the daemon are inherited by every worker for free (guide §4.5
-    # "heavyweight init once", applied to imports: numpy+pandas+pyarrow cost
-    # ~1.5 s per cold worker, paid once per core in the first Python stage
-    # of a fresh session without this). sylph_spark.daemon preloads them and
-    # then defers to the stock pyspark daemon loop; the repo root goes on the
-    # workers' path so the daemon module resolves.
+    # Python workers are forked from the daemon process, so what the daemon
+    # holds at fork time is inherited by every worker for free.
+    # sylph_spark.daemon puts three things there, then defers to the stock
+    # pyspark daemon loop: the heavy imports (numpy+pandas+pyarrow cost
+    # ~1.5 s per cold worker, guide §4.5 "heavyweight init once"), and a cut
+    # of the two fixed costs every Python task pays: on Python < 3.12 a
+    # stat-checked zip directory re-read (each task's invalidate_caches
+    # re-parsed pyspark.zip, py4j and the spark-core jar, 130-240 ms per
+    # task on a 4-core VM; now ~0.2 ms), and a frozen preloaded heap (a
+    # reused worker's gc.collect after each task walked the ~88k inherited
+    # objects, 37-80 ms; now ~0.3 ms). The repo root goes on the workers'
+    # path so the daemon module resolves.
     "spark.python.daemon.module": "sylph_spark.daemon",
     "spark.executorEnv.PYTHONPATH": os.path.dirname(
         os.path.dirname(os.path.abspath(__file__))

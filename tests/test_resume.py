@@ -94,3 +94,4 @@ def test_cli_images_routes_unknown_formats(tmp_path):
     pq.write_table(pa.table(rows, schema=schema), str(src / "part-0.parquet"))
     out = _run(str(tmp_path / "run"), source=("--images", str(src)))
     assert out["images_in"] == len(images)
+    assert out["images_routed_out"] == 1

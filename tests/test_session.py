@@ -1,5 +1,7 @@
 """Session layer: the fixed settings table, the scoped heavy-payload batch
-sizes, and a spark-submit launch that keeps its own master."""
+sizes, a spark-submit launch that keeps its own master, and the worker
+daemon's per-task fixed cost (zip directories re-read only on change, a
+frozen preloaded heap)."""
 
 import json
 import os
@@ -7,6 +9,7 @@ import subprocess
 import sys
 import textwrap
 
+import pytest
 from pyspark.find_spark_home import _find_spark_home
 
 from sylph_spark.session import heavy_payload_batches
@@ -90,4 +93,93 @@ def test_spark_submit_keeps_master_and_environment(tmp_path):
         "master": "local[2]",
         "pythonpath_unchanged": True,
         "modules": ["sylph_spark.kernels"] * 2,
+    }
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 12), reason="zip directories are lazy on 3.12+")
+def test_worker_invalidate_caches_rereads_no_unchanged_zip(spark):
+    """A task's ``importlib.invalidate_caches()`` (pyspark runs one per task)
+    re-reads none of the unchanged zips on the worker's path, and the worker
+    inherits the daemon's frozen heap."""
+
+    def zip_rereads(batches):
+        import gc
+        import importlib
+        import zipimport
+
+        import pyarrow as pa
+
+        cache = zipimport._zip_directory_cache
+        zips = [i for i in sys.path_importer_cache.values() if isinstance(i, zipimport.zipimporter)]
+        before = {i.archive: cache.get(i.archive) for i in zips}
+        importlib.invalidate_caches()
+        reread = sorted(a for a, files in before.items() if cache.get(a) is not files)
+        for b in batches:
+            n = b.num_rows
+            yield pa.RecordBatch.from_pydict(
+                {"zips": [len(zips)] * n, "reread": [json.dumps(reread)] * n,
+                 "frozen": [gc.get_freeze_count()] * n}
+            )
+
+    rows = spark.range(0, 4, 1, 4).mapInArrow(
+        zip_rereads, "zips long, reread string, frozen long"
+    ).collect()
+    assert len(rows) == 4
+    for r in rows:
+        assert r.zips > 0  # pyspark.zip and py4j are always on the path
+        assert json.loads(r.reread) == []
+        assert r.frozen > 0
+
+
+ZIP_PROBE = textwrap.dedent(
+    """
+    import importlib, json, os, sys, zipfile, zipimport
+    sys.path.insert(0, {repo!r})
+    import sylph_spark.daemon  # noqa: F401
+
+    changed, unchanged = sys.argv[1:3]
+
+
+    def write(path, module, text, ns):
+        with zipfile.ZipFile(path, "w") as z:
+            z.writestr(module + ".py", text)
+        os.utime(path, ns=(ns, ns))
+
+
+    write(changed, "probe_changed", "VALUE = 1\\n", 10**18)
+    write(unchanged, "probe_unchanged", "VALUE = 1\\n", 10**18)
+    sys.path[:0] = [changed, unchanged]
+    import probe_changed, probe_unchanged  # noqa: E401
+
+    importlib.invalidate_caches()  # the first call stamps both importers
+    kept = zipimport._zip_directory_cache[unchanged]
+    write(changed, "probe_changed", "VALUE = 'rewritten'\\n", 2 * 10**18)
+    importlib.invalidate_caches()
+    del sys.modules["probe_changed"]
+    import probe_changed
+
+    print("PROBE " + json.dumps({{
+        "changed_value": probe_changed.VALUE,
+        "unchanged_kept": zipimport._zip_directory_cache[unchanged] is kept,
+    }}))
+    """
+)
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 12), reason="nothing is patched on 3.12+")
+def test_daemon_rereads_only_changed_zip(tmp_path):
+    """With ``sylph_spark.daemon`` imported, a zip on ``sys.path`` rewritten
+    with new module text is re-read (the new text imports) while an
+    unchanged zip keeps the directory it read before."""
+    script = tmp_path / "probe.py"
+    script.write_text(ZIP_PROBE.format(repo=REPO))
+    proc = subprocess.run(
+        [sys.executable, str(script), str(tmp_path / "a.zip"), str(tmp_path / "b.zip")],
+        capture_output=True, text=True, timeout=300, cwd=tmp_path,
+    )
+    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("PROBE ")]
+    assert proc.returncode == 0 and lines, proc.stderr[-3000:]
+    assert json.loads(lines[-1][len("PROBE "):]) == {
+        "changed_value": "rewritten",
+        "unchanged_kept": True,
     }
