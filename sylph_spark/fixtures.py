@@ -189,6 +189,53 @@ def generate_corpus(
     return images, dup_pairs_truth
 
 
+def generate_mid_jaccard_corpus(
+    n_pairs: int = 40, seed: int = 5
+) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """Planted partial duplicates: ``n_pairs`` (base, variant) pairs whose
+    shingle sets share about 30-70%, the middle of the LSH S-curve, where a
+    change to the banding parameters or the stop-shingle masking changes
+    which pairs become candidates (near-identical duplicates collide under
+    any banding). A variant redraws the bottom 1-3 of the image's 8
+    low-resolution rows and a tenth of its caption words per redrawn row
+    (at seed 5 the pairs' Jaccard spans 0.30-0.80, most in 0.3-0.7). Every
+    caption ends in the same boilerplate phrase, so its shingles have a
+    document frequency above the banding stop-shingle limit.
+
+    Returns (images, planted_pairs) with planted_pairs (id_a, id_b) sorted."""
+    rng = np.random.default_rng(seed)
+    rows, planted = [], []
+    boiler = "archive photo collection scanned plate"
+
+    def add(img: np.ndarray, words: list[str]) -> str:
+        iid = f"mid{len(rows):05d}"
+        rows.append(
+            {
+                "image_id": iid,
+                "bytes": codecs.encode_image(img, "ppm"),
+                "w": img.shape[1],
+                "h": img.shape[0],
+                "fmt": "ppm",
+                "caption": " ".join(words + [boiler]),
+                "phash": codecs.average_phash(codecs.to_gray(img)),
+            }
+        )
+        return iid
+
+    for p in range(n_pairs):
+        img = _make_image(rng, 64)
+        words = _make_caption(rng).split()
+        redraw = 1 + p % 3
+        var = img.copy()
+        var[64 - 8 * redraw :] = _make_image(rng, 64)[64 - 8 * redraw :]
+        swap = rng.choice(len(words), size=len(words) * redraw // 10, replace=False)
+        var_words = list(words)
+        for i in swap:
+            var_words[i] = _ALT_WORDS[int(rng.integers(len(_ALT_WORDS)))]
+        planted.append((add(img, words), add(var, var_words)))
+    return pd.DataFrame(rows), pd.DataFrame(planted, columns=["id_a", "id_b"])
+
+
 def truth_clusters(dup_pairs_truth: pd.DataFrame) -> dict[str, set[str]]:
     """cluster_id → set of member image_ids (union-find over truth pairs)."""
     out: dict[str, set[str]] = {}

@@ -23,7 +23,9 @@ Stages:
   2. shingle_counts corpus-wide shingle multiplicities        (A1, sketch.rs:690-731)
   3. candidates     MinHash/LSH banding → candidate pairs     (replaces all-pairs contain.rs:266-292)
   4. pair_shingles  pair → intersecting shingles + corpus multiplicities (J1, contain.rs:632-652)
-  5. scored         corrected-containment scoring             (E1/E6/E7, contain.rs:601-745)
+                    + first-pass corrected-containment scores (E1/E6/E7, contain.rs:601-745),
+                    one Arrow kernel per partition
+  5. scored         the score columns of pair_shingles        (a projection, no barrier)
   6. gated          tau + SimHash hamming + suffix-array LCS  (north-rule verification; cluster edges)
   7. rescored       per-cluster winner-table reassignment + derep, one cogrouped
                     Arrow kernel per bucket of clusters (contain.rs:410-459,637-645,353-375)
@@ -45,8 +47,9 @@ Scale design notes (for the 10^12-row cluster, tested at local[*]):
 - LSH buckets are pair-generated in CHUNKS keyed (band, hash, ci, cj) so a
   single hot bucket fans out across ~(size/chunk)² tasks instead of one —
   the salted-key skew mitigation required by the north rule;
-- shingle_counts is a map-side-combined hash aggregate, broadcast-joined
-  into scoring when small enough (Spark decides via AQE);
+- shingle_counts is a map-side-combined hash aggregate; its cnt ≥ 2
+  slice is broadcast into the pair_shingles kernel while the vocabulary is
+  under ``broadcast_rare_max``, and equi-joined above it;
 - every stage is a materialized columnar table: column pruning means later
   stages never reread ``bytes``.
 """
@@ -61,6 +64,7 @@ from dataclasses import dataclass
 from functools import partial
 from typing import NamedTuple
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -154,11 +158,12 @@ GRAPH = (
     # materialises inside its barrier
     Node(
         "pair_shingles",
-        ("candidates", "sketches", "shingle_counts"),
+        ("candidates", "sketches", "shingle_counts", "n_vocab"),
         "checkpoint",
         "cands+pair_shingles",
     ),
-    Node("scored", ("pair_shingles",), "checkpoint", "scored"),
+    # the first-pass scores are pair_shingles columns: scored selects them
+    Node("scored", ("pair_shingles",), "lazy"),
     Node("gated", ("scored", "sketches"), "checkpoint", "gated"),
     Node(
         "rescored",
@@ -255,8 +260,6 @@ class DedupStages:
             # column as a numpy-backed buffer (no Python-object loop);
             # |rare| <= n_vocab <= cap bounds the driver transfer, and the
             # sc.broadcast ships it once per executor (not once per task)
-            import numpy as np
-
             rare_arr = np.sort(rare.toArrow().column("shingle").to_numpy())
             rare_bc = self.spark.sparkContext.broadcast(rare_arr)
             bands = sketches.select(
@@ -354,78 +357,88 @@ class DedupStages:
             .distinct()
         )
 
-    def _pair_intersections(self, pairs: DataFrame, sketches: DataFrame) -> DataFrame:
-        """(id_a, id_b) → (id_a, id_b, total_kmers, inter) by joining the
-        pair table with the shingle ARRAYS (shuffles pairs, not pair×shingle
-        rows) and intersecting in-task with array_intersect — the probe-join
-        J1 (contain.rs:632-652) without a 10⁹-row exchange."""
+    def _stage_pair_shingles(
+        self,
+        candidates: DataFrame,
+        sketches: DataFrame,
+        counts: DataFrame,
+        n_vocab: int,
+    ) -> DataFrame:
+        """(id_a, id_b) → (id_a, id_b, total_kmers, inter_cnt) + the
+        first-pass score columns, where inter_cnt pairs every shingle the
+        two items share with its corpus multiplicity. Materialized ONCE and
+        consumed by both scoring passes; ``scored`` is a projection of it.
+
+        The pair table joins the two items' shingle ARRAYS (it shuffles
+        pairs, not pair × shingle rows: the probe-join J1, contain.rs:632-652,
+        without a 10⁹-row exchange). Every shared shingle occurs in both
+        pair members, so its corpus count is ≥ 2: only the cnt ≥ 2 slice of
+        the counts is ever looked up. When the vocabulary fits under
+        ``broadcast_rare_max`` (the cap and test that pick the banding path)
+        that slice is broadcast, and one mapInArrow kernel intersects the
+        arrays, applies the size prefilter, looks up the multiplicities and
+        scores every pair (udfs.make_pair_shingles_fn): no explode, no
+        regrouping aggregate and no second crossing into Python. Above the
+        cap the intersections explode and join the slice, are regrouped by
+        pair, and the same kernel only scores them."""
+        cfg = self.cfg
         prof = sketches.select("image_id", "n_shingles", "shingles")
-        return (
-            pairs.join(
-                prof.select(
-                    F.col("image_id").alias("id_a"),
-                    F.col("n_shingles").alias("n_a"),
-                    F.col("shingles").alias("sh_a"),
-                ),
-                "id_a",
+
+        def side(s: str) -> DataFrame:
+            return prof.select(
+                F.col("image_id").alias(f"id_{s}"),
+                F.col("n_shingles").alias(f"n_{s}"),
+                F.col("shingles").alias(f"sh_{s}"),
             )
-            .join(
-                prof.select(
-                    F.col("image_id").alias("id_b"),
-                    F.col("n_shingles").alias("n_b"),
-                    F.col("shingles").alias("sh_b"),
-                ),
-                "id_b",
-            )
-            .withColumn("total_kmers", F.least("n_a", "n_b"))
+
+        pairs = (
+            candidates.join(side("a"), "id_a")
+            .join(side("b"), "id_b")
             .select(
                 "id_a",
                 "id_b",
-                "total_kmers",
-                F.array_intersect("sh_a", "sh_b").alias("inter"),
+                F.least("n_a", "n_b").alias("total_kmers"),
+                "sh_a",
+                "sh_b",
             )
         )
-
-    def _stage_pair_shingles(
-        self, candidates: DataFrame, sketches: DataFrame, counts: DataFrame
-    ) -> DataFrame:
-        """(id_a, id_b) → (id_a, id_b, total_kmers, inter_cnt) where
-        inter_cnt pairs every intersecting shingle with its corpus
-        multiplicity. Materialized ONCE and consumed by BOTH scoring passes:
-        the round-2 plan re-derived the pair intersections in the rescore
-        stage (two extra sketch joins + an explode + a counts join that
-        _stage_scored had already paid)."""
-        cand = self._pair_intersections(candidates, sketches).filter(
-            # early prefilter on raw intersection size (min-ANI analog,
-            # contain.rs:746-764) before exploding anything
-            F.size("inter")
-            >= self.cfg.score_min_contain * F.col("total_kmers")
-        )
-        inter = cand.select(
-            "id_a", "id_b", "total_kmers", F.explode("inter").alias("shingle")
-        )
-        # every intersecting shingle occurs in BOTH pair members, so its
-        # corpus count is ≥ 2 by construction — joining against the cnt ≥ 2
-        # slice is lossless and shrinks the join's build side from the full
-        # vocabulary (dominated by df=1 singletons) to the shared tail,
-        # usually under the AQE broadcast threshold: the exploded pair-side
-        # then never shuffles by shingle at all
-        return (
-            inter.join(counts.filter(F.col("cnt") >= 2), "shingle")
-            .groupBy("id_a", "id_b", "total_kmers")
-            .agg(F.collect_list(F.struct("shingle", "cnt")).alias("inter_cnt"))
-        )
-
-    def _stage_scored(self, pair_shingles: DataFrame) -> DataFrame:
-        covs = pair_shingles.select(
+        shared = counts.filter(F.col("cnt") >= 2)
+        if n_vocab <= cfg.broadcast_rare_max:
+            tbl = shared.toArrow()
+            keys = tbl.column("shingle").to_numpy()
+            order = np.argsort(keys)
+            counts_bc = self.spark.sparkContext.broadcast(
+                (keys[order], tbl.column("cnt").to_numpy()[order])
+            )
+            return pairs.mapInArrow(
+                udfs.make_pair_shingles_fn(cfg, counts_bc),
+                schema=udfs.PAIR_SHINGLES_SCHEMA,
+            )
+        inter = pairs.select(
             "id_a",
             "id_b",
             "total_kmers",
-            F.expr("transform(inter_cnt, e -> e.cnt)").alias("covs"),
+            F.array_intersect("sh_a", "sh_b").alias("inter"),
+        ).filter(
+            # prefilter on raw intersection size (min-ANI analog,
+            # contain.rs:746-764) before exploding anything
+            F.size("inter") >= cfg.score_min_contain * F.col("total_kmers")
         )
-        return covs.mapInArrow(
-            udfs.make_score_arrow_fn(self.cfg), schema=udfs.SCORE_SCHEMA
+        return (
+            inter.select(
+                "id_a", "id_b", "total_kmers", F.explode("inter").alias("shingle")
+            )
+            .join(shared, "shingle")
+            .groupBy("id_a", "id_b", "total_kmers")
+            .agg(F.collect_list(F.struct("shingle", "cnt")).alias("inter_cnt"))
+            .mapInArrow(
+                udfs.make_pair_shingles_fn(cfg), schema=udfs.PAIR_SHINGLES_SCHEMA
+            )
         )
+
+    def _stage_scored(self, pair_shingles: DataFrame) -> DataFrame:
+        # the first-pass scores are computed with the intersections
+        return pair_shingles.select(*udfs.SCORE_PA_SCHEMA.names)
 
     def _stage_rescored(
         self,
@@ -484,7 +497,9 @@ class DedupStages:
         )
         n_buckets = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         bucket = F.pmod(F.xxhash64("pre_cluster"), F.lit(n_buckets))
-        pairs = pair_shingles.join(pair_lab, ["id_a", "id_b"]).select(
+        pairs = pair_shingles.select(
+            "id_a", "id_b", "total_kmers", "inter_cnt"
+        ).join(pair_lab, ["id_a", "id_b"]).select(
             bucket.alias("bucket"),
             "id_a",
             "id_b",
@@ -725,8 +740,8 @@ def run_volatile(
     ``stage_times``: optional dict filled with the wall seconds of each
     eager barrier (see ``GRAPH``) — the per-stage attribution behind the
     scaling-efficiency evidence (BENCH/BASELINE.md). Lazy stages
-    (candidates, verified, survivors) are fused by Catalyst into the next
-    barrier and show up there."""
+    (candidates, scored, verified, survivors) are fused by Catalyst into
+    the next barrier and show up there."""
     return DedupStages(spark, cfg).run_graph(images, Volatile(), stage_times)
 
 

@@ -42,26 +42,26 @@ SETTINGS = {
     "spark.executorEnv.PYTHONPATH": os.path.dirname(
         os.path.dirname(os.path.abspath(__file__))
     ),
-    # collect_list/collect_set aggregations (LSH buckets, pair-shingle
-    # regrouping, winner ownership) run as ObjectHashAggregate, which
-    # silently degrades to SORT-based aggregation once a task sees more
-    # than this many distinct keys (default 128!) — the bench-scale
-    # bucket aggregate has ~200k groups, so every task paid a full
-    # sort of its band rows. Keys here are small (two longs + a short
-    # string list), so a multi-million-entry hash map is still far
-    # cheaper than the sort it replaces.
+    # collect_list aggregations (the LSH buckets; above
+    # broadcast_rare_max also the join-path banding input and pair-shingle
+    # regrouping) run as ObjectHashAggregate, which silently degrades to
+    # SORT-based aggregation once a task sees more than this many distinct
+    # keys (default 128!) — the bench-scale bucket aggregate has ~200k
+    # groups, so every task paid a full sort of its band rows. Keys here
+    # are small (two longs + a short string list), so a multi-million-entry
+    # hash map is still far cheaper than the sort it replaces.
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "8388608",
-    # AQE coalescing is byte-based and blind to per-row CPU: the
-    # candidate-pair distinct emits ~1.5 MB of shuffle bytes at bench
-    # scale, so the default 1 MB floor coalesced it (and everything
-    # fused downstream — the sketch-array joins, array_intersect, the
-    # pair-shingle explode+collect_list, and the checkpoint that the
-    # scoring UDF later reads) into ONE task: a measured 6-8 s serial
-    # stage inside the pipeline's heaviest barrier (event-log audit,
-    # OPTIMIZATION_r06.md). A 64 KB floor keeps such small-byte /
-    # CPU-heavy exchanges parallel; at production scale shuffles are
-    # orders of magnitude past either floor, so the knob only affects
-    # exactly this regime (guide §2.2).
+    # AQE coalescing is byte-based and blind to per-row CPU. On the
+    # 32k-image bench corpus (OPTIMIZATION_r06.md) the candidate-pair
+    # distinct wrote ~1.5 MB of shuffle, and the default 1 MB floor
+    # coalesced it, with everything fused downstream of it, into ONE task:
+    # a measured 6-8 s serial stage inside the pipeline's heaviest
+    # barrier. With a 64 KB floor that exchange splits into partitions of
+    # ≥ 64 KB. On perfbench's families corpus (~1,500 images) the same
+    # distinct writes ~87 KB, and candidates, pair_shingles and gated each
+    # still run as one partition, so there the floor changes nothing. At
+    # production scale shuffles are orders of magnitude past either floor
+    # (guide §2.2).
     "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
     # Let the planner choose shuffled-hash over sort-merge when the
     # per-partition build side fits (guide §3.1/§9): the pipeline's

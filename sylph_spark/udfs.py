@@ -703,6 +703,149 @@ def _batch_scorer(cfg: SketchConfig, force_slow: bool = False):
     return run
 
 
+INTER_CNT_TYPE = pa.list_(
+    pa.struct([("shingle", pa.int64()), ("cnt", pa.int32())])
+)
+# the pair_shingles stage: the pair's shared shingles with their corpus
+# multiplicities (inter_cnt), then every first-pass score column, so the
+# scored stage is a projection of it
+PAIR_SHINGLES_PA_SCHEMA = pa.schema(
+    [SCORE_PA_SCHEMA.field(n) for n in ("id_a", "id_b", "total_kmers")]
+    + [pa.field("inter_cnt", INTER_CNT_TYPE)]
+    + [
+        f
+        for f in SCORE_PA_SCHEMA
+        if f.name not in ("id_a", "id_b", "total_kmers")
+    ]
+)
+PAIR_SHINGLES_SCHEMA = (
+    "id_a string, id_b string, total_kmers int, "
+    "inter_cnt array<struct<shingle:long,cnt:int>>, contain_count int, "
+    "naive_sim double, adj_sim double, adjust_status string, lambda double, "
+    "median_cov double, kmers_lost int, "
+    "ani_lo double, ani_hi double, lambda_lo double, lambda_hi double"
+)
+
+
+def _shared_shingles(
+    batch: pa.RecordBatch, keys: np.ndarray, cnts: np.ndarray, min_contain: float
+):
+    """One pass over pair rows (total_kmers, sh_a, sh_b): per row sh_a ∩
+    sh_b, the size prefilter on the raw |∩| (min-ANI analog,
+    contain.rs:746-764), and each shared shingle's corpus multiplicity by
+    ``searchsorted`` into ``keys`` (sorted; ``cnts`` aligned). A shared
+    shingle missing from ``keys`` counts toward |∩| but is dropped, as an
+    inner join with the counts would drop it. The shingle arrays are sets
+    (the sketch stage emits unique shingles).
+
+    Returns (pid, shingle, cnt) of the kept shared shingles, grouped by row
+    index ``pid`` in ascending order and in ``sh_a`` order within a row."""
+    n = batch.num_rows
+    fa, na = _list_col_numpy(batch, "sh_a")
+    fb, nb = _list_col_numpy(batch, "sh_b")
+    total = batch.column(batch.schema.get_field_index("total_kmers"))
+    total = total.to_numpy().astype(np.int64)
+    rows = np.arange(n, dtype=np.int64)
+    pid_a, pid_b = np.repeat(rows, na), np.repeat(rows, nb)
+
+    def lookup(vals):
+        pos = np.searchsorted(keys, vals)
+        hit = pos < keys.size
+        hit[hit] = keys[pos[hit]] == vals[hit]
+        return pos, hit
+
+    # code each shingle as an int: its position in keys, else keys.size +
+    # its rank among the batch's shingles that keys lacks; then (row, code)
+    # packs into one int64 and the per-row intersection is one searchsorted
+    pos_a, hit_a = lookup(fa)
+    pos_b, hit_b = lookup(fb)
+    miss = np.unique(np.concatenate([fa[~hit_a], fb[~hit_b]]))
+    code_a, code_b = pos_a.copy(), pos_b.copy()
+    code_a[~hit_a] = keys.size + np.searchsorted(miss, fa[~hit_a])
+    code_b[~hit_b] = keys.size + np.searchsorted(miss, fb[~hit_b])
+    m = int(keys.size + miss.size)
+    if n * m >= 1 << 62:
+        raise ValueError(f"{n} pairs × {m} shingle codes overflow int64 keys")
+    key_a = pid_a * m + code_a
+    key_b = np.sort(pid_b * m + code_b)
+    j = np.searchsorted(key_b, key_a)
+    shared = j < key_b.size
+    shared[shared] = key_b[j[shared]] == key_a[shared]
+    n_inter = np.bincount(pid_a[shared], minlength=n)
+    sel = shared & hit_a & (n_inter >= min_contain * total)[pid_a]
+    return pid_a[sel], fa[sel], cnts[pos_a[sel]]
+
+
+def _pair_shingles_batch(
+    batch: pa.RecordBatch, pid: np.ndarray, shingle: np.ndarray, cnt: np.ndarray, score
+) -> pa.RecordBatch:
+    """Rows of ``batch`` with at least one (pid, shingle, cnt) entry →
+    pair_shingles rows: ids, total_kmers, inter_cnt and the first-pass score
+    columns from ``score`` (every row has a nonempty coverage vector, so the
+    scorer keeps every row, in order)."""
+    idx = batch.schema.get_field_index
+    cc = np.bincount(pid, minlength=batch.num_rows)
+    live = cc > 0
+    offsets = np.zeros(int(live.sum()) + 1, dtype=np.int32)
+    np.cumsum(cc[live], out=offsets[1:])
+    offsets = pa.array(offsets)
+    cnt = pa.array(cnt, pa.int32())
+    keep = pa.array(live)
+    total = batch.column(idx("total_kmers")).filter(keep).cast(pa.int32())
+    scored = score(
+        pa.RecordBatch.from_arrays(
+            [
+                batch.column(idx("id_a")).filter(keep),
+                batch.column(idx("id_b")).filter(keep),
+                total,
+                pa.ListArray.from_arrays(offsets, cnt),
+            ],
+            names=["id_a", "id_b", "total_kmers", "covs"],
+        )
+    )
+    assert scored.num_rows == len(total)
+    inter_cnt = pa.ListArray.from_arrays(
+        offsets,
+        pa.StructArray.from_arrays(
+            [pa.array(shingle, pa.int64()), cnt], fields=list(INTER_CNT_TYPE.value_type)
+        ),
+    )
+    cols = {f.name: scored.column(i) for i, f in enumerate(SCORE_PA_SCHEMA)}
+    cols["inter_cnt"] = inter_cnt
+    return pa.RecordBatch.from_arrays(
+        [cols[f.name] for f in PAIR_SHINGLES_PA_SCHEMA], schema=PAIR_SHINGLES_PA_SCHEMA
+    )
+
+
+def make_pair_shingles_fn(cfg: SketchConfig, counts_bc=None):
+    """mapInArrow kernel of the pair_shingles stage → PAIR_SHINGLES_SCHEMA
+    rows: the J1 probe join (contain.rs:632-652) and the first-pass E-chain
+    scoring (contain.rs:601-745) in one crossing into Python.
+
+    With ``counts_bc`` (a SparkContext.broadcast of the (sorted shingles,
+    counts) of the cnt ≥ 2 slice of shingle_counts), the input rows are
+    (id_a, id_b, total_kmers, sh_a, sh_b) and the kernel intersects, applies
+    the ``score_min_contain`` prefilter and looks up the multiplicities on
+    flat numpy buffers (``_shared_shingles``). Without it the input rows
+    already carry ``inter_cnt`` (the join path) and are only scored."""
+    score = _batch_scorer(cfg)
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        if counts_bc is not None:
+            keys, cnts = counts_bc.value
+        for batch in batches:
+            if counts_bc is not None:
+                found = _shared_shingles(batch, keys, cnts, cfg.score_min_contain)
+            else:
+                inter = batch.column(batch.schema.get_field_index("inter_cnt"))
+                lens = inter.value_lengths().fill_null(0).to_numpy()
+                sh, cnt = (c.to_numpy() for c in inter.flatten().flatten())
+                found = (np.repeat(np.arange(batch.num_rows), lens), sh, cnt)
+            yield _pair_shingles_batch(batch, *found, score)
+
+    return fn
+
+
 def _rescore_bucket(
     pairs: pa.Table, items: pa.Table, limit: int, reass_frac: float
 ) -> pa.RecordBatch:
@@ -831,9 +974,10 @@ def make_lcs_fn(short_circuit: bool = True):
         eq = (av == bv).to_numpy() if short_circuit else np.zeros(len(av), bool)
         out[eq] = av[eq].str.len().to_numpy(dtype=np.int64)
         ne = np.flatnonzero(~eq)
-        out.iloc[ne] = [
-            K.longest_common_substring(av.iloc[i], bv.iloc[i]) for i in ne
-        ]
+        out.iloc[ne] = np.array(
+            [K.longest_common_substring(av.iloc[i], bv.iloc[i]) for i in ne],
+            dtype=np.int64,
+        )
         return out
 
     return fn

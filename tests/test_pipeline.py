@@ -309,14 +309,14 @@ def test_runner_order_and_overlap(spark):
 
 
 def test_volatile_barrier_keys(volatile_result):
-    """run_volatile times exactly the eight barriers the benchmark maps."""
+    """run_volatile times exactly seven barriers, all of which the benchmark
+    maps; scored is a projection of pair_shingles and has none."""
     _, stage_times = volatile_result
     assert set(stage_times) == {
         "sketches",
         "shingle_counts",
         "counts(2)",
         "cands+pair_shingles",
-        "scored",
         "gated",
         "rescored",
         "clusters(cc)",
@@ -340,6 +340,48 @@ def test_rescored_plan_shape(spark_result):
     assert len(re.findall(r"\bExchange\b", plan)) <= 2, plan
     assert "Generate" not in plan, plan
     assert "Aggregate" not in plan, plan
+
+
+def test_pair_shingles_plan_shape(spark_result):
+    """Plan-shape guard for the pair_shingles stage over committed stage
+    tables: the two profile joins broadcast the sketches (no shuffle) and
+    feed one MapInArrow that intersects, looks up and scores, with no
+    explode and no aggregate. The scored stage over committed pair_shingles
+    is a projection, with no Python node."""
+    import re
+
+    pipe, out, _ = spark_result
+    df = pipe._stage_pair_shingles(
+        out["candidates"],
+        out["sketches"],
+        out["shingle_counts"],
+        pipe.catalog.manifest("shingle_counts").rows,
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, plan
+    assert "Generate" not in plan, plan
+    assert "Aggregate" not in plan, plan
+    assert len(re.findall(r"\bExchange\b", plan)) == 0, plan
+    assert len(re.findall(r"\bBroadcastExchange\b", plan)) == 2, plan
+
+    scored = pipe._stage_scored(out["pair_shingles"])
+    plan = scored._jdf.queryExecution().executedPlan().toString()
+    assert not re.search(r"Python|Arrow|Pandas", plan), plan
+
+
+def test_lcs_all_equal_batch():
+    """A batch whose caption pairs are all equal never reaches the
+    automaton and returns int64 lengths without a pandas dtype warning
+    (pytest.ini turns that warning into an error)."""
+    import pandas as pd
+
+    from sylph_spark import udfs
+
+    a = pd.Series(["a b", "c", ""])
+    for short_circuit in (True, False):
+        got = udfs.make_lcs_fn(short_circuit)(a, a.copy())
+        assert got.dtype == np.int64
+        assert got.tolist() == [3, 1, 0]
 
 
 def test_lcs_short_circuit_identical(spark, spark_result):
@@ -537,9 +579,11 @@ def test_distributed_cc_pipeline_parity(spark, corpus, monkeypatch):
 
 def test_banding_join_path_parity(spark, corpus, volatile_result):
     """A vocabulary above ``broadcast_rare_max`` bands through the explode /
-    join / ``make_band_fn`` path instead of the broadcast multi-family UDF.
-    Forcing that path (cap 0) must give the same candidate set, cluster
-    labels and survivors as the default broadcast path. The fixture's
+    join / ``make_band_fn`` path instead of the broadcast multi-family UDF,
+    and regroups the pair intersections through an explode / counts join
+    instead of the fused pair_shingles kernel. Forcing both (cap 0) must
+    give the same candidates, pair_shingles, scored, cluster labels and
+    survivors as the default broadcast path. The fixture's
     duplicates are near-identical, so any banding finds them: the two band
     UDFs are also compared row for row on its sketches."""
     from dataclasses import replace
@@ -553,8 +597,11 @@ def test_banding_join_path_parity(spark, corpus, volatile_result):
     joined = run_volatile(spark, images_df_from_pandas(spark, images), cfg)
     broadcast, _ = volatile_result
     assert broadcast["candidates"].count() > 0
-    for stage in ("candidates", "clusters", "survivors"):
+    # pair_shingles: the explode / counts join / regroup path against the
+    # fused kernel (inter_cnt compared as a sorted array)
+    for stage in ("candidates", "pair_shingles", "scored", "clusters", "survivors"):
         assert _canon(joined[stage]) == _canon(broadcast[stage]), stage
+        assert joined[stage].columns == broadcast[stage].columns, stage
 
     sk = broadcast["sketches"].toArrow()
     vocab = np.unique(sk.column("shingles").combine_chunks().flatten().to_numpy())
@@ -578,6 +625,49 @@ def test_banding_join_path_parity(spark, corpus, volatile_result):
         per_family |= band_rows(udfs.make_band_fn(cfg, offset, nb, rpb), tbl)
     multi = udfs.make_multi_band_fn(cfg, SimpleNamespace(value=vocab))
     assert band_rows(multi, sk) == per_family
+
+
+@pytest.fixture(scope="module")
+def mid_corpus():
+    images, planted = fixtures.generate_mid_jaccard_corpus()
+    return images, planted, oracle.run_oracle(images, SketchConfig())
+
+
+@pytest.mark.parametrize("rare_max", [None, 0])
+def test_mid_jaccard_pairs_match_oracle(spark, mid_corpus, rare_max):
+    """Planted pairs in the middle of the LSH S-curve make banding recall
+    visible: on both the broadcast paths and the join paths (cap 0), the
+    candidates must equal the oracle's and the scores must match it. A
+    change to rows_per_band, to the stop-shingle masking or to the
+    pair_shingles prefilter moves pairs in or out here, where the
+    near-identical duplicates of the main fixture collide under any
+    banding."""
+    from dataclasses import replace
+
+    from sylph_spark.pipeline import run_volatile
+
+    images, planted, want = mid_corpus
+    cfg = SketchConfig()
+    planted = set(zip(planted["id_a"], planted["id_b"]))
+    # the fixture sits mid-curve: banding keeps some planted pairs, not all
+    assert 0 < len(planted & want.candidates) < len(planted)
+    if rare_max is not None:
+        cfg = replace(cfg, broadcast_rare_max=rare_max)
+    out = run_volatile(spark, images_df_from_pandas(spark, images), cfg)
+    got = {(r["id_a"], r["id_b"]) for r in out["candidates"].collect()}
+    assert got == want.candidates
+    scored = {
+        (r["id_a"], r["id_b"]): (r["contain_count"], r["total_kmers"], r["adj_sim"])
+        for r in out["scored"].collect()
+    }
+    exp = {
+        (r.id_a, r.id_b): (r.contain_count, r.total_kmers, r.adj_sim)
+        for r in want.scored.itertuples()
+    }
+    assert set(scored) == set(exp)
+    for k, (cc, total, adj) in exp.items():
+        assert scored[k][:2] == (cc, total), k
+        assert scored[k][2] == pytest.approx(adj), k
 
 
 def test_read_images_validates_and_routes(spark, corpus, tmp_path):

@@ -8,6 +8,7 @@ per-pair kernel loop on adversarial coverage vectors spanning every regime.
 """
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 import pytest
 
@@ -221,3 +222,141 @@ def test_bootstrap_fast_speedup():
     _run(slow_fn, batch)
     t_slow = time.perf_counter() - t0
     assert t_slow / t_fast >= 5.0, (t_fast, t_slow)
+
+
+# -- the pair_shingles kernel: intersect + multiplicity lookup + score ------
+
+
+def _pair_cases(rng, n=200):
+    """Pair rows (sh_a, sh_b) over a shingle universe whose values straddle
+    the int64 sign (u64 high bit set), plus the edge cases, and the corpus
+    counts of every universe shingle but one (shared by row 0)."""
+    universe = np.unique(
+        np.concatenate(
+            [
+                rng.integers(-(1 << 63), -(1 << 62), 300),
+                rng.integers(0, 1 << 62, 300),
+            ]
+        )
+    )
+    missing = int(universe[0])
+    counts = {int(s): int(c) for s, c in zip(universe, rng.poisson(1.5, universe.size) + 2)}
+    del counts[missing]
+    rows = []
+    # a shared shingle absent from the counts counts toward |∩| (here it
+    # lifts |∩| to the prefilter bound) and is dropped from inter_cnt
+    rows.append(([missing, *universe[1:8]], [missing, universe[1], *universe[50:60]]))
+    rows.append((list(universe[100:110]), list(universe[200:220])))  # empty ∩
+    # |∩| = score_min_contain·total exactly (2 = 0.25·8) passes; one shared
+    # shingle fewer against the same total does not
+    rows.append((list(universe[300:308]), [*universe[300:302], *universe[400:420]]))
+    rows.append((list(universe[310:318]), [*universe[310:311], *universe[430:450]]))
+    for _ in range(n):
+        base = rng.choice(universe, rng.integers(20, 90), replace=False)
+        keep = rng.random(base.size) < rng.uniform(0.1, 0.9)
+        other = np.concatenate([base[keep], rng.choice(universe, rng.integers(0, 40))])
+        rows.append((list(base), list(np.unique(other))))
+    rows = [(sorted(map(int, a)), sorted(map(int, set(b)))) for a, b in rows]
+    return rows, counts
+
+
+def _pair_batch(rows):
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([f"a{i:05d}" for i in range(len(rows))]),
+            pa.array([f"b{i:05d}" for i in range(len(rows))]),
+            pa.array([min(len(a), len(b)) for a, b in rows], pa.int32()),
+            pa.array([a for a, _ in rows], pa.list_(pa.int64())),
+            pa.array([b for _, b in rows], pa.list_(pa.int64())),
+        ],
+        names=["id_a", "id_b", "total_kmers", "sh_a", "sh_b"],
+    )
+
+
+def _reference(batch, counts, cfg):
+    """np.intersect1d, the size prefilter, a dict lookup of the counts,
+    then the whole-batch scorer."""
+    d = batch.to_pydict()
+    keep, inter_cnt = [], []
+    for i, (a, b, t) in enumerate(zip(d["sh_a"], d["sh_b"], d["total_kmers"])):
+        inter = np.intersect1d(a, b)
+        if inter.size < cfg.score_min_contain * t:
+            continue
+        ic = [(int(s), counts[int(s)]) for s in inter if int(s) in counts]
+        if ic:
+            keep.append(i)
+            inter_cnt.append(ic)
+    sel = pa.array(keep, pa.int64())
+    covs = pa.array([[c for _, c in ic] for ic in inter_cnt], pa.list_(pa.int32()))
+    scored = udfs._score_batch_fast(
+        pa.RecordBatch.from_arrays(
+            [batch.column(j).take(sel) for j in range(3)] + [covs],
+            names=["id_a", "id_b", "total_kmers", "covs"],
+        ),
+        cfg,
+        False,
+    ).to_pandas()
+    scored.insert(3, "inter_cnt", [sorted(ic) for ic in inter_cnt])
+    return scored[[f.name for f in udfs.PAIR_SHINGLES_PA_SCHEMA]]
+
+
+def _kernel_frame(fn, batch):
+    out = _run(fn, batch)
+    out["inter_cnt"] = [
+        sorted((e["shingle"], e["cnt"]) for e in ic) for ic in out["inter_cnt"]
+    ]
+    return out
+
+
+def _bc(counts):
+    from types import SimpleNamespace
+
+    keys = np.array(sorted(counts), dtype=np.int64)
+    return SimpleNamespace(
+        value=(keys, np.array([counts[k] for k in keys.tolist()], np.int32))
+    )
+
+
+def test_pair_shingles_kernel_matches_reference():
+    """The fused kernel ≡ intersect1d + dict lookup + scorer, on a sliced
+    batch (nonzero list offsets) with high-bit shingles and the edge rows."""
+    rng = np.random.default_rng(8)
+    cfg = SketchConfig()
+    rows, counts = _pair_cases(rng)
+    full = _pair_batch([([], [])] * 3 + rows)
+    batch = full.slice(3)
+    assert batch.column(3).offset == 3
+    got = _kernel_frame(udfs.make_pair_shingles_fn(cfg, _bc(counts)), batch)
+    want = _reference(batch, counts, cfg)
+    assert list(got.columns) == [f.name for f in udfs.PAIR_SHINGLES_PA_SCHEMA]
+    pd.testing.assert_frame_equal(got, want)
+    # the edge rows (ids a00003-a00006, after the three sliced-off rows)
+    ids = set(got["id_a"])
+    assert got["id_a"][0] == "a00003" and len(got["inter_cnt"][0]) == 1
+    assert "a00004" not in ids  # empty intersection
+    assert "a00005" in ids and "a00006" not in ids  # prefilter boundary
+    assert set(got["adjust_status"]) >= {"high", "low"}
+
+
+def test_pair_shingles_join_path_scores_the_same():
+    """Without a broadcast the kernel takes regrouped (…, inter_cnt) rows
+    and must give the same rows as the fused path."""
+    rng = np.random.default_rng(9)
+    cfg = SketchConfig()
+    rows, counts = _pair_cases(rng, n=60)
+    batch = _pair_batch(rows)
+    fused = _kernel_frame(udfs.make_pair_shingles_fn(cfg, _bc(counts)), batch)
+    regrouped = pa.RecordBatch.from_arrays(
+        [
+            pa.array(fused["id_a"]),
+            pa.array(fused["id_b"]),
+            pa.array(fused["total_kmers"], pa.int32()),
+            pa.array(
+                [[{"shingle": s, "cnt": c} for s, c in reversed(ic)] for ic in fused["inter_cnt"]],
+                udfs.INTER_CNT_TYPE,
+            ),
+        ],
+        names=["id_a", "id_b", "total_kmers", "inter_cnt"],
+    ).slice(1)
+    got = _kernel_frame(udfs.make_pair_shingles_fn(cfg), regrouped)
+    pd.testing.assert_frame_equal(got, fused.iloc[1:].reset_index(drop=True))
