@@ -14,6 +14,7 @@ from __future__ import annotations
 import contextlib
 import io
 import sys
+import threading
 
 sys.path.insert(0, ".")
 
@@ -23,9 +24,15 @@ from sylph_spark.pipeline import STAGES, DedupStages, Volatile, images_df_from_p
 from sylph_spark.session import build_spark
 
 
+_STDOUT = threading.Lock()
+
+
 def explain_str(df) -> str:
+    # run_graph builds stages on concurrent threads, and redirect_stdout
+    # swaps the process-wide sys.stdout: unserialised, two overlapping
+    # redirects can leave it pointing at a stage's buffer
     buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
+    with _STDOUT, contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
 
@@ -38,6 +45,8 @@ class Explain(Volatile):
         self.plans: dict[str, str] = {}
 
     def commit(self, node, build):
+        if node.volatile == "value":
+            return build()
         df = build()
         self.plans[node.name] = explain_str(df)
         return df.localCheckpoint()

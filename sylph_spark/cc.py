@@ -17,25 +17,14 @@ Inputs/outputs are plain DataFrames, so the same routine serves any edge set
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# edge-count cutoff for the driver fast path when a caller passes none; read
+# at call time, so setting it to 0 forces the distributed propagation loop
+# (the path that runs at 100-TB scale) through a whole pipeline run
 DEFAULT_DRIVER_THRESHOLD = 2_000_000
-
-
-def _resolve_driver_threshold(driver_threshold: int | None) -> int:
-    """Default edge-count cutoff for the driver fast path, overridable via
-    ``SYLPH_CC_DRIVER_THRESHOLD`` (set it to 0 to force the distributed
-    propagation loop — the code path that runs at 100-TB scale — through
-    any pipeline without touching call sites; used by the end-to-end
-    distributed-vs-driver parity audits)."""
-    if driver_threshold is not None:
-        return driver_threshold
-    env = os.environ.get("SYLPH_CC_DRIVER_THRESHOLD")
-    return int(env) if env else DEFAULT_DRIVER_THRESHOLD
 
 
 def connected_components(
@@ -73,7 +62,8 @@ def connected_components(
     # columns — no Row objects), and when the probe says "small" the same
     # table IS the edge list, so the small-graph case pays a single job
     # instead of a count followed by a collect.
-    driver_threshold = _resolve_driver_threshold(driver_threshold)
+    if driver_threshold is None:
+        driver_threshold = DEFAULT_DRIVER_THRESHOLD
     pairs = edges.select(src_col, dst_col)
     probe = pairs.limit(driver_threshold + 1).toArrow()
     if probe.num_rows <= driver_threshold:
@@ -197,7 +187,8 @@ def pair_cluster_labels(
     import pandas as pd
 
     spark = edges.sparkSession
-    driver_threshold = _resolve_driver_threshold(driver_threshold)
+    if driver_threshold is None:
+        driver_threshold = DEFAULT_DRIVER_THRESHOLD
     probe = edges.limit(driver_threshold + 1).toArrow()
     if probe.num_rows > driver_threshold:
         node_df = _distributed_cc(

@@ -105,10 +105,6 @@ class SketchConfig:
     # threshold before the collect_list if corpora that far beyond the
     # audited 960k are expected).
     bucket_degrade_size: int = 2048
-    # banding rare-set strategy: when the stop-shingle-filtered vocabulary
-    # is at most this many entries it is broadcast into the band UDF
-    # (zero-shuffle banding); larger vocabularies use the join path
-    broadcast_rare_max: int = 5_000_000
     # LSH skew handling: bucket pair generation is UNCONDITIONALLY chunked —
     # every bucket of size s fans out over ceil(s/pair_chunk)² (ci,cj) tasks
     # (pipeline._stage_candidates), so a hot bucket never lands on one task.
@@ -129,6 +125,3 @@ class SketchConfig:
     @staticmethod
     def from_json(s: str) -> "SketchConfig":
         return SketchConfig(**json.loads(s))
-
-
-DEFAULT_CONFIG = SketchConfig()

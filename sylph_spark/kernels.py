@@ -37,11 +37,7 @@ MASK64 = (1 << 64) - 1
 CUTOFF_PVALUE = 0.9999999999  # constants.rs:3
 SAMPLE_SIZE_CUTOFF = 25  # constants.rs:4
 MEDIAN_ANI_THRESHOLD = 2.0  # constants.rs:5
-MIN_ANI_DEF = 0.9  # constants.rs:10
-MIN_ANI_P_DEF = 0.95  # constants.rs:11
 MAX_MEDIAN_FOR_MEAN_FINAL_EST = 15.0  # constants.rs:12
-MAX_DEDUP_COUNT = 4  # constants.rs:14
-DEFAULT_FPR = 0.0001  # constants.rs:16
 DEFAULT_MIN_COUNT_CORRECT = 3.0  # cmdline.rs:94-95
 
 # Source salts: tag caption vs image shingles so the two sub-alphabets

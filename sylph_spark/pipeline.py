@@ -47,9 +47,13 @@ Scale design notes (for the 10^12-row cluster, tested at local[*]):
 - LSH buckets are pair-generated in CHUNKS keyed (band, hash, ci, cj) so a
   single hot bucket fans out across ~(size/chunk)² tasks instead of one —
   the salted-key skew mitigation required by the north rule;
-- shingle_counts is a map-side-combined hash aggregate; its cnt ≥ 2
-  slice is broadcast into the pair_shingles kernel while the vocabulary is
-  under ``broadcast_rare_max``, and equi-joined above it;
+- shingle_counts is a map-side-combined hash aggregate. One driver
+  collect (the ``vocab`` node) fetches its cnt ≥ 2 slice, and one
+  broadcast of it serves both the banding kernel (stop-shingle mask) and
+  the pair_shingles kernel (multiplicities). Above ``VOCAB_BROADCAST_MAX``
+  shingles nothing is broadcast: one explode ⋈ shingle_counts → regroup
+  per image gives each image its own counts, which both kernels read in
+  its place;
 - every stage is a materialized columnar table: column pruning means later
   stages never reread ``bytes``.
 """
@@ -76,6 +80,12 @@ from .cc import connected_components, pair_cluster_labels
 from .config import SketchConfig
 from .io.catalog import StageCatalog
 from .session import heavy_payload_batches
+
+# the most cnt ≥ 2 shingles the vocab node broadcasts (12 bytes each); above
+# it the kernels read per-image counts (DedupStages._with_sh_cnt). It picks
+# a plan, not an output, so it is not part of SketchConfig.
+VOCAB_BROADCAST_MAX = 5_000_000
+
 
 def input_fingerprint(images: DataFrame) -> str:
     """Cheap identity of the input table for checkpoint validity.
@@ -138,9 +148,10 @@ class Node(NamedTuple):
     """One node of the stage graph. ``volatile`` is what the volatile path
     does with it: "checkpoint" (localCheckpoint, timed under ``barrier``),
     "time" (the node materialises itself, timed under ``barrier``), "lazy"
-    (left to Catalyst to fuse into the next barrier's job) or "count" (the
-    row count of its one input, not a stage table). The durable path
-    commits every stage."""
+    (left to Catalyst to fuse into the next barrier's job), "count" (the
+    row count of its one input) or "value" (a driver-side value its builder
+    computes, on both paths); the last two are not stage tables. The
+    durable path commits every stage."""
 
     name: str
     inputs: tuple[str, ...]
@@ -152,13 +163,14 @@ GRAPH = (
     Node("sketches", ("images",), "checkpoint", "sketches"),
     Node("shingle_counts", ("sketches",), "checkpoint", "shingle_counts"),
     Node("n_items", ("sketches",), "count", "counts(2)"),
-    Node("n_vocab", ("shingle_counts",), "count", "counts(2)"),
-    Node("candidates", ("sketches", "shingle_counts", "n_items", "n_vocab"), "lazy"),
+    # the one driver collect of shingle_counts, read by both kernels below
+    Node("vocab", ("shingle_counts",), "value", "counts(2)"),
+    Node("candidates", ("sketches", "shingle_counts", "n_items", "vocab"), "lazy"),
     # pair_shingles feeds both scoring passes; lazy candidates
     # materialises inside its barrier
     Node(
         "pair_shingles",
-        ("candidates", "sketches", "shingle_counts", "n_vocab"),
+        ("candidates", "sketches", "shingle_counts", "vocab"),
         "checkpoint",
         "cands+pair_shingles",
     ),
@@ -179,7 +191,7 @@ GRAPH = (
     Node("clusters", ("sketches", "gated"), "time", "clusters(cc)"),
     Node("survivors", ("clusters", "verified"), "lazy"),
 )
-STAGES = [n.name for n in GRAPH if n.volatile != "count"]
+STAGES = [n.name for n in GRAPH if n.volatile not in ("count", "value")]
 
 
 class DedupStages:
@@ -219,6 +231,48 @@ class DedupStages:
             .agg(F.count(F.lit(1)).cast("int").alias("cnt"))
         )
 
+    def _stage_vocab(self, counts: DataFrame):
+        """The multiplicities both kernels read (udfs._count_table): the
+        cnt ≥ 2 slice of shingle_counts, sorted by shingle and broadcast;
+        a shingle absent from it occurs once. One action probes the size
+        and fetches the slice, ``limit(cap + 1).toArrow()`` (the
+        probe-and-fetch of cc.connected_components), which bounds the
+        driver transfer. Above ``VOCAB_BROADCAST_MAX`` rows it returns None
+        and the kernels read each image's own counts (``_with_sh_cnt``).
+        A driver value is not committed, so the durable path runs this
+        collect on every pass, a fully resumed one included."""
+        tbl = (
+            counts.filter(F.col("cnt") >= 2)
+            .limit(VOCAB_BROADCAST_MAX + 1)
+            .toArrow()
+        )
+        if tbl.num_rows > VOCAB_BROADCAST_MAX:
+            return None
+        keys = tbl.column("shingle").to_numpy()
+        order = np.argsort(keys)
+        return self.spark.sparkContext.broadcast(
+            (keys[order], tbl.column("cnt").to_numpy()[order])
+        )
+
+    def _with_sh_cnt(
+        self, sketches: DataFrame, cols: list[str], counts: DataFrame, vocab
+    ) -> DataFrame:
+        """``cols`` of the sketches, plus, when the vocabulary is above the
+        broadcast cap (``vocab`` None), ``sh_cnt``: the image's shingles
+        that occur more than once in the corpus, with their counts (null
+        when there are none), from one explode ⋈ shingle_counts → regroup
+        per image. Both kernels read it in place of the broadcast."""
+        df = sketches.select(*cols)
+        if vocab is not None:
+            return df
+        sh_cnt = (
+            sketches.select("image_id", F.explode("shingles").alias("shingle"))
+            .join(counts.filter(F.col("cnt") >= 2), "shingle")
+            .groupBy("image_id")
+            .agg(F.collect_list(F.struct("shingle", "cnt")).alias("sh_cnt"))
+        )
+        return df.join(sh_cnt, "image_id", "left")
+
     def _band_df_limit(self, n_items: int) -> int:
         """Relative informative-shingle df limit (see config.band_max_df_abs
         for why a fixed absolute cap decays recall as the corpus grows)."""
@@ -229,64 +283,27 @@ class DedupStages:
         return limit
 
     def _stage_candidates(
-        self,
-        sketches: DataFrame,
-        counts: DataFrame,
-        n_items: int,
-        n_vocab: int,
+        self, sketches: DataFrame, counts: DataFrame, n_items: int, vocab
     ) -> DataFrame:
-        """``n_items`` (sketch rows) and ``n_vocab`` (distinct shingles) are
-        threaded in from the stage manifests — re-counting here would be a
-        full extra pass over each table per run. ``n_vocab`` gates the
-        broadcast-banding path up front: when the vocabulary exceeds the
-        broadcast cap, collecting cap+1 rows just to discard them wastes a
-        driver round-trip (serial time) at exactly the scale where it
-        hurts."""
+        """MinHash/LSH banding → distinct candidate pairs (id_a < id_b).
+        ``n_items`` (sketch rows) is threaded in from the stage manifests,
+        so it is not re-counted here. One mapInArrow kernel
+        (udfs.make_multi_band_fn) drops stop-shingles and bands all three
+        LSH families (source-aware banding, see SketchConfig), reading the
+        counts from the ``vocab`` broadcast or, above its cap, from
+        ``sh_cnt``."""
         cfg = self.cfg
         # stop-shingle masking (corpus analog of sylph's repeat masking,
         # sketch.rs:590-600): drop shingles with document frequency above the
         # limit from BANDING input — boilerplate shingles otherwise create
         # dense buckets and quadratic candidate growth. Scoring still uses
         # the full sets.
-        limit = self._band_df_limit(n_items)
-        rare = counts.filter(F.col("cnt") <= limit).select("shingle")
-        # three LSH families (source-aware banding): combined wide/shallow
-        # for cross-modal partial similarity; per-modality narrow/deep for
-        # near-identical-in-that-family pairs (see SketchConfig)
-        fb, fr = cfg.family_bands, cfg.family_rows
-        if n_vocab <= cfg.broadcast_rare_max:
-            # broadcast the rare vocabulary into one multi-family band UDF:
-            # no explode, no re-aggregation shuffle. toArrow() lands the
-            # column as a numpy-backed buffer (no Python-object loop);
-            # |rare| <= n_vocab <= cap bounds the driver transfer, and the
-            # sc.broadcast ships it once per executor (not once per task)
-            rare_arr = np.sort(rare.toArrow().column("shingle").to_numpy())
-            rare_bc = self.spark.sparkContext.broadcast(rare_arr)
-            bands = sketches.select(
-                "image_id", "img_shingles", "cap_shingles"
-            ).mapInArrow(
-                udfs.make_multi_band_fn(cfg, rare_bc), schema=udfs.BAND_SCHEMA
-            )
-        else:
-
-            def family_bands(col: str, offset: int, nb: int, rpb: int) -> DataFrame:
-                band_input = (
-                    sketches.select("image_id", F.explode(col).alias("shingle"))
-                    .join(rare, "shingle")
-                    .groupBy("image_id")
-                    .agg(F.collect_list("shingle").alias("shingles"))
-                )
-                return band_input.mapInArrow(
-                    udfs.make_band_fn(cfg, offset, nb, rpb), schema=udfs.BAND_SCHEMA
-                )
-
-            bands = (
-                family_bands("shingles", 0, cfg.num_bands, cfg.rows_per_band)
-                .unionByName(family_bands("img_shingles", cfg.num_bands, fb, fr))
-                .unionByName(
-                    family_bands("cap_shingles", cfg.num_bands + fb, fb, fr)
-                )
-            )
+        bands = self._with_sh_cnt(
+            sketches, ["image_id", "img_shingles", "cap_shingles"], counts, vocab
+        ).mapInArrow(
+            udfs.make_multi_band_fn(cfg, self._band_df_limit(n_items), vocab),
+            schema=udfs.BAND_SCHEMA,
+        )
         # Bucketize in ONE hash aggregate (no window: the previous
         # row_number/count-over pair forced a full sort-shuffle of the band
         # rows and recomputed it for both join sides). sort_array makes the
@@ -358,11 +375,7 @@ class DedupStages:
         )
 
     def _stage_pair_shingles(
-        self,
-        candidates: DataFrame,
-        sketches: DataFrame,
-        counts: DataFrame,
-        n_vocab: int,
+        self, candidates: DataFrame, sketches: DataFrame, counts: DataFrame, vocab
     ) -> DataFrame:
         """(id_a, id_b) → (id_a, id_b, total_kmers, inter_cnt) + the
         first-pass score columns, where inter_cnt pairs every shingle the
@@ -371,69 +384,35 @@ class DedupStages:
 
         The pair table joins the two items' shingle ARRAYS (it shuffles
         pairs, not pair × shingle rows: the probe-join J1, contain.rs:632-652,
-        without a 10⁹-row exchange). Every shared shingle occurs in both
-        pair members, so its corpus count is ≥ 2: only the cnt ≥ 2 slice of
-        the counts is ever looked up. When the vocabulary fits under
-        ``broadcast_rare_max`` (the cap and test that pick the banding path)
-        that slice is broadcast, and one mapInArrow kernel intersects the
-        arrays, applies the size prefilter, looks up the multiplicities and
-        scores every pair (udfs.make_pair_shingles_fn): no explode, no
-        regrouping aggregate and no second crossing into Python. Above the
-        cap the intersections explode and join the slice, are regrouped by
-        pair, and the same kernel only scores them."""
-        cfg = self.cfg
-        prof = sketches.select("image_id", "n_shingles", "shingles")
+        without a 10⁹-row exchange), and one mapInArrow kernel
+        (udfs.make_pair_shingles_fn) intersects them, applies the size
+        prefilter, looks up the multiplicities and scores every pair: no
+        explode, no regrouping aggregate and no second crossing into
+        Python. The counts come from the ``vocab`` broadcast or, above its
+        cap, from side a's ``sh_cnt`` (every shared shingle is in a)."""
+        cols = ["image_id", "n_shingles", "shingles"]
+        prof_a = self._with_sh_cnt(sketches, cols, counts, vocab)
 
-        def side(s: str) -> DataFrame:
-            return prof.select(
-                F.col("image_id").alias(f"id_{s}"),
-                F.col("n_shingles").alias(f"n_{s}"),
-                F.col("shingles").alias(f"sh_{s}"),
+        def side(df: DataFrame, s: str) -> DataFrame:
+            return df.withColumnsRenamed(
+                {"image_id": f"id_{s}", "n_shingles": f"n_{s}", "shingles": f"sh_{s}"}
             )
 
         pairs = (
-            candidates.join(side("a"), "id_a")
-            .join(side("b"), "id_b")
+            candidates.join(side(prof_a, "a"), "id_a")
+            .join(side(sketches.select(*cols), "b"), "id_b")
             .select(
                 "id_a",
                 "id_b",
                 F.least("n_a", "n_b").alias("total_kmers"),
                 "sh_a",
                 "sh_b",
+                *prof_a.columns[len(cols) :],
             )
         )
-        shared = counts.filter(F.col("cnt") >= 2)
-        if n_vocab <= cfg.broadcast_rare_max:
-            tbl = shared.toArrow()
-            keys = tbl.column("shingle").to_numpy()
-            order = np.argsort(keys)
-            counts_bc = self.spark.sparkContext.broadcast(
-                (keys[order], tbl.column("cnt").to_numpy()[order])
-            )
-            return pairs.mapInArrow(
-                udfs.make_pair_shingles_fn(cfg, counts_bc),
-                schema=udfs.PAIR_SHINGLES_SCHEMA,
-            )
-        inter = pairs.select(
-            "id_a",
-            "id_b",
-            "total_kmers",
-            F.array_intersect("sh_a", "sh_b").alias("inter"),
-        ).filter(
-            # prefilter on raw intersection size (min-ANI analog,
-            # contain.rs:746-764) before exploding anything
-            F.size("inter") >= cfg.score_min_contain * F.col("total_kmers")
-        )
-        return (
-            inter.select(
-                "id_a", "id_b", "total_kmers", F.explode("inter").alias("shingle")
-            )
-            .join(shared, "shingle")
-            .groupBy("id_a", "id_b", "total_kmers")
-            .agg(F.collect_list(F.struct("shingle", "cnt")).alias("inter_cnt"))
-            .mapInArrow(
-                udfs.make_pair_shingles_fn(cfg), schema=udfs.PAIR_SHINGLES_SCHEMA
-            )
+        return pairs.mapInArrow(
+            udfs.make_pair_shingles_fn(self.cfg, vocab),
+            schema=udfs.PAIR_SHINGLES_SCHEMA,
         )
 
     def _stage_scored(self, pair_shingles: DataFrame) -> DataFrame:
@@ -631,8 +610,8 @@ class DedupStages:
         Results are unchanged, since every plan is deterministic and the
         scheduler only interleaves tasks. A node's jobs carry its name as
         their Spark job description. With ``stage_times``, the wall seconds
-        of each node with a ``barrier`` accumulate under that key (both row
-        counts under "counts(2)"); overlapping barriers overlap on the wall
+        of each node with a ``barrier`` accumulate under that key (the sketch
+        row count and the vocab collect under "counts(2)"); overlapping barriers overlap on the wall
         clock, so their sum can exceed the elapsed time."""
         sc = self.spark.sparkContext
         lock = threading.Lock()
@@ -689,6 +668,8 @@ class Durable:
     force: bool
 
     def commit(self, node: Node, build) -> DataFrame:
+        if node.volatile == "value":
+            return build()
         cat = self.catalog
         if self.force or not cat.has_valid(node.name, self.h, self.fp):
             cat.write(build(), node.name, self.h, extra={"input_fp": self.fp})

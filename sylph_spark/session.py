@@ -42,14 +42,15 @@ SETTINGS = {
     "spark.executorEnv.PYTHONPATH": os.path.dirname(
         os.path.dirname(os.path.abspath(__file__))
     ),
-    # collect_list aggregations (the LSH buckets; above
-    # broadcast_rare_max also the join-path banding input and pair-shingle
-    # regrouping) run as ObjectHashAggregate, which silently degrades to
-    # SORT-based aggregation once a task sees more than this many distinct
-    # keys (default 128!) — the bench-scale bucket aggregate has ~200k
-    # groups, so every task paid a full sort of its band rows. Keys here
-    # are small (two longs + a short string list), so a multi-million-entry
-    # hash map is still far cheaper than the sort it replaces.
+    # collect_list aggregations (the LSH buckets; above the vocab
+    # broadcast cap also the per-image shingle counts of
+    # pipeline._with_sh_cnt) run as ObjectHashAggregate, which silently
+    # degrades to SORT-based aggregation once a task sees more than this
+    # many distinct keys (default 128!) — the bench-scale bucket aggregate
+    # has ~200k groups, so every task paid a full sort of its band rows.
+    # Keys here are small (two longs, or one image id), so a
+    # multi-million-entry hash map is still far cheaper than the sort it
+    # replaces.
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "8388608",
     # AQE coalescing is byte-based and blind to per-row CPU. On the
     # 32k-image bench corpus (OPTIMIZATION_r06.md) the candidate-pair

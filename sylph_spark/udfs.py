@@ -33,10 +33,6 @@ SCORE_SCHEMA = (
 )
 
 
-def _i64(v: int) -> int:
-    return v - (1 << 64) if v >= 1 << 63 else v
-
-
 def make_sketch_arrow_fn(cfg: SketchConfig):
     """mapInArrow variant of the sketch stage: builds the shingle ListArray
     directly from numpy offsets+values — no per-element Python boxing.
@@ -56,8 +52,7 @@ def make_sketch_arrow_fn(cfg: SketchConfig):
     (VERDICT r4 #6)."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            tbl = batch if isinstance(batch, pa.RecordBatch) else batch
+        for tbl in batches:
             id_arr = tbl.column(tbl.schema.get_field_index("image_id"))
             cap_arr = tbl.column(tbl.schema.get_field_index("caption"))
             bys = tbl.column(tbl.schema.get_field_index("bytes")).to_pylist()
@@ -191,46 +186,43 @@ def _band_batch(ids_rep, bands, hashes) -> pa.RecordBatch:
     )
 
 
-def make_band_fn(
-    cfg: SketchConfig,
-    band_offset: int = 0,
-    num_bands: int | None = None,
-    rows_per_band: int | None = None,
-):
-    """mapInArrow: (image_id, shingles) → (image_id, band, band_hash) tall
-    rows, whole-batch vectorized (no per-item Python loop).
-
-    ``band_offset`` namespaces LSH families (source-aware banding): the
-    combined set bands wide/shallow; the image-only and caption-only
-    families band narrow/deep — each family only needs to catch pairs
-    near-identical in that modality."""
-    nb = num_bands or cfg.num_bands
-    rpb = rows_per_band or cfg.rows_per_band
-    seeds = K.minhash_seeds(nb * rpb, cfg.seed)
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            idx_id = batch.schema.get_field_index("image_id")
-            ids_np = np.array(batch.column(idx_id).to_pylist(), dtype=object)
-            flat, counts = _list_col_numpy(batch, "shingles")
-            pid = np.repeat(np.arange(batch.num_rows), counts)
-            yield _band_batch(
-                *_family_band_arrays(
-                    K.i64_to_u64(flat), pid, ids_np, nb, rpb, band_offset, seeds
-                )
-            )
-
-    return fn
+def _count_table(batch: pa.RecordBatch, counts_bc):
+    """The sorted (shingles, counts) a kernel reads corpus multiplicities
+    from: the cnt ≥ 2 slice of shingle_counts, as the broadcast
+    ``counts_bc`` or, above the broadcast cap (``counts_bc`` None), as the
+    union of the batch's own ``sh_cnt`` lists (each image's shingles with
+    cnt ≥ 2; a shingle's count is the same in every row)."""
+    if counts_bc is not None:
+        return counts_bc.value
+    sh_cnt = batch.column(batch.schema.get_field_index("sh_cnt")).flatten()
+    fields = dict(zip((f.name for f in sh_cnt.type), sh_cnt.flatten()))
+    keys, first = np.unique(fields["shingle"].to_numpy(), return_index=True)
+    return keys, fields["cnt"].to_numpy()[first]
 
 
-def make_multi_band_fn(cfg: SketchConfig, rare_bc):
-    """mapInArrow: sketches(image_id, img_shingles, cap_shingles) → band rows
-    for ALL THREE LSH families in one pass, filtering stop-shingles against a
-    broadcast sorted rare-set (np.searchsorted membership) — zero shuffles
-    until the bucket join. ``rare_bc`` is a SparkContext.broadcast of the
-    sorted int64 vocab: a broadcast ships ONCE per executor, while a closure
-    capture would re-deserialize the (potentially multi-MB) array with every
-    task. The join-based path handles the 10¹²-scale case."""
+def _multiplicity(keys: np.ndarray, cnts: np.ndarray, vals: np.ndarray) -> np.ndarray:
+    """The corpus count of each of ``vals`` by ``searchsorted`` into the
+    sorted ``keys`` (``cnts`` aligned): a shingle absent from the cnt ≥ 2
+    slice occurs once."""
+    out = np.ones(vals.size, dtype=np.int32)
+    pos = np.searchsorted(keys, vals)
+    hit = pos < keys.size
+    hit[hit] = keys[pos[hit]] == vals[hit]
+    out[hit] = cnts[pos[hit]]
+    return out
+
+
+def make_multi_band_fn(cfg: SketchConfig, limit: int, counts_bc=None):
+    """mapInArrow: (image_id, img_shingles, cap_shingles[, sh_cnt]) → band
+    rows (image_id, band, band_hash) for ALL THREE LSH families in one
+    pass, whole-batch vectorized: the combined img ∪ cap set bands
+    wide/shallow for cross-modal partial similarity, the image-only and
+    caption-only families narrow/deep for pairs near-identical in that
+    modality (``band`` is offset per family). Stop-shingles (corpus count
+    above ``limit``) are dropped first, with the counts read through
+    ``_count_table``. ``counts_bc`` is a SparkContext.broadcast, which
+    ships ONCE per executor, while a closure capture would re-deserialize
+    the (possibly multi-MB) arrays with every task."""
     families = (
         (0, cfg.num_bands, cfg.rows_per_band),
         (cfg.num_bands, cfg.family_bands, cfg.family_rows),
@@ -240,27 +232,18 @@ def make_multi_band_fn(cfg: SketchConfig, rare_bc):
         nb * rpb: K.minhash_seeds(nb * rpb, cfg.seed) for _, nb, rpb in families
     }
 
-    def keep_mask(rare: np.ndarray, flat_i64: np.ndarray) -> np.ndarray:
-        if flat_i64.size == 0:
-            return np.zeros(0, dtype=bool)
-        idx = np.searchsorted(rare, flat_i64)
-        idx_c = np.clip(idx, 0, max(rare.size - 1, 0))
-        if rare.size == 0:
-            return np.zeros(flat_i64.size, dtype=bool)
-        return (idx < rare.size) & (rare[idx_c] == flat_i64)
-
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        rare = rare_bc.value
         for batch in batches:
             n = batch.num_rows
             idx_id = batch.schema.get_field_index("image_id")
             ids_np = np.array(batch.column(idx_id).to_pylist(), dtype=object)
+            counts = _count_table(batch, counts_bc)
             img_flat, img_cnt = _list_col_numpy(batch, "img_shingles")
             cap_flat, cap_cnt = _list_col_numpy(batch, "cap_shingles")
             img_pid = np.repeat(np.arange(n), img_cnt)
             cap_pid = np.repeat(np.arange(n), cap_cnt)
-            im = keep_mask(rare, img_flat)
-            cm = keep_mask(rare, cap_flat)
+            im = _multiplicity(*counts, img_flat) <= limit
+            cm = _multiplicity(*counts, cap_flat) <= limit
             img_f, img_p = img_flat[im], img_pid[im]
             cap_f, cap_p = cap_flat[cm], cap_pid[cm]
             # combined family = img ∪ cap multiset per item (min over the
@@ -727,16 +710,12 @@ PAIR_SHINGLES_SCHEMA = (
 )
 
 
-def _shared_shingles(
-    batch: pa.RecordBatch, keys: np.ndarray, cnts: np.ndarray, min_contain: float
-):
-    """One pass over pair rows (total_kmers, sh_a, sh_b): per row sh_a ∩
-    sh_b, the size prefilter on the raw |∩| (min-ANI analog,
-    contain.rs:746-764), and each shared shingle's corpus multiplicity by
-    ``searchsorted`` into ``keys`` (sorted; ``cnts`` aligned). A shared
-    shingle missing from ``keys`` counts toward |∩| but is dropped, as an
-    inner join with the counts would drop it. The shingle arrays are sets
-    (the sketch stage emits unique shingles).
+def _shared_shingles(batch: pa.RecordBatch, counts, min_contain: float):
+    """One pass over pair rows (total_kmers, sh_a, sh_b[, sh_cnt]): per row
+    sh_a ∩ sh_b, the size prefilter on |∩| (min-ANI analog,
+    contain.rs:746-764), and each shared shingle's corpus multiplicity
+    through ``_multiplicity`` into ``counts`` (``_count_table``). The
+    shingle arrays are sets (the sketch stage emits unique shingles).
 
     Returns (pid, shingle, cnt) of the kept shared shingles, grouped by row
     index ``pid`` in ascending order and in ``sh_a`` order within a row."""
@@ -747,33 +726,21 @@ def _shared_shingles(
     total = total.to_numpy().astype(np.int64)
     rows = np.arange(n, dtype=np.int64)
     pid_a, pid_b = np.repeat(rows, na), np.repeat(rows, nb)
-
-    def lookup(vals):
-        pos = np.searchsorted(keys, vals)
-        hit = pos < keys.size
-        hit[hit] = keys[pos[hit]] == vals[hit]
-        return pos, hit
-
-    # code each shingle as an int: its position in keys, else keys.size +
-    # its rank among the batch's shingles that keys lacks; then (row, code)
-    # packs into one int64 and the per-row intersection is one searchsorted
-    pos_a, hit_a = lookup(fa)
-    pos_b, hit_b = lookup(fb)
-    miss = np.unique(np.concatenate([fa[~hit_a], fb[~hit_b]]))
-    code_a, code_b = pos_a.copy(), pos_b.copy()
-    code_a[~hit_a] = keys.size + np.searchsorted(miss, fa[~hit_a])
-    code_b[~hit_b] = keys.size + np.searchsorted(miss, fb[~hit_b])
-    m = int(keys.size + miss.size)
+    # code each shingle by its rank among the batch's shingles, so (row,
+    # code) packs into one int64 and the per-row intersection is one sort
+    # + searchsorted
+    uniq, code = np.unique(np.concatenate([fa, fb]), return_inverse=True)
+    m = int(uniq.size)
     if n * m >= 1 << 62:
         raise ValueError(f"{n} pairs × {m} shingle codes overflow int64 keys")
-    key_a = pid_a * m + code_a
-    key_b = np.sort(pid_b * m + code_b)
+    key_a = pid_a * m + code[: fa.size]
+    key_b = np.sort(pid_b * m + code[fa.size :])
     j = np.searchsorted(key_b, key_a)
     shared = j < key_b.size
     shared[shared] = key_b[j[shared]] == key_a[shared]
     n_inter = np.bincount(pid_a[shared], minlength=n)
-    sel = shared & hit_a & (n_inter >= min_contain * total)[pid_a]
-    return pid_a[sel], fa[sel], cnts[pos_a[sel]]
+    sel = shared & (n_inter >= min_contain * total)[pid_a]
+    return pid_a[sel], fa[sel], _multiplicity(*counts, fa[sel])
 
 
 def _pair_shingles_batch(
@@ -818,29 +785,19 @@ def _pair_shingles_batch(
 
 
 def make_pair_shingles_fn(cfg: SketchConfig, counts_bc=None):
-    """mapInArrow kernel of the pair_shingles stage → PAIR_SHINGLES_SCHEMA
-    rows: the J1 probe join (contain.rs:632-652) and the first-pass E-chain
-    scoring (contain.rs:601-745) in one crossing into Python.
-
-    With ``counts_bc`` (a SparkContext.broadcast of the (sorted shingles,
-    counts) of the cnt ≥ 2 slice of shingle_counts), the input rows are
-    (id_a, id_b, total_kmers, sh_a, sh_b) and the kernel intersects, applies
-    the ``score_min_contain`` prefilter and looks up the multiplicities on
-    flat numpy buffers (``_shared_shingles``). Without it the input rows
-    already carry ``inter_cnt`` (the join path) and are only scored."""
+    """mapInArrow kernel of the pair_shingles stage: (id_a, id_b,
+    total_kmers, sh_a, sh_b[, sh_cnt]) → PAIR_SHINGLES_SCHEMA rows, the J1
+    probe join (contain.rs:632-652) and the first-pass E-chain scoring
+    (contain.rs:601-745) in one crossing into Python: intersect, apply the
+    ``score_min_contain`` prefilter and look up the multiplicities on flat
+    numpy buffers (``_shared_shingles``), then score. ``counts_bc`` and
+    ``sh_cnt`` are as in ``_count_table``."""
     score = _batch_scorer(cfg)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        if counts_bc is not None:
-            keys, cnts = counts_bc.value
         for batch in batches:
-            if counts_bc is not None:
-                found = _shared_shingles(batch, keys, cnts, cfg.score_min_contain)
-            else:
-                inter = batch.column(batch.schema.get_field_index("inter_cnt"))
-                lens = inter.value_lengths().fill_null(0).to_numpy()
-                sh, cnt = (c.to_numpy() for c in inter.flatten().flatten())
-                found = (np.repeat(np.arange(batch.num_rows), lens), sh, cnt)
+            counts = _count_table(batch, counts_bc)
+            found = _shared_shingles(batch, counts, cfg.score_min_contain)
             yield _pair_shingles_batch(batch, *found, score)
 
     return fn

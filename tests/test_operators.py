@@ -3,6 +3,8 @@ image features, running-state thinning), of the LSH banding the candidates
 stage ships and of the txt_langid entry SQL, over small synthetic inputs."""
 
 from collections import defaultdict
+from dataclasses import replace
+from types import SimpleNamespace
 
 import numpy as np
 import pyarrow as pa
@@ -32,8 +34,8 @@ class TestDedupOps:
 
     def test_minhash_lsh_s_curve(self):
         """SURVEY §7.3 hard part #3: the banding the candidates stage ships
-        (``udfs.make_band_fn``, the join path of ``_stage_candidates``)
-        catches planted ~0.7-Jaccard pairs with OR-semantics across bands
+        (``udfs.make_multi_band_fn``, its combined family) catches planted
+        ~0.7-Jaccard pairs with OR-semantics across bands
         (hit w.p. 1-(1-J⁴)¹⁵ ≈ 0.98 under the default 15×4) that a single
         4-row band structurally misses (hit w.p. J⁴ ≈ 0.24). Pure Arrow, no
         Spark: a pair is a candidate iff its items share a (band, hash)."""
@@ -52,27 +54,35 @@ class TestDedupOps:
             for a, b in zip(sets[::2], sets[1::2])
         ]
         assert 0.65 <= float(np.median(jac)) <= 0.75
+        # the sets are image shingles with no caption; every shingle occurs
+        # once (no counts), under any stop-shingle limit
         batch = pa.RecordBatch.from_arrays(
             [
                 pa.array(ids, pa.string()),
                 pa.array([s.tolist() for s in sets], pa.list_(pa.int64())),
+                pa.array([[]] * len(ids), pa.list_(pa.int64())),
             ],
-            names=["image_id", "shingles"],
+            names=["image_id", "img_shingles", "cap_shingles"],
+        )
+        no_counts = SimpleNamespace(
+            value=(np.empty(0, np.int64), np.empty(0, np.int32))
         )
 
-        def candidate_pairs(fn):
+        def candidate_pairs(cfg):
+            fn = udfs.make_multi_band_fn(cfg, 1, no_counts)
             buckets = defaultdict(set)
             for out in fn(iter([batch])):
                 for iid, band, h in zip(*(c.to_pylist() for c in out.columns)):
-                    buckets[(band, h)].add(iid)
+                    if band < cfg.num_bands:  # the combined family
+                        buckets[(band, h)].add(iid)
             return {
                 (a, b) for m in buckets.values() for a in m for b in m if a < b
             }
 
         cfg = SketchConfig()
         assert (cfg.num_bands, cfg.rows_per_band) == (15, 4)
-        banded = candidate_pairs(udfs.make_band_fn(cfg))
-        single = candidate_pairs(udfs.make_band_fn(cfg, 0, 1, 4))
+        banded = candidate_pairs(cfg)
+        single = candidate_pairs(replace(cfg, num_bands=1))
         hit_b = sum(p in banded for p in planted)
         hit_s = sum(p in single for p in planted)
         assert hit_b >= 34

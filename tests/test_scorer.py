@@ -243,8 +243,9 @@ def _pair_cases(rng, n=200):
     counts = {int(s): int(c) for s, c in zip(universe, rng.poisson(1.5, universe.size) + 2)}
     del counts[missing]
     rows = []
-    # a shared shingle absent from the counts counts toward |∩| (here it
-    # lifts |∩| to the prefilter bound) and is dropped from inter_cnt
+    # a shared shingle absent from the counts (the cnt ≥ 2 slice) occurs
+    # once: it counts toward |∩| (here it lifts |∩| to the prefilter bound)
+    # and enters inter_cnt with count 1
     rows.append(([missing, *universe[1:8]], [missing, universe[1], *universe[50:60]]))
     rows.append((list(universe[100:110]), list(universe[200:220])))  # empty ∩
     # |∩| = score_min_contain·total exactly (2 = 0.25·8) passes; one shared
@@ -260,29 +261,38 @@ def _pair_cases(rng, n=200):
     return rows, counts
 
 
-def _pair_batch(rows):
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array([f"a{i:05d}" for i in range(len(rows))]),
-            pa.array([f"b{i:05d}" for i in range(len(rows))]),
-            pa.array([min(len(a), len(b)) for a, b in rows], pa.int32()),
-            pa.array([a for a, _ in rows], pa.list_(pa.int64())),
-            pa.array([b for _, b in rows], pa.list_(pa.int64())),
-        ],
-        names=["id_a", "id_b", "total_kmers", "sh_a", "sh_b"],
-    )
+def _pair_batch(rows, counts=None):
+    """The kernel's input rows; with ``counts``, also the ``sh_cnt`` column
+    the kernel reads above the broadcast cap (sh_a's shingles that have a
+    count, with it)."""
+    cols = {
+        "id_a": pa.array([f"a{i:05d}" for i in range(len(rows))]),
+        "id_b": pa.array([f"b{i:05d}" for i in range(len(rows))]),
+        "total_kmers": pa.array([min(len(a), len(b)) for a, b in rows], pa.int32()),
+        "sh_a": pa.array([a for a, _ in rows], pa.list_(pa.int64())),
+        "sh_b": pa.array([b for _, b in rows], pa.list_(pa.int64())),
+    }
+    if counts is not None:
+        cols["sh_cnt"] = pa.array(
+            [
+                [{"shingle": x, "cnt": counts[x]} for x in a if x in counts]
+                for a, _ in rows
+            ],
+            udfs.INTER_CNT_TYPE,
+        )
+    return pa.RecordBatch.from_arrays(list(cols.values()), names=list(cols))
 
 
 def _reference(batch, counts, cfg):
-    """np.intersect1d, the size prefilter, a dict lookup of the counts,
-    then the whole-batch scorer."""
+    """np.intersect1d, the size prefilter, a dict lookup of the counts
+    (absent: 1), then the whole-batch scorer."""
     d = batch.to_pydict()
     keep, inter_cnt = [], []
     for i, (a, b, t) in enumerate(zip(d["sh_a"], d["sh_b"], d["total_kmers"])):
         inter = np.intersect1d(a, b)
         if inter.size < cfg.score_min_contain * t:
             continue
-        ic = [(int(s), counts[int(s)]) for s in inter if int(s) in counts]
+        ic = [(int(s), counts.get(int(s), 1)) for s in inter]
         if ic:
             keep.append(i)
             inter_cnt.append(ic)
@@ -318,45 +328,28 @@ def _bc(counts):
 
 
 def test_pair_shingles_kernel_matches_reference():
-    """The fused kernel ≡ intersect1d + dict lookup + scorer, on a sliced
-    batch (nonzero list offsets) with high-bit shingles and the edge rows."""
+    """The fused kernel ≡ intersect1d + dict lookup + scorer, with the counts
+    from the broadcast and from the rows' own ``sh_cnt``, on a sliced batch
+    (nonzero list offsets) with high-bit shingles and the edge rows."""
     rng = np.random.default_rng(8)
     cfg = SketchConfig()
     rows, counts = _pair_cases(rng)
-    full = _pair_batch([([], [])] * 3 + rows)
+    full = _pair_batch([([], [])] * 3 + rows, counts)
     batch = full.slice(3)
     assert batch.column(3).offset == 3
-    got = _kernel_frame(udfs.make_pair_shingles_fn(cfg, _bc(counts)), batch)
     want = _reference(batch, counts, cfg)
+    from_bc = udfs.make_pair_shingles_fn(cfg, _bc(counts))
+    got = _kernel_frame(from_bc, batch.drop_columns(["sh_cnt"]))
     assert list(got.columns) == [f.name for f in udfs.PAIR_SHINGLES_PA_SCHEMA]
     pd.testing.assert_frame_equal(got, want)
+    pd.testing.assert_frame_equal(
+        _kernel_frame(udfs.make_pair_shingles_fn(cfg), batch), want
+    )
     # the edge rows (ids a00003-a00006, after the three sliced-off rows)
     ids = set(got["id_a"])
-    assert got["id_a"][0] == "a00003" and len(got["inter_cnt"][0]) == 1
+    assert got["id_a"][0] == "a00003"
+    assert sorted(c for _, c in got["inter_cnt"][0])[0] == 1  # missing: once
+    assert len(got["inter_cnt"][0]) == 2
     assert "a00004" not in ids  # empty intersection
     assert "a00005" in ids and "a00006" not in ids  # prefilter boundary
     assert set(got["adjust_status"]) >= {"high", "low"}
-
-
-def test_pair_shingles_join_path_scores_the_same():
-    """Without a broadcast the kernel takes regrouped (…, inter_cnt) rows
-    and must give the same rows as the fused path."""
-    rng = np.random.default_rng(9)
-    cfg = SketchConfig()
-    rows, counts = _pair_cases(rng, n=60)
-    batch = _pair_batch(rows)
-    fused = _kernel_frame(udfs.make_pair_shingles_fn(cfg, _bc(counts)), batch)
-    regrouped = pa.RecordBatch.from_arrays(
-        [
-            pa.array(fused["id_a"]),
-            pa.array(fused["id_b"]),
-            pa.array(fused["total_kmers"], pa.int32()),
-            pa.array(
-                [[{"shingle": s, "cnt": c} for s, c in reversed(ic)] for ic in fused["inter_cnt"]],
-                udfs.INTER_CNT_TYPE,
-            ),
-        ],
-        names=["id_a", "id_b", "total_kmers", "inter_cnt"],
-    ).slice(1)
-    got = _kernel_frame(udfs.make_pair_shingles_fn(cfg), regrouped)
-    pd.testing.assert_frame_equal(got, fused.iloc[1:].reset_index(drop=True))
