@@ -11,74 +11,67 @@ Each iteration:
   3. ``localCheckpoint`` truncates the plan; convergence is an exact
      count of changed labels == 0.
 
-Inputs/outputs are plain DataFrames, so the same routine serves any edge set
-(dedup clusters here, but any graph at 100 TB scale with the same shuffles).
+Inputs/outputs are plain DataFrames, so the one routine labels both of the
+pipeline's clusterings (rescored's preliminary clusters over the tau edges,
+and the clusters stage over the gated edges), and any graph at 100 TB scale
+with the same shuffles.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-# edge-count cutoff for the driver fast path when a caller passes none; read
-# at call time, so setting it to 0 forces the distributed propagation loop
-# (the path that runs at 100-TB scale) through a whole pipeline run
+# edge-count cutoff for the driver fast path, read at call time: setting it
+# to 0 forces the distributed propagation loop (the path that runs at 100-TB
+# scale) through a whole pipeline run
 DEFAULT_DRIVER_THRESHOLD = 2_000_000
+# the pipeline's id columns: node ids, and the two endpoints of an edge
+NODE, SRC, DST = "image_id", "id_a", "id_b"
+MAX_ITER = 50
 
 
-def connected_components(
-    nodes: DataFrame | None,
-    edges: DataFrame,
-    node_col: str = "image_id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iter: int = 50,
-    driver_threshold: int | None = None,
-) -> DataFrame:
-    """Returns (node_col, cluster_id) where cluster_id = min node id in the
-    component. Deterministic; independent of input partitioning.
+def connected_components(nodes: DataFrame | None, edges: DataFrame) -> DataFrame:
+    """Returns (image_id, cluster_id) where cluster_id = min node id in the
+    component. Deterministic; independent of input partitioning. ``edges``
+    may carry other columns beside id_a and id_b; only those two are read.
 
     ``nodes=None`` labels only the edge endpoints (no isolated nodes) —
     callers whose node universe IS the edge set (e.g. first-pass pair
     participants) skip the node left-join and, on the driver path, get a
     single Arrow local table with no Spark-side joins at all.
 
-    Node and edge id columns MUST be non-null strings (the framework's
-    image_ids are): both paths label a component by its MIN id, and "min"
-    is lexicographic only for strings — the driver path factorizes ids into
-    a fixed-width unicode array (so e.g. int ids would sort '10' < '2'
-    there but 2 < 10 in the distributed F.min path). The driver path
-    asserts this; pass string-cast columns for other id types.
+    Node and edge ids MUST be non-null strings (the framework's image_ids
+    are): both paths label a component by its MIN id, and "min" is
+    lexicographic only for strings — the driver path factorizes ids into a
+    fixed-width unicode array (so e.g. int ids would sort '10' < '2' there
+    but 2 < 10 in the distributed F.min path). The driver path asserts this.
 
     Adaptive execution (same spirit as AQE's broadcast decision): when the
-    edge set is below ``driver_threshold`` the component labels are computed
-    driver-side with vectorized min-label propagation over the Arrow-collected
-    edge codes and joined back — zero iterative shuffles. Above it, the
-    distributed propagation loop runs. Both paths produce identical labels.
+    edge set is at most ``DEFAULT_DRIVER_THRESHOLD`` rows the component
+    labels are computed driver-side with vectorized min-label propagation
+    over the Arrow-collected edge codes: zero iterative shuffles, and the
+    labels, which already sit on the driver, carry a broadcast hint, so a
+    consumer join ships them instead of shuffling its other side. Above it,
+    the distributed propagation loop runs, with no hint. Both paths produce
+    identical labels.
     """
     # Path probe and edge fetch in ONE action: limit(k+1).toArrow() bounds
     # the driver transfer at threshold+1 id pairs (~tens of MB as Arrow
     # columns — no Row objects), and when the probe says "small" the same
     # table IS the edge list, so the small-graph case pays a single job
     # instead of a count followed by a collect.
-    if driver_threshold is None:
-        driver_threshold = DEFAULT_DRIVER_THRESHOLD
-    pairs = edges.select(src_col, dst_col)
-    probe = pairs.limit(driver_threshold + 1).toArrow()
-    if probe.num_rows <= driver_threshold:
-        return _driver_cc(
-            nodes, edges.sparkSession, probe, node_col, src_col, dst_col
-        )
-    return _distributed_cc(
-        nodes, edges, node_col, src_col, dst_col, max_iter
-    )
+    threshold = DEFAULT_DRIVER_THRESHOLD
+    probe = edges.select(SRC, DST).limit(threshold + 1).toArrow()
+    if probe.num_rows <= threshold:
+        return _driver_cc(nodes, edges.sparkSession, probe)
+    return _distributed_cc(nodes, edges)
 
 
-def _check_edge_tbl(edge_tbl, src_col: str, dst_col: str) -> None:
+def _check_edge_tbl(edge_tbl) -> None:
     import pyarrow as pa
 
-    for col in (src_col, dst_col):
+    for col in (SRC, DST):
         t = edge_tbl.schema.field(col).type
         if not (pa.types.is_string(t) or pa.types.is_large_string(t)):
             raise TypeError(
@@ -93,17 +86,16 @@ def _check_edge_tbl(edge_tbl, src_col: str, dst_col: str) -> None:
             )
 
 
-def _numpy_cc(edge_tbl, src_col: str, dst_col: str):
+def _numpy_cc(edge_tbl):
     """Core driver-side CC: factorize string ids into codes (np.unique on a
     fixed-width string array — C-speed sort, no per-edge Python), then
     min-label hooking + full pointer-jumping compression until fixpoint.
-    Returns (uniq, label, src_codes) — uniq[label] is each node's cluster
-    id (lexicographic-min member, code order = np.unique sort order) and
-    uniq[label[src_codes]] labels each EDGE by gather, for free."""
+    Returns (uniq, label): uniq[label] is each node's cluster id
+    (lexicographic-min member, code order = np.unique sort order)."""
     import numpy as np
 
-    a_obj = edge_tbl.column(src_col).to_numpy(zero_copy_only=False)
-    b_obj = edge_tbl.column(dst_col).to_numpy(zero_copy_only=False)
+    a_obj = edge_tbl.column(SRC).to_numpy(zero_copy_only=False)
+    b_obj = edge_tbl.column(DST).to_numpy(zero_copy_only=False)
     both = np.concatenate([a_obj, b_obj]).astype("U")
     uniq, codes = np.unique(both, return_inverse=True)
     ca, cb = codes[: a_obj.size], codes[a_obj.size :]
@@ -120,126 +112,50 @@ def _numpy_cc(edge_tbl, src_col: str, dst_col: str):
             label = jumped
         if np.array_equal(label, before):
             break
-    return uniq, label, ca
+    return uniq, label
 
 
-def _driver_cc(
-    nodes: DataFrame | None,
-    spark,
-    edge_tbl,
-    node_col: str,
-    src_col: str,
-    dst_col: str,
-) -> DataFrame:
+def _driver_cc(nodes: DataFrame | None, spark, edge_tbl) -> DataFrame:
     """Vectorized driver-side CC over an Arrow edge table (see _numpy_cc).
     Replaces the dict union-find whose per-edge Python loop was ~2 s of
     core-count-invariant driver time at bench scale (serial floor in the
-    scaling legs)."""
+    scaling legs). The label table is broadcast-hinted."""
     import pandas as pd
 
-    _check_edge_tbl(edge_tbl, src_col, dst_col)
+    _check_edge_tbl(edge_tbl)
+    schema = f"{NODE} string, cluster_id string"
     if edge_tbl.num_rows:
-        uniq, label, _ = _numpy_cc(edge_tbl, src_col, dst_col)
-        cols = {node_col: uniq, "cluster_id": uniq[label]}
-        lbl_df = spark.createDataFrame(pd.DataFrame(cols))
+        uniq, label = _numpy_cc(edge_tbl)
+        pdf = pd.DataFrame({NODE: uniq, "cluster_id": uniq[label]})
+        lbl_df = spark.createDataFrame(pdf, schema)
     else:
-        lbl_df = spark.createDataFrame([], f"{node_col} string, cluster_id string")
+        lbl_df = spark.createDataFrame([], schema)
+    lbl_df = F.broadcast(lbl_df)
     if nodes is None:
         return lbl_df
     return (
-        nodes.select(node_col)
-        .join(lbl_df, node_col, "left")
-        .select(
-            node_col,
-            F.coalesce(F.col("cluster_id"), F.col(node_col)).alias("cluster_id"),
-        )
+        nodes.select(NODE)
+        .join(lbl_df, NODE, "left")
+        .select(NODE, F.coalesce(F.col("cluster_id"), F.col(NODE)).alias("cluster_id"))
     )
 
 
-def pair_cluster_labels(
-    edges: DataFrame,
-    node_col: str = "image_id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    driver_threshold: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Label every EDGE and every endpoint NODE with its connected
-    component, in one pass.
-
-    Returns ``(pair_df, node_df)``:
-      pair_df — every column of ``edges`` plus ``pre_cluster``, one row per
-      input edge, labeled by the lexicographic-min member of its component
-      (extra edge columns, e.g. a similarity, ride through, so callers need
-      no join back onto the edge table);
-      node_df — (node_col, pre_cluster) over the edge endpoints.
-
-    Below ``driver_threshold`` edges, both tables come out of ONE driver
-    numpy CC pass over the collected Arrow edge table: the edge→label
-    assignment is a vectorized gather (uniq[label[src_codes]]), so the
-    caller pays a single bounded collect and ZERO Spark joins or eager
-    checkpoints. Both tables then carry a broadcast hint: they hold at most
-    ``driver_threshold`` rows and already sit on the driver, so a consumer
-    join ships them instead of shuffling its other side. Above the
-    threshold, node labels come from the distributed propagation loop and
-    pair labels from one shuffle join on ``src_col`` (both edge endpoints
-    share a component, so one side suffices), with no hint. String-id
-    contract identical to connected_components."""
-    import pandas as pd
-
-    spark = edges.sparkSession
-    if driver_threshold is None:
-        driver_threshold = DEFAULT_DRIVER_THRESHOLD
-    probe = edges.limit(driver_threshold + 1).toArrow()
-    if probe.num_rows > driver_threshold:
-        node_df = _distributed_cc(
-            None, edges, node_col, src_col, dst_col, 50
-        ).withColumnRenamed("cluster_id", "pre_cluster")
-        pair_df = edges.join(
-            node_df.withColumnRenamed(node_col, src_col), src_col
-        ).select(*edges.columns, "pre_cluster")
-        return pair_df, node_df
-    _check_edge_tbl(probe, src_col, dst_col)
-    label_field = T.StructField("pre_cluster", T.StringType())
-    pair_schema = T.StructType(edges.schema.fields + [label_field])
-    node_schema = T.StructType(
-        [T.StructField(node_col, T.StringType()), label_field]
-    )
-    if probe.num_rows == 0:
-        pair_pdf, node_pdf = [], []
-    else:
-        uniq, label, ca = _numpy_cc(probe, src_col, dst_col)
-        node_pdf = pd.DataFrame({node_col: uniq, "pre_cluster": uniq[label]})
-        pair_pdf = probe.to_pandas()
-        pair_pdf["pre_cluster"] = uniq[label[ca]]
-    return (
-        F.broadcast(spark.createDataFrame(pair_pdf, pair_schema)),
-        F.broadcast(spark.createDataFrame(node_pdf, node_schema)),
-    )
-
-
-def _distributed_cc(
-    nodes: DataFrame | None,
-    edges: DataFrame,
-    node_col: str,
-    src_col: str,
-    dst_col: str,
-    max_iter: int,
-) -> DataFrame:
+def _distributed_cc(nodes: DataFrame | None, edges: DataFrame) -> DataFrame:
     sym = (
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .union(edges.select(F.col(dst_col).alias("u"), F.col(src_col).alias("v")))
+        edges.select(F.col(SRC).alias("u"), F.col(DST).alias("v"))
+        .union(edges.select(F.col(DST).alias("u"), F.col(SRC).alias("v")))
         .distinct()
     )
     if nodes is None:
-        node_src = sym.select(F.col("u").alias(node_col)).distinct()
+        node_src = sym.select(F.col("u").alias(NODE)).distinct()
     else:
-        node_src = nodes.select(node_col)
+        node_src = nodes.select(NODE)
     labels = node_src.select(
-        F.col(node_col).alias("u"), F.col(node_col).alias("lbl")
+        F.col(NODE).alias("u"), F.col(NODE).alias("lbl")
     ).localCheckpoint()
     sym = sym.localCheckpoint()
 
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         nbr = (
             sym.join(labels.withColumnRenamed("u", "v2"), sym["v"] == F.col("v2"))
             .select(F.col("u"), F.col("lbl"))
@@ -275,14 +191,14 @@ def _distributed_cc(
         if changed == 0:
             break
     else:
-        # loop exhausted max_iter without changed == 0: labels may still be
+        # loop exhausted MAX_ITER without changed == 0: labels may still be
         # mid-propagation (split components). Pointer jumping converges in
         # O(log diameter) iterations, so hitting 50 means a pathological
         # graph — surface it instead of returning silently-wrong clusters.
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} iterations "
+            f"connected_components did not converge in {MAX_ITER} iterations "
             f"(last delta: {changed} labels still changing)"
         )
     return labels.select(
-        F.col("u").alias(node_col), F.col("lbl").alias("cluster_id")
+        F.col("u").alias(NODE), F.col("lbl").alias("cluster_id")
     )

@@ -4,10 +4,11 @@ graph, one runner, two materialisers.
 ``GRAPH`` lists every node once: its name, its inputs and what the volatile
 path does with it. ``DedupStages.run_graph`` submits each node as soon as its
 inputs are ready, so independent stages run as concurrent Spark jobs
-(shingle_counts ∥ the sketch row count, then gated ∥ rescored, with clusters
-starting as soon as gated is done). The runner owns that order and overlap,
-times the volatile barriers and labels each stage's Spark jobs with the stage
-name. What materialising a stage means belongs to the materialiser:
+(shingle_counts ∥ the sketch row count, then clusters ∥ rescored, both
+starting as soon as the pair barrier is done). The runner owns that order
+and overlap, times the volatile barriers and labels each stage's Spark jobs
+with the stage name. What materialising a stage means belongs to the
+materialiser:
 
 - ``Durable`` (``DedupPipeline.run``): each stage commits a table through
   StageCatalog, or is skipped when a committed manifest matches the config
@@ -23,15 +24,20 @@ Stages:
   2. shingle_counts corpus-wide shingle multiplicities        (A1, sketch.rs:690-731)
   3. candidates     MinHash/LSH banding → candidate pairs     (replaces all-pairs contain.rs:266-292)
   4. pair_shingles  pair → intersecting shingles + corpus multiplicities (J1, contain.rs:632-652)
-                    + first-pass corrected-containment scores (E1/E6/E7, contain.rs:601-745),
-                    one Arrow kernel per partition
+                    + first-pass corrected-containment scores (E1/E6/E7, contain.rs:601-745)
+                    + tau, SimHash hamming and suffix-automaton LCS gate
+                    (north-rule verification), one Arrow kernel per partition
   5. scored         the score columns of pair_shingles        (a projection, no barrier)
-  6. gated          tau + SimHash hamming + suffix-array LCS  (north-rule verification; cluster edges)
+  6. gated          the pairs that pass the gate              (a filter, no barrier; cluster edges)
   7. rescored       per-cluster winner-table reassignment + derep, one cogrouped
                     Arrow kernel per bucket of clusters (contain.rs:410-459,637-645,353-375)
   8. verified       rescored ∩ gated — the report table       (second-pass results, contain.rs:637-645)
-  9. clusters       iterative connected components over GATED edges
+  9. clusters       connected components over GATED edges
  10. survivors      argmax representative per cluster         (winner argmax, contain.rs:410-459)
+
+Both clusterings, rescored's preliminary clusters over the tau edges and the
+clusters stage over the gated edges, go through one function,
+``cc.connected_components``.
 
 Clustering uses first-pass gated edges, not rescored ones: sylph's winner
 pass reattributes k-mers WITHIN one sample's result set — it refines
@@ -54,6 +60,10 @@ Scale design notes (for the 10^12-row cluster, tested at local[*]):
   shingles nothing is broadcast: one explode ⋈ shingle_counts → regroup
   per image gives each image its own counts, which both kernels read in
   its place;
+- the pair kernel reads both items' captions, so the captions of every
+  candidate pair cross into Python, not only those of the pairs the gate's
+  LCS looks at; in exchange the gate needs no join and no Python crossing
+  of its own;
 - every stage is a materialized columnar table: column pruning means later
   stages never reread ``bytes``.
 """
@@ -76,7 +86,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import codecs, udfs
-from .cc import connected_components, pair_cluster_labels
+from .cc import connected_components
 from .config import SketchConfig
 from .io.catalog import StageCatalog
 from .session import heavy_payload_batches
@@ -121,14 +131,27 @@ def input_fingerprint(images: DataFrame) -> str:
 def lcs_prefilter_stats(
     spark: SparkSession, scored: DataFrame, sketches: DataFrame, cfg: SketchConfig
 ) -> dict:
-    """Pair volume entering the LCS gate vs actually reaching the Python
-    suffix automaton (after the in-UDF equal-caption short-circuit) — ONE
-    aggregation, no UDF run (the bench counter for the short-circuit's
-    effectiveness)."""
+    """Pair volume entering the LCS gate (tau and SimHash hamming passed)
+    vs actually reaching the Python suffix automaton (after the kernel's
+    equal-caption short-circuit) — ONE aggregation over ``scored`` and the
+    sketches' SimHash and captions, no kernel run (the bench counter for the
+    short-circuit's effectiveness). It states in the JVM the cut the pair
+    kernel applies before its LCS: ``hamming_pairs`` equals the
+    pair_shingles rows whose ``lcs`` is not null."""
+    prof = sketches.select("image_id", "simhash", "caption")
+
+    def side(s: str) -> DataFrame:
+        return prof.withColumnsRenamed(
+            {"image_id": f"id_{s}", "simhash": f"sim_{s}", "caption": f"cap_{s}"}
+        )
+
+    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
     automaton = F.col("cap_a") != F.col("cap_b")
     row = (
-        DedupStages(spark, cfg)
-        ._gate_base(scored, sketches)
+        scored.filter(F.col("adj_sim") >= cfg.tau)
+        .join(side("a"), "id_a")
+        .join(side("b"), "id_b")
+        .filter(hamming <= cfg.simhash_max_hamming)
         .agg(
             F.count(F.lit(1)).alias("hamming_pairs"),
             F.sum(automaton.cast("long")).alias("lcs_udf_pairs"),
@@ -174,17 +197,13 @@ GRAPH = (
         "checkpoint",
         "cands+pair_shingles",
     ),
-    # the first-pass scores are pair_shingles columns: scored selects them
+    # the first-pass scores and the gate are pair_shingles columns: scored
+    # selects them and gated filters on them
     Node("scored", ("pair_shingles",), "lazy"),
-    Node("gated", ("scored", "sketches"), "checkpoint", "gated"),
-    Node(
-        "rescored",
-        ("scored", "pair_shingles", "sketches", "n_items"),
-        "checkpoint",
-        "rescored",
-    ),
+    Node("gated", ("pair_shingles",), "lazy"),
+    Node("rescored", ("pair_shingles", "sketches", "n_items"), "checkpoint", "rescored"),
     # verified's one consumer (survivors' rep_score) references it once and
-    # both its join inputs are checkpointed: the tiny join fuses into the
+    # both its join inputs read checkpoints: the tiny join fuses into the
     # survivors job instead of paying its own barrier
     Node("verified", ("rescored", "gated"), "lazy"),
     # the CC driver loop (bounded Arrow collect + numpy) materialises itself
@@ -378,24 +397,33 @@ class DedupStages:
         self, candidates: DataFrame, sketches: DataFrame, counts: DataFrame, vocab
     ) -> DataFrame:
         """(id_a, id_b) → (id_a, id_b, total_kmers, inter_cnt) + the
-        first-pass score columns, where inter_cnt pairs every shingle the
-        two items share with its corpus multiplicity. Materialized ONCE and
-        consumed by both scoring passes; ``scored`` is a projection of it.
+        first-pass score columns + the gate columns (hamming, lcs, gated),
+        where inter_cnt pairs every shingle the two items share with its
+        corpus multiplicity. Materialized ONCE and consumed by both scoring
+        passes and both clusterings; ``scored`` is a projection of it and
+        ``gated`` a filter.
 
-        The pair table joins the two items' shingle ARRAYS (it shuffles
-        pairs, not pair × shingle rows: the probe-join J1, contain.rs:632-652,
-        without a 10⁹-row exchange), and one mapInArrow kernel
-        (udfs.make_pair_shingles_fn) intersects them, applies the size
-        prefilter, looks up the multiplicities and scores every pair: no
-        explode, no regrouping aggregate and no second crossing into
-        Python. The counts come from the ``vocab`` broadcast or, above its
-        cap, from side a's ``sh_cnt`` (every shared shingle is in a)."""
-        cols = ["image_id", "n_shingles", "shingles"]
+        The pair table joins the two items' shingle ARRAYS, SimHash and
+        captions (it shuffles pairs, not pair × shingle rows: the probe-join
+        J1, contain.rs:632-652, without a 10⁹-row exchange), and one
+        mapInArrow kernel (udfs.make_pair_shingles_fn) intersects them,
+        applies the size prefilter, looks up the multiplicities, scores and
+        gates every pair: no explode, no regrouping aggregate and no second
+        crossing into Python. The counts come from the ``vocab`` broadcast
+        or, above its cap, from side a's ``sh_cnt`` (every shared shingle is
+        in a)."""
+        cols = ["image_id", "n_shingles", "shingles", "simhash", "caption"]
         prof_a = self._with_sh_cnt(sketches, cols, counts, vocab)
 
         def side(df: DataFrame, s: str) -> DataFrame:
             return df.withColumnsRenamed(
-                {"image_id": f"id_{s}", "n_shingles": f"n_{s}", "shingles": f"sh_{s}"}
+                {
+                    "image_id": f"id_{s}",
+                    "n_shingles": f"n_{s}",
+                    "shingles": f"sh_{s}",
+                    "simhash": f"sim_{s}",
+                    "caption": f"cap_{s}",
+                }
             )
 
         pairs = (
@@ -407,6 +435,10 @@ class DedupStages:
                 F.least("n_a", "n_b").alias("total_kmers"),
                 "sh_a",
                 "sh_b",
+                "sim_a",
+                "sim_b",
+                "cap_a",
+                "cap_b",
                 *prof_a.columns[len(cols) :],
             )
         )
@@ -420,11 +452,7 @@ class DedupStages:
         return pair_shingles.select(*udfs.SCORE_PA_SCHEMA.names)
 
     def _stage_rescored(
-        self,
-        scored: DataFrame,
-        pair_shingles: DataFrame,
-        sketches: DataFrame,
-        n_items: int,
+        self, pair_shingles: DataFrame, sketches: DataFrame, n_items: int
     ) -> DataFrame:
         """Two-pass winner-table rescoring (contain.rs:410-459 winner table,
         consumption at contain.rs:637-645, derep at contain.rs:353-375).
@@ -450,10 +478,13 @@ class DedupStages:
 
         Scale shape: the winner table is state local to one cluster, so the
         stage is ONE cogroup keyed by a bucket of clusters,
-        pmod(xxhash64(pre_cluster), spark.sql.shuffle.partitions). The pair
-        side is pair_shingles (intersections with multiplicities, already
-        materialized) joined to the per-pair labels; the item side is the
-        sketch shingle arrays joined to the per-node labels. Each bucket
+        pmod(xxhash64(pre_cluster), spark.sql.shuffle.partitions). The
+        preliminary clusters come from connected_components over the tau
+        edges of pair_shingles (the first-pass scores are its columns). The
+        pair side is those pair_shingles rows (intersections with
+        multiplicities, already materialized) joined to the node labels by
+        id_a, since both endpoints of an edge share a component; the item
+        side is the sketch shingle arrays joined to the same labels. Each bucket
         crosses into Python once, where udfs.make_rescore_arrow_fn ranks
         items, picks winners, counts kmers_lost, applies derep and scores
         in whole-bucket numpy: two shuffles, no explode, no aggregate. A
@@ -464,21 +495,19 @@ class DedupStages:
         so the pair keeps its first-pass score with kmers_lost = 0."""
         cfg = self.cfg
         if not cfg.winner_rescore:
-            return scored
+            return self._stage_scored(pair_shingles)
         # preliminary clusters = competition scope (first-pass edges only);
-        # below the driver threshold both label tables come out of one
-        # driver CC pass and are broadcast into the joins below, and the
-        # pair table carries adj_sim (the item-score input) through
-        pair_lab, node_lab = pair_cluster_labels(
-            scored.filter(F.col("adj_sim") >= cfg.tau).select(
-                "id_a", "id_b", "adj_sim"
-            )
+        # below the driver threshold the labels come out of one driver CC
+        # pass and are broadcast into both joins below
+        first = pair_shingles.filter(F.col("adj_sim") >= cfg.tau)
+        labels = connected_components(None, first).withColumnRenamed(
+            "cluster_id", "pre_cluster"
         )
         n_buckets = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         bucket = F.pmod(F.xxhash64("pre_cluster"), F.lit(n_buckets))
-        pairs = pair_shingles.select(
-            "id_a", "id_b", "total_kmers", "inter_cnt"
-        ).join(pair_lab, ["id_a", "id_b"]).select(
+        pairs = first.join(
+            labels.withColumnRenamed("image_id", "id_a"), "id_a"
+        ).select(
             bucket.alias("bucket"),
             "id_a",
             "id_b",
@@ -487,7 +516,7 @@ class DedupStages:
             "inter_cnt",
         )
         items = sketches.select("image_id", "shingles").join(
-            node_lab, "image_id"
+            labels, "image_id"
         ).select(bucket.alias("bucket"), "image_id", "pre_cluster", "shingles")
         return (
             pairs.groupBy("bucket")
@@ -498,64 +527,14 @@ class DedupStages:
             )
         )
 
-    def _gate_base(self, scored: DataFrame, sketches: DataFrame) -> DataFrame:
-        """tau + SimHash-hamming gate with captions attached — the input to
-        the LCS confirmation (split out so the prefilter counter can measure
-        the UDF's pair volume without running it)."""
-        cfg = self.cfg
-        prof = sketches.select("image_id", "simhash", "caption")
-        return (
-            scored.filter(F.col("adj_sim") >= cfg.tau)
-            .join(
-                prof.select(
-                    F.col("image_id").alias("id_a"),
-                    F.col("simhash").alias("sh_a"),
-                    F.col("caption").alias("cap_a"),
-                ),
-                "id_a",
-            )
-            .join(
-                prof.select(
-                    F.col("image_id").alias("id_b"),
-                    F.col("simhash").alias("sh_b"),
-                    F.col("caption").alias("cap_b"),
-                ),
-                "id_b",
-            )
-            .withColumn(
-                "hamming",
-                F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))),
-            )
-            .filter(F.col("hamming") <= cfg.simhash_max_hamming)
-            .withColumn("min_len", F.least(F.length("cap_a"), F.length("cap_b")))
-        )
-
-    def _stage_gated(self, scored: DataFrame, sketches: DataFrame) -> DataFrame:
-        """First-pass tau + the two score-independent confirmation gates
-        (SimHash hamming, suffix-array LCS on captions) — the north-rule
-        verification. These edges drive CLUSTERING; the winner rescore
-        refines attribution within them (see module docstring).
-
-        The LCS suffix-automaton call is the only per-pair Python left in
-        the hot pipeline; its volume is bounded INSIDE the vectorized UDF
-        (udfs.make_lcs_fn): equal-caption pairs — the dominant duplicate
-        class — short-circuit to lcs = len via one whole-batch pandas
-        comparison, so only unequal-caption survivors pay the automaton.
-        (A JVM k-gram arrays_overlap prefilter and a DataFrame-level
-        eq/ne branch split were both measured SLOWER than the plain path
-        — gram construction costs ~3.6× the automaton call it avoids, and
-        the branch split doubles the gate's join work.)"""
-        cfg = self.cfg
-        df = self._gate_base(scored, sketches)
-        lcs_udf = F.pandas_udf(udfs.make_lcs_fn(), T.LongType())
-        df = df.withColumn("lcs", lcs_udf(F.col("cap_a"), F.col("cap_b"))).filter(
-            (F.col("min_len") == 0)
-            | (
-                (F.col("lcs") >= F.least(F.lit(cfg.lcs_min_len), F.col("min_len")))
-                & (F.col("lcs") >= cfg.lcs_min_frac * F.col("min_len"))
-            )
-        )
-        return df.select("id_a", "id_b", "hamming", "lcs")
+    def _stage_gated(self, pair_shingles: DataFrame) -> DataFrame:
+        """The pairs that pass first-pass tau and the two score-independent
+        confirmation gates (SimHash hamming, suffix-automaton LCS on
+        captions) — the north-rule verification, decided for every pair in
+        the pair kernel (udfs._gate). These edges drive CLUSTERING; the
+        winner rescore refines attribution within them (see module
+        docstring)."""
+        return pair_shingles.filter("gated").select("id_a", "id_b", "hamming", "lcs")
 
     def _stage_verified(self, rescored: DataFrame, gated: DataFrame) -> DataFrame:
         """Second-pass report table (contain.rs:637-645 re-filtered results):
@@ -565,8 +544,7 @@ class DedupStages:
         )
 
     def _stage_clusters(self, sketches: DataFrame, gated: DataFrame) -> DataFrame:
-        nodes = sketches.select("image_id")
-        return connected_components(nodes, gated.select("id_a", "id_b"))
+        return connected_components(sketches.select("image_id"), gated)
 
     def _stage_survivors(self, clusters: DataFrame, verified: DataFrame) -> DataFrame:
         """One representative per cluster = argmax by mean verified
@@ -721,8 +699,8 @@ def run_volatile(
     ``stage_times``: optional dict filled with the wall seconds of each
     eager barrier (see ``GRAPH``) — the per-stage attribution behind the
     scaling-efficiency evidence (BENCH/BASELINE.md). Lazy stages
-    (candidates, scored, verified, survivors) are fused by Catalyst into
-    the next barrier and show up there."""
+    (candidates, scored, gated, verified, survivors) are fused by Catalyst
+    into the next barrier and show up there."""
     return DedupStages(spark, cfg).run_graph(images, Volatile(), stage_times)
 
 

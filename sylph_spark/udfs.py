@@ -1,18 +1,20 @@
 """Arrow-vectorized UDFs wrapping the numpy kernels (SURVEY.md §2.9).
 
-Everything crosses the JVM↔Python boundary in Arrow batches (mapInPandas /
-applyInPandas / pandas_udf) — the Spark analog of the reference's AVX2 batch
-seeding (/root/reference/src/avx2_seeding.rs:33-148). No row-at-a-time
+Everything crosses the JVM↔Python boundary in Arrow batches (mapInArrow
+and one cogrouped applyInArrow) — the Spark analog of the reference's AVX2
+batch seeding (avx2_seeding.rs:33-148). No row-at-a-time
 Python UDFs anywhere.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from . import codecs
 from . import kernels as K
@@ -691,7 +693,13 @@ INTER_CNT_TYPE = pa.list_(
 )
 # the pair_shingles stage: the pair's shared shingles with their corpus
 # multiplicities (inter_cnt), then every first-pass score column, so the
-# scored stage is a projection of it
+# scored stage is a projection of it, then the verification gate's columns
+# (_gate), so the gated stage is a filter of it
+GATE_PA_FIELDS = [
+    pa.field("hamming", pa.int32()),
+    pa.field("lcs", pa.int64()),
+    pa.field("gated", pa.bool_()),
+]
 PAIR_SHINGLES_PA_SCHEMA = pa.schema(
     [SCORE_PA_SCHEMA.field(n) for n in ("id_a", "id_b", "total_kmers")]
     + [pa.field("inter_cnt", INTER_CNT_TYPE)]
@@ -700,13 +708,15 @@ PAIR_SHINGLES_PA_SCHEMA = pa.schema(
         for f in SCORE_PA_SCHEMA
         if f.name not in ("id_a", "id_b", "total_kmers")
     ]
+    + GATE_PA_FIELDS
 )
 PAIR_SHINGLES_SCHEMA = (
     "id_a string, id_b string, total_kmers int, "
     "inter_cnt array<struct<shingle:long,cnt:int>>, contain_count int, "
     "naive_sim double, adj_sim double, adjust_status string, lambda double, "
     "median_cov double, kmers_lost int, "
-    "ani_lo double, ani_hi double, lambda_lo double, lambda_hi double"
+    "ani_lo double, ani_hi double, lambda_lo double, lambda_hi double, "
+    "hamming int, lcs bigint, gated boolean"
 )
 
 
@@ -743,13 +753,53 @@ def _shared_shingles(batch: pa.RecordBatch, counts, min_contain: float):
     return pid_a[sel], fa[sel], _multiplicity(*counts, fa[sel])
 
 
+def _gate(
+    batch: pa.RecordBatch, keep: pa.Array, adj: np.ndarray, cfg: SketchConfig, lcs_fn
+) -> list:
+    """The verification gate (north rule) of the scored rows ``keep`` of a
+    pair batch (sim_a, sim_b, cap_a, cap_b) with first-pass similarity
+    ``adj``, as the columns
+    ``hamming``, the SimHash distance (popcount of the xor); ``lcs``, the
+    caption LCS through ``lcs_fn`` (make_lcs_fn), null unless the row
+    clears tau and ``simhash_max_hamming``; and ``gated``, such a row whose
+    lcs ≥ min(lcs_min_len, min_len) and ≥ lcs_min_frac · min_len, or whose
+    shorter caption is empty. ``min_len`` counts characters (a null caption
+    gives NaN, which fails the rule)."""
+    def col(name: str) -> pa.Array:
+        return batch.column(name).filter(keep)
+
+    xor = col("sim_a").to_numpy() ^ col("sim_b").to_numpy()
+    bits = np.unpackbits(xor.view(np.uint8)).reshape(-1, 64)
+    hamming = bits.sum(axis=1, dtype=np.int32)
+    ok = (adj >= cfg.tau) & (hamming <= cfg.simhash_max_hamming)
+    sel = pa.array(ok)
+    cap_a, cap_b = col("cap_a").filter(sel), col("cap_b").filter(sel)
+    v = lcs_fn(cap_a.to_pandas(), cap_b.to_pandas()).to_numpy()
+    min_len = np.minimum(
+        pc.utf8_length(cap_a).to_numpy(zero_copy_only=False),
+        pc.utf8_length(cap_b).to_numpy(zero_copy_only=False),
+    )
+    lcs = np.zeros(ok.size, np.int64)
+    lcs[ok] = v
+    gated = np.zeros(ok.size, bool)
+    gated[ok] = (min_len == 0) | (
+        (v >= np.minimum(cfg.lcs_min_len, min_len)) & (v >= cfg.lcs_min_frac * min_len)
+    )
+    return [pa.array(hamming, pa.int32()), pa.array(lcs, mask=~ok), pa.array(gated)]
+
+
 def _pair_shingles_batch(
-    batch: pa.RecordBatch, pid: np.ndarray, shingle: np.ndarray, cnt: np.ndarray, score
+    batch: pa.RecordBatch,
+    pid: np.ndarray,
+    shingle: np.ndarray,
+    cnt: np.ndarray,
+    score,
+    gate,
 ) -> pa.RecordBatch:
     """Rows of ``batch`` with at least one (pid, shingle, cnt) entry →
-    pair_shingles rows: ids, total_kmers, inter_cnt and the first-pass score
+    pair_shingles rows: ids, total_kmers, inter_cnt, the first-pass score
     columns from ``score`` (every row has a nonempty coverage vector, so the
-    scorer keeps every row, in order)."""
+    scorer keeps every row, in order) and the gate columns from ``gate``."""
     idx = batch.schema.get_field_index
     cc = np.bincount(pid, minlength=batch.num_rows)
     live = cc > 0
@@ -779,6 +829,8 @@ def _pair_shingles_batch(
     )
     cols = {f.name: scored.column(i) for i, f in enumerate(SCORE_PA_SCHEMA)}
     cols["inter_cnt"] = inter_cnt
+    gated = gate(batch, keep, cols["adj_sim"].to_numpy())
+    cols.update(zip((f.name for f in GATE_PA_FIELDS), gated))
     return pa.RecordBatch.from_arrays(
         [cols[f.name] for f in PAIR_SHINGLES_PA_SCHEMA], schema=PAIR_SHINGLES_PA_SCHEMA
     )
@@ -786,19 +838,23 @@ def _pair_shingles_batch(
 
 def make_pair_shingles_fn(cfg: SketchConfig, counts_bc=None):
     """mapInArrow kernel of the pair_shingles stage: (id_a, id_b,
-    total_kmers, sh_a, sh_b[, sh_cnt]) → PAIR_SHINGLES_SCHEMA rows, the J1
-    probe join (contain.rs:632-652) and the first-pass E-chain scoring
-    (contain.rs:601-745) in one crossing into Python: intersect, apply the
+    total_kmers, sh_a, sh_b, sim_a, sim_b, cap_a, cap_b[, sh_cnt]) →
+    PAIR_SHINGLES_SCHEMA rows, the J1 probe join (contain.rs:632-652), the
+    first-pass E-chain scoring (contain.rs:601-745) and the verification
+    gate in one crossing into Python: intersect, apply the
     ``score_min_contain`` prefilter and look up the multiplicities on flat
-    numpy buffers (``_shared_shingles``), then score. ``counts_bc`` and
-    ``sh_cnt`` are as in ``_count_table``."""
+    numpy buffers (``_shared_shingles``), score, then gate every scored row
+    (``_gate``), as sylph decides each genome pair in one pass
+    (``get_stats``, contain.rs:601-814). ``counts_bc`` and ``sh_cnt`` are as
+    in ``_count_table``."""
     score = _batch_scorer(cfg)
+    gate = partial(_gate, cfg=cfg, lcs_fn=make_lcs_fn())
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             counts = _count_table(batch, counts_bc)
             found = _shared_shingles(batch, counts, cfg.score_min_contain)
-            yield _pair_shingles_batch(batch, *found, score)
+            yield _pair_shingles_batch(batch, *found, score, gate)
 
     return fn
 
@@ -815,7 +871,6 @@ def _rescore_bucket(
     input (id_a, id_b, total_kmers, covs, kmers_lost) of the pairs that pass
     the derep filter (contain.rs:353-375), ``covs`` counting only the
     shingles each pair still owns."""
-    import pyarrow.compute as pc
 
     def col(t: pa.Table, name: str) -> pa.Array:
         return t.column(name).combine_chunks()
@@ -910,19 +965,21 @@ def make_rescore_arrow_fn(cfg: SketchConfig, limit: int):
 
 
 def make_lcs_fn(short_circuit: bool = True):
-    """pandas_udf batch: (caption_a, caption_b) → longest common substring
-    length via suffix automaton (kernels.longest_common_substring).
+    """Caption batch (two pandas Series, the gate rows of one pair-kernel
+    batch, see ``_gate``) → longest common substring length via suffix
+    automaton (kernels.longest_common_substring).
 
     The per-pair automaton call is the only per-element Python in the hot
     pipeline, so the batch short-circuits EQUAL captions vectorized first
-    (LCS(s, s) = len(s); one pandas ``==`` over the whole Arrow batch) —
-    the dominant duplicate class (exact dups + re-encodes, ~77% of
-    hamming survivors on the bench corpus) never reaches the automaton.
-    Measured against the alternatives (JVM k-gram arrays_overlap
-    prefilter at ~360 µs/pair, a DataFrame-level eq/ne branch split that
-    doubles the gate's join work): in-UDF short-circuiting is the only
-    variant that is never slower than the plain loop at any volume.
-    ``short_circuit=False`` keeps the pure per-pair loop for parity tests."""
+    (LCS(s, s) = len(s); one pandas ``==`` over the whole batch) — the
+    dominant duplicate class (exact dups + re-encodes, ~77% of hamming
+    survivors on the bench corpus) never reaches the automaton. Measured
+    against the alternatives (JVM k-gram arrays_overlap prefilter at
+    ~360 µs/pair, a DataFrame-level eq/ne branch split that doubled the
+    former gate stage's join work): short-circuiting inside the batch is
+    the only variant that is never slower than the plain loop at any
+    volume. ``short_circuit=False`` keeps the pure per-pair loop for parity
+    tests."""
 
     def fn(a: pd.Series, b: pd.Series) -> pd.Series:
         av = a.fillna("")

@@ -3,12 +3,8 @@
 import numpy as np
 import pytest
 
-from sylph_spark.cc import (
-    _distributed_cc,
-    _driver_cc,
-    connected_components,
-    pair_cluster_labels,
-)
+from sylph_spark import cc
+from sylph_spark.cc import _distributed_cc, _driver_cc, connected_components
 
 
 @pytest.fixture(scope="module")
@@ -38,22 +34,16 @@ def _labels(df):
 class TestCC:
     def test_driver_equals_distributed(self, graph, spark):
         ndf, edf = graph
-        a = _labels(
-            _driver_cc(ndf, spark, edf.toArrow(), "image_id", "id_a", "id_b")
-        )
-        b = _labels(
-            _distributed_cc(ndf, edf, "image_id", "id_a", "id_b", 50)
-        )
+        a = _labels(_driver_cc(ndf, spark, edf.toArrow()))
+        b = _labels(_distributed_cc(ndf, edf))
         assert a == b
 
     def test_endpoint_nodes_paths_agree(self, graph, spark):
         """nodes=None labels exactly the edge endpoints, identically on both
         paths."""
         _, edf = graph
-        a = _labels(
-            _driver_cc(None, spark, edf.toArrow(), "image_id", "id_a", "id_b")
-        )
-        b = _labels(_distributed_cc(None, edf, "image_id", "id_a", "id_b", 50))
+        a = _labels(_driver_cc(None, spark, edf.toArrow()))
+        b = _labels(_distributed_cc(None, edf))
         assert a == b
         touched = {r["id_a"] for r in edf.collect()} | {
             r["id_b"] for r in edf.collect()
@@ -90,24 +80,22 @@ class TestCC:
 
 
 class TestPairClusterLabels:
-    """Extra edge columns ride through on both paths (driver_threshold=0
-    forces the distributed one)."""
+    """The labels of the pair clustering (rescored's preliminary clusters):
+    ``connected_components(None, edges)`` over edges that carry another
+    column, on the driver path and, with ``DEFAULT_DRIVER_THRESHOLD`` at 0,
+    on the distributed one."""
 
     SCHEMA = "id_a string, id_b string, adj_sim double"
 
     @pytest.mark.parametrize("threshold", [None, 0])
-    def test_pass_through_columns(self, spark, threshold):
+    def test_endpoint_labels(self, spark, threshold, monkeypatch):
+        if threshold is not None:
+            monkeypatch.setattr(cc, "DEFAULT_DRIVER_THRESHOLD", threshold)
         edges = spark.createDataFrame(
             [("a", "b", 0.9), ("b", "c", 0.7), ("x", "y", 0.8)], self.SCHEMA
         )
-        pair_df, node_df = pair_cluster_labels(edges, driver_threshold=threshold)
-        assert pair_df.columns == ["id_a", "id_b", "adj_sim", "pre_cluster"]
-        assert sorted(tuple(r) for r in pair_df.collect()) == [
-            ("a", "b", 0.9, "a"),
-            ("b", "c", 0.7, "a"),
-            ("x", "y", 0.8, "x"),
-        ]
-        assert node_df.columns == ["image_id", "pre_cluster"]
+        node_df = connected_components(None, edges)
+        assert node_df.columns == ["image_id", "cluster_id"]
         assert sorted(tuple(r) for r in node_df.collect()) == [
             ("a", "a"),
             ("b", "a"),
@@ -115,16 +103,19 @@ class TestPairClusterLabels:
             ("x", "x"),
             ("y", "x"),
         ]
+        # one join by id_a labels every edge: both endpoints share a component
+        pair_df = edges.join(node_df.withColumnRenamed("image_id", "id_a"), "id_a")
+        assert sorted(tuple(r) for r in pair_df.collect()) == [
+            ("a", "b", 0.9, "a"),
+            ("b", "c", 0.7, "a"),
+            ("x", "y", 0.8, "x"),
+        ]
 
     @pytest.mark.parametrize("threshold", [None, 0])
-    def test_zero_edges(self, spark, threshold):
+    def test_zero_edges(self, spark, threshold, monkeypatch):
+        if threshold is not None:
+            monkeypatch.setattr(cc, "DEFAULT_DRIVER_THRESHOLD", threshold)
         edges = spark.createDataFrame([], self.SCHEMA)
-        pair_df, node_df = pair_cluster_labels(edges, driver_threshold=threshold)
-        assert pair_df.dtypes == [
-            ("id_a", "string"),
-            ("id_b", "string"),
-            ("adj_sim", "double"),
-            ("pre_cluster", "string"),
-        ]
-        assert node_df.dtypes == [("image_id", "string"), ("pre_cluster", "string")]
-        assert pair_df.count() == 0 and node_df.count() == 0
+        node_df = connected_components(None, edges)
+        assert node_df.dtypes == [("image_id", "string"), ("cluster_id", "string")]
+        assert node_df.count() == 0

@@ -274,8 +274,9 @@ def test_durable_equals_volatile(spark_result, volatile_result):
 
 def test_runner_order_and_overlap(spark):
     """The runner starts each node only after all its inputs have finished,
-    and runs independent nodes concurrently (gated ∥ rescored), whatever
-    the materialiser does."""
+    and runs independent nodes concurrently (clusters ∥ rescored), whatever
+    the materialiser does. The probe materialises a lazy node instantly,
+    as the volatile path does, and every other node in 0.1 s."""
     import threading
     import time
 
@@ -285,15 +286,15 @@ def test_runner_order_and_overlap(spark):
     count_of = {n.inputs[0]: n.name for n in GRAPH if n.volatile == "count"}
 
     class Probe:
-        def span(self, name):
+        def span(self, name, secs=0.1):
             t0 = time.monotonic()
-            time.sleep(0.05)
+            time.sleep(secs)
             with lock:
                 spans[name] = (t0, time.monotonic())
             return name
 
         def commit(self, node, build):
-            return self.span(node.name)
+            return self.span(node.name, 0.0 if node.volatile == "lazy" else 0.1)
 
         def rows(self, name, df):
             return self.span(count_of[name])
@@ -304,20 +305,20 @@ def test_runner_order_and_overlap(spark):
         for i in node.inputs:
             if i != "images":
                 assert spans[i][1] <= spans[node.name][0], (i, node.name)
-    gated, rescored = spans["gated"], spans["rescored"]
-    assert gated[0] < rescored[1] and rescored[0] < gated[1]
+    clusters, rescored = spans["clusters"], spans["rescored"]
+    assert clusters[0] < rescored[1] and rescored[0] < clusters[1]
 
 
 def test_volatile_barrier_keys(volatile_result):
-    """run_volatile times exactly seven barriers, all of which the benchmark
-    maps; scored is a projection of pair_shingles and has none."""
+    """run_volatile times exactly six barriers, all of which the benchmark
+    maps; scored is a projection of pair_shingles and gated a filter of it,
+    and neither has one."""
     _, stage_times = volatile_result
     assert set(stage_times) == {
         "sketches",
         "shingle_counts",
         "counts(2)",
         "cands+pair_shingles",
-        "gated",
         "rescored",
         "clusters(cc)",
     }
@@ -332,9 +333,7 @@ def test_rescored_plan_shape(spark_result):
 
     pipe, out, _ = spark_result
     n_items = pipe.catalog.manifest("sketches").rows
-    df = pipe._stage_rescored(
-        out["scored"], out["pair_shingles"], out["sketches"], n_items
-    )
+    df = pipe._stage_rescored(out["pair_shingles"], out["sketches"], n_items)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapCoGroupsInArrow" in plan
     assert len(re.findall(r"\bExchange\b", plan)) <= 2, plan
@@ -345,9 +344,10 @@ def test_rescored_plan_shape(spark_result):
 def test_pair_shingles_plan_shape(spark_result):
     """Plan-shape guard for the pair_shingles stage over committed stage
     tables: the two profile joins broadcast the sketches (no shuffle) and
-    feed one MapInArrow that intersects, looks up and scores, with no
-    explode and no aggregate. The scored stage over committed pair_shingles
-    is a projection, with no Python node."""
+    feed one MapInArrow that intersects, looks up, scores and gates, with
+    no explode and no aggregate. The scored and gated stages over committed
+    pair_shingles are a projection and a filter, with no Python node, no
+    exchange and no join."""
     import re
 
     pipe, out, _ = spark_result
@@ -366,6 +366,10 @@ def test_pair_shingles_plan_shape(spark_result):
     scored = pipe._stage_scored(out["pair_shingles"])
     plan = scored._jdf.queryExecution().executedPlan().toString()
     assert not re.search(r"Python|Arrow|Pandas", plan), plan
+
+    gated = pipe._stage_gated(out["pair_shingles"])
+    plan = gated._jdf.queryExecution().executedPlan().toString()
+    assert not re.search(r"Python|Arrow|Pandas|Exchange|Join", plan), plan
 
 
 def test_candidates_plan_shape(spark_result):
@@ -434,6 +438,21 @@ def test_lcs_short_circuit_identical(spark, spark_result):
     assert stats["hamming_pairs"] >= stats["lcs_udf_pairs"]
     assert stats["lcs_udf_pairs"] < n_gated  # short-circuit actually fires
     assert 0.0 <= stats["lcs_udf_skipped_frac"] <= 1.0
+
+
+def test_lcs_prefilter_counter_matches_kernel(spark, spark_result):
+    """The bench counter states tau ∧ hamming in the JVM; the pair kernel
+    applies the same cut before its LCS, and leaves ``lcs`` null on every
+    row that fails it: the two must count the same pairs."""
+    from sylph_spark.pipeline import lcs_prefilter_stats
+
+    _, out, _ = spark_result
+    stats = lcs_prefilter_stats(spark, out["scored"], out["sketches"], SketchConfig())
+    assert stats["hamming_pairs"] > 0
+    ps = out["pair_shingles"]
+    assert stats["hamming_pairs"] == ps.filter("lcs IS NOT NULL").count()
+    # gated rows are a subset of the rows the LCS ran on
+    assert ps.filter("gated AND lcs IS NULL").count() == 0
 
 
 def test_same_length_byte_edit_changes_fingerprint(spark, corpus):
@@ -573,10 +592,10 @@ def test_dense_bucket_interleaved_families(spark):
 def test_distributed_cc_pipeline_parity(spark, corpus, monkeypatch):
     """VERDICT r4 #3: run the FULL pipeline with the CC driver threshold
     (``cc.DEFAULT_DRIVER_THRESHOLD``, read at call time) at 0 so both
-    connected_components (clusters stage) and pair_cluster_labels (rescore
-    competition scope) take the distributed propagation path — the code
-    that actually runs at 100-TB edge counts — and assert clusters,
-    rescored pairs and survivors identical to the driver fast path."""
+    clusterings (the clusters stage and the rescore competition scope) take
+    the distributed propagation path — the code that actually runs at
+    100-TB edge counts — and assert clusters, rescored pairs and survivors
+    identical to the driver fast path."""
     from sylph_spark import cc
     from sylph_spark.pipeline import run_volatile
 

@@ -7,11 +7,14 @@ contain.rs:817-847) as whole-batch numpy. These tests pit it against the
 per-pair kernel loop on adversarial coverage vectors spanning every regime.
 """
 
+from dataclasses import replace
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pytest
 
+from sylph_spark import kernels as K
 from sylph_spark import udfs
 from sylph_spark.config import SketchConfig
 
@@ -227,10 +230,34 @@ def test_bootstrap_fast_speedup():
 # -- the pair_shingles kernel: intersect + multiplicity lookup + score ------
 
 
+GATE_CAPTIONS = [
+    "a red cat",
+    "a red cat sits near the tree",
+    "ein roter Kater",
+    "chat rouge très rouge",
+    "über café",
+    "",
+]
+# gate rows: identical shingle sets, so they score high; each pins one
+# gate case as (sim_a, sim_b, cap_a, cap_b)
+GATE_ROWS = [
+    (0, (1 << 26) - 1, "a caption", "a caption"),  # hamming 26, equal captions
+    (0, -1 ^ ((1 << 37) - 1), "a caption", "a caption"),  # hamming 27: no LCS
+    (5, 5, "", "a caption"),  # one empty caption: min_len 0 passes
+    # LCS "ééé" is 6 UTF-8 bytes: it passes against min_len 6 characters
+    # (min(8, 6)), and would fail against 12 bytes (min(8, 12))
+    (7, 7, "éééééé", "ééé" + "x" * 30),
+    (9, 9, "the same words here", "other words entirely"),  # LCS 7 < 8
+]
+
+
 def _pair_cases(rng, n=200):
     """Pair rows (sh_a, sh_b) over a shingle universe whose values straddle
-    the int64 sign (u64 high bit set), plus the edge cases, and the corpus
-    counts of every universe shingle but one (shared by row 0)."""
+    the int64 sign (u64 high bit set), plus the edge cases and the gate
+    rows, the corpus counts of every universe shingle but one (shared by
+    row 0), and each row's gate input (sim_a, sim_b, cap_a, cap_b): random
+    SimHash pairs at 0-40 bits apart and captions drawn from a small pool,
+    so some are equal."""
     universe = np.unique(
         np.concatenate(
             [
@@ -252,19 +279,28 @@ def _pair_cases(rng, n=200):
     # shingle fewer against the same total does not
     rows.append((list(universe[300:308]), [*universe[300:302], *universe[400:420]]))
     rows.append((list(universe[310:318]), [*universe[310:311], *universe[430:450]]))
+    gates = [(3, 3, "a red cat", "a red cat")] * len(rows) + GATE_ROWS
+    rows += [(list(universe[500:540]), list(universe[500:540]))] * len(GATE_ROWS)
     for _ in range(n):
         base = rng.choice(universe, rng.integers(20, 90), replace=False)
         keep = rng.random(base.size) < rng.uniform(0.1, 0.9)
         other = np.concatenate([base[keep], rng.choice(universe, rng.integers(0, 40))])
         rows.append((list(base), list(np.unique(other))))
+    for _ in range(n):
+        sim = int(rng.integers(-(1 << 63), (1 << 63) - 1))
+        flip = rng.choice(64, rng.integers(0, 41), replace=False)
+        sim_b = sim ^ sum(1 << int(b) for b in flip)
+        # back into int64 range when bit 63 flips
+        sim_b = (sim_b + (1 << 63)) % (1 << 64) - (1 << 63)
+        gates.append((sim, sim_b, *map(str, rng.choice(GATE_CAPTIONS, 2))))
     rows = [(sorted(map(int, a)), sorted(map(int, set(b)))) for a, b in rows]
-    return rows, counts
+    return rows, counts, gates
 
 
-def _pair_batch(rows, counts=None):
-    """The kernel's input rows; with ``counts``, also the ``sh_cnt`` column
-    the kernel reads above the broadcast cap (sh_a's shingles that have a
-    count, with it)."""
+def _pair_batch(rows, gates, counts=None):
+    """The kernel's input rows, with their gate inputs; with ``counts``,
+    also the ``sh_cnt`` column the kernel reads above the broadcast cap
+    (sh_a's shingles that have a count, with it)."""
     cols = {
         "id_a": pa.array([f"a{i:05d}" for i in range(len(rows))]),
         "id_b": pa.array([f"b{i:05d}" for i in range(len(rows))]),
@@ -272,6 +308,8 @@ def _pair_batch(rows, counts=None):
         "sh_a": pa.array([a for a, _ in rows], pa.list_(pa.int64())),
         "sh_b": pa.array([b for _, b in rows], pa.list_(pa.int64())),
     }
+    for j, name in enumerate(("sim_a", "sim_b", "cap_a", "cap_b")):
+        cols[name] = pa.array([g[j] for g in gates], pa.int64() if j < 2 else pa.string())
     if counts is not None:
         cols["sh_cnt"] = pa.array(
             [
@@ -283,9 +321,21 @@ def _pair_batch(rows, counts=None):
     return pa.RecordBatch.from_arrays(list(cols.values()), names=list(cols))
 
 
+def _gate_reference(sim_a, sim_b, cap_a, cap_b, adj, cfg):
+    """(hamming, lcs, gated) of one scored row: the LCS runs only past tau
+    and the hamming cap; equal captions give their character length."""
+    hamming = bin((sim_a ^ sim_b) & ((1 << 64) - 1)).count("1")
+    if adj < cfg.tau or hamming > cfg.simhash_max_hamming:
+        return hamming, None, False
+    lcs = len(cap_a) if cap_a == cap_b else K.longest_common_substring(cap_a, cap_b)
+    m = min(len(cap_a), len(cap_b))
+    ok = m == 0 or (lcs >= min(cfg.lcs_min_len, m) and lcs >= cfg.lcs_min_frac * m)
+    return hamming, lcs, ok
+
+
 def _reference(batch, counts, cfg):
     """np.intersect1d, the size prefilter, a dict lookup of the counts
-    (absent: 1), then the whole-batch scorer."""
+    (absent: 1), then the whole-batch scorer, then the gate row by row."""
     d = batch.to_pydict()
     keep, inter_cnt = [], []
     for i, (a, b, t) in enumerate(zip(d["sh_a"], d["sh_b"], d["total_kmers"])):
@@ -307,6 +357,16 @@ def _reference(batch, counts, cfg):
         False,
     ).to_pandas()
     scored.insert(3, "inter_cnt", [sorted(ic) for ic in inter_cnt])
+    gate = [
+        _gate_reference(*(d[c][i] for c in ("sim_a", "sim_b", "cap_a", "cap_b")), adj, cfg)
+        for i, adj in zip(keep, scored["adj_sim"])
+    ]
+    gate = pa.table(
+        [pa.array(list(col), f.type) for col, f in zip(zip(*gate), udfs.GATE_PA_FIELDS)],
+        names=[f.name for f in udfs.GATE_PA_FIELDS],
+    ).to_pandas()
+    for name in gate.columns:
+        scored[name] = gate[name]
     return scored[[f.name for f in udfs.PAIR_SHINGLES_PA_SCHEMA]]
 
 
@@ -328,15 +388,18 @@ def _bc(counts):
 
 
 def test_pair_shingles_kernel_matches_reference():
-    """The fused kernel ≡ intersect1d + dict lookup + scorer, with the counts
-    from the broadcast and from the rows' own ``sh_cnt``, on a sliced batch
-    (nonzero list offsets) with high-bit shingles and the edge rows."""
+    """The fused kernel ≡ intersect1d + dict lookup + scorer + gate, with
+    the counts from the broadcast and from the rows' own ``sh_cnt``, on a
+    sliced batch (nonzero list offsets) with high-bit shingles, the edge
+    rows and the gate rows. tau sits just above the adj_sim of row a00003,
+    which would pass every other gate."""
     rng = np.random.default_rng(8)
-    cfg = SketchConfig()
-    rows, counts = _pair_cases(rng)
-    full = _pair_batch([([], [])] * 3 + rows, counts)
+    rows, counts, gates = _pair_cases(rng)
+    full = _pair_batch([([], [])] * 3 + rows, [(0, 0, "", "")] * 3 + gates, counts)
     batch = full.slice(3)
     assert batch.column(3).offset == 3
+    first = _reference(batch, counts, SketchConfig())
+    cfg = replace(SketchConfig(), tau=float(np.nextafter(first["adj_sim"][0], 2.0)))
     want = _reference(batch, counts, cfg)
     from_bc = udfs.make_pair_shingles_fn(cfg, _bc(counts))
     got = _kernel_frame(from_bc, batch.drop_columns(["sh_cnt"]))
@@ -353,3 +416,20 @@ def test_pair_shingles_kernel_matches_reference():
     assert "a00004" not in ids  # empty intersection
     assert "a00005" in ids and "a00006" not in ids  # prefilter boundary
     assert set(got["adjust_status"]) >= {"high", "low"}
+    # the gate rows (a00007-a00011) and the row just under tau (a00003)
+    g = got.set_index("id_a")
+    assert (g.loc[[f"a{i:05d}" for i in range(7, 12)], "adj_sim"] >= cfg.tau).all()
+    assert np.isnan(g.at["a00003", "lcs"]) and not g.at["a00003", "gated"]
+    assert g.at["a00007", "hamming"] == 26 and g.at["a00007", "lcs"] == len("a caption")
+    assert g.at["a00007", "gated"]
+    assert g.at["a00008", "hamming"] == 27 and np.isnan(g.at["a00008", "lcs"])
+    assert not g.at["a00008", "gated"]
+    assert g.at["a00009", "lcs"] == 0 and g.at["a00009", "gated"]
+    assert g.at["a00010", "lcs"] == 6 and g.at["a00010", "gated"]
+    assert g.at["a00011", "lcs"] == 7 and not g.at["a00011", "gated"]
+    # the random rows reach both sides of the hamming cap and of the rule
+    assert got["gated"].any() and (~got["gated"] & got["lcs"].notna()).any()
+    # tau equal to a00003's adj_sim lets it through
+    at_tau = replace(cfg, tau=float(first["adj_sim"][0]))
+    got = _kernel_frame(udfs.make_pair_shingles_fn(at_tau, _bc(counts)), batch)
+    assert got["id_a"][0] == "a00003" and got["gated"][0]
