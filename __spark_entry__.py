@@ -398,19 +398,31 @@ def _jaccard_sql(shingle_sql: str) -> str:
     """
 
 
+# The ten nearest by cosine, ranked, with no global window: ROW_NUMBER()
+# OVER (ORDER BY ...) with no partition runs as one unpartitioned WindowExec
+# over every row (and logs a WARN for it). A top-k sort takes the ten, and
+# posexplode numbers them in the same order (similarity descending, then
+# vec_id ascending; sort_array puts NaN first and nulls last, as the ORDER
+# BY does).
 _EMB_KNN_SPARK = """
-    SELECT vec_id, rnk FROM (
+    WITH top AS (
         SELECT e.vec_id,
-               ROW_NUMBER() OVER (ORDER BY
-                   AGGREGATE(ZIP_WITH(e.embedding, q.qe, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
-                             CAST(0.0 AS DOUBLE), (a, v) -> a + v)
-                   / (SQRT(AGGREGATE(e.embedding, CAST(0.0 AS DOUBLE), (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))
-                      * SQRT(AGGREGATE(q.qe, CAST(0.0 AS DOUBLE), (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                   DESC, e.vec_id) AS rnk
+               AGGREGATE(ZIP_WITH(e.embedding, q.qe, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
+                         CAST(0.0 AS DOUBLE), (a, v) -> a + v)
+               / (SQRT(AGGREGATE(e.embedding, CAST(0.0 AS DOUBLE), (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))
+                  * SQRT(AGGREGATE(q.qe, CAST(0.0 AS DOUBLE), (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+               AS sim
         FROM embeddings e
         CROSS JOIN (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0) q
         WHERE e.vec_id <> 0
-    ) r WHERE rnk <= 10
+        ORDER BY sim DESC, e.vec_id
+        LIMIT 10
+    )
+    SELECT -r.neg_id AS vec_id, pos + 1 AS rnk
+    FROM (
+        SELECT POSEXPLODE(SORT_ARRAY(COLLECT_LIST(STRUCT(sim, -vec_id AS neg_id)), false)) AS (pos, r)
+        FROM top
+    )
 """
 
 _EMB_KNN_DUCK = """
@@ -1315,7 +1327,27 @@ def _q_dd_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# A12 with the grand total from a one-row aggregate: SUM(...) OVER () runs
+# as one unpartitioned WindowExec (and logs a WARN for it). Both forms sum
+# the per-nation sums, so the types are the same.
+_A12_SPARK_SQL = """
+    WITH per AS (
+        SELECT n_name, SUM(c_acctbal) AS acct
+        FROM customer JOIN nation ON c_nationkey = n_nationkey
+        GROUP BY n_name
+    )
+    SELECT n_name, ROUND(acct * 100.0 / t.total, 6) AS rel_abund
+    FROM per CROSS JOIN (SELECT SUM(acct) AS total FROM per) t
+"""
+
+
+def _q_a12_abundance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    _register(spark, sf_dir)
+    return spark.sql(_A12_SPARK_SQL)
+
+
 SPARK_OVERRIDES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    "a12_abundance": _q_a12_abundance,
     "j1_containment": _q_j1_containment,
     "j3_winner_argmax": _q_j3_winner_argmax,
     "e1_ratio_lambda": _q_e1_ratio_lambda,

@@ -1,17 +1,25 @@
 """Recall audit at bench scale: run the pipeline on the distributed fixture
 corpus and measure dup-pair recall / false-merge rate against the generator's
 implicit ground truth (every exact/reencode/near_* row belongs to its base's
-cluster; negatives must not)."""
-import sys, time, json
+cluster; negatives must not).
+
+    python scripts/recall_at_scale.py [path] [n_base] [cpus]
+
+``path`` (default ``.bench_cache/images_big.parquet``) is written first as
+the ``fixtures_spark`` corpus of ``n_base`` bases (seed 42) when it does not
+exist; ``cpus`` defaults to the host's core count."""
+import json, os, sys
 sys.path.insert(0, ".")
 from sylph_spark.session import build_spark
 from sylph_spark.config import SketchConfig
 from sylph_spark.pipeline import run_volatile
-from sylph_spark.fixtures_spark import _plan
+from sylph_spark.fixtures_spark import _plan, write_corpus
 
-def main(path=".bench_cache/images_big.parquet", n_base=300_000, cpus=32):
+def main(path=".bench_cache/images_big.parquet", n_base=300_000, cpus=os.cpu_count()):
     n_base, cpus = int(n_base), int(cpus)
     spark = build_spark("recall", master=f"local[{cpus}]", shuffle_partitions=2 * cpus)
+    if not os.path.exists(path):
+        write_corpus(spark, n_base, path, seed=42)
     images = spark.read.parquet(path)
     out = run_volatile(spark, images, SketchConfig())
     labels = {r["image_id"]: r["cluster_id"] for r in out["clusters"].collect()}

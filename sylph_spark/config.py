@@ -97,8 +97,12 @@ class SketchConfig:
     # cross over — below it exact pairing is cheaper anyway.
     #
     # MEMORY BOUND (not just pair volume): one bucket's id list materializes
-    # as a single collect_list/sort_array row in ONE aggregation task, and
-    # with the relative df limit a bucket can in principle reach
+    # as a single collect_list/sort_array row in ONE aggregation task. Past
+    # 128 keys per task that aggregate runs sort-based (Spark's default
+    # objectHashAggregate fallback, see session.py): it holds one bucket's
+    # buffer at a time and spills the sorted rows, so its memory follows
+    # the LARGEST bucket, not the number of buckets per task. With the
+    # relative df limit a bucket can in principle reach
     # band_max_df_frac·n ids (~2M ids ≈ 30 MB at n=100M — fine; ~20M ids at
     # n=1B — budget executor memory for it, or set band_max_df_abs to a
     # deployment-sized cap / pre-split the band_hash key above a size

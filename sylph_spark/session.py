@@ -1,18 +1,38 @@
-"""SparkSession factory: one fixed table of measured settings.
+"""SparkSession factory: one fixed table of settings.
 
-``SETTINGS`` is every conf this engine sets, each tuned value next to the
-measurement that keeps it; ``build_spark`` applies it and nothing else — no
-warm-up jobs, no environment switches. ``extra_conf`` is the one override
-path (it wins over the table); ``SYLPH_DRIVER_MEM`` is the one environment
-knob, because the callers that size the driver heap (perfbench, bench.py)
-need different values. With no ``master`` argument the launcher's master
-applies (``spark-submit --master``, spark-defaults, or spark-submit's own
-``local[*]`` for a plain ``python`` launch).
+``SETTINGS`` is every conf this engine sets, and only confs whose value
+differs from Spark 4.1's default: each tuned value sits next to the
+measurement that keeps it, each other entry next to its purpose
+(``tests/test_session.py`` fails on a restated default). ``build_spark``
+applies it and nothing else — no warm-up jobs, no environment switches.
+``extra_conf`` is the one override path (it wins over the table);
+``SYLPH_DRIVER_MEM`` is the one environment knob, because the callers that
+size the driver heap (perfbench, bench.py) need different values. With no
+``master`` argument the launcher's master applies (``spark-submit
+--master``, spark-defaults, or spark-submit's own ``local[*]`` for a plain
+``python`` launch).
 
-AQE (+skew-join splitting) replaces sylph's hand-built memory gating and
-two-level thread scheduling (src/sketch.rs:27-51, contain.rs:240-256);
-Arrow batching is the analog of its AVX2 batch kernels
-(avx2_seeding.rs:33-148).
+Left at Spark's defaults on purpose: AQE with skew-join splitting and
+partition coalescing (on by default; it replaces sylph's hand-built memory
+gating and two-level thread scheduling, src/sketch.rs:27-51,
+contain.rs:240-256), the generic 10000-row Arrow and 4096-row parquet
+batches (``heavy_payload_batches`` narrows both for image-bytes stages),
+the 10 MB broadcast threshold (a 64 MB override changed no wall time on
+the families corpus or a 24k-image audit, in interleaved in-process
+pairs), and the objectHashAggregate sort-based fallback at 128 keys per
+task. The
+last one holds the ``collect_list`` aggregates (the LSH buckets of
+``_stage_candidates``; above the vocab broadcast cap also the per-image
+``sh_cnt`` regroup) to one group at a time once a task passes 128 keys,
+and that sort spills. An 8,388,608-key override kept millions of mostly
+singleton bucket buffers in the heap instead: with it the 480k-image
+recall audit (``scripts/recall_at_scale.py``, n_base 300,000, local[4],
+4g heap) died with OutOfMemoryError in
+``ObjectAggregationIterator.createNewAggregationBuffer`` after 232 s;
+without it the audit finishes in 163 s. The sort has a CPU price where
+nearly every bucket is a singleton: perfbench's unique workload spends
+~0.09 s more per warm pass in ``cands+pair_shingles`` (0.78 s, against
+0.69 s with the override).
 """
 
 from __future__ import annotations
@@ -23,9 +43,6 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 SETTINGS = {
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
     # Python workers are forked from the daemon process, so what the daemon
     # holds at fork time is inherited by every worker for free.
     # sylph_spark.daemon puts three things there, then defers to the stock
@@ -36,22 +53,12 @@ SETTINGS = {
     # re-parsed pyspark.zip, py4j and the spark-core jar, 130-240 ms per
     # task on a 4-core VM; now ~0.2 ms), and a frozen preloaded heap (a
     # reused worker's gc.collect after each task walked the ~88k inherited
-    # objects, 37-80 ms; now ~0.3 ms). The repo root goes on the workers'
-    # path so the daemon module resolves.
+    # objects, 37-80 ms; now ~0.3 ms).
     "spark.python.daemon.module": "sylph_spark.daemon",
+    # the repo root on the workers' path, so the daemon module resolves
     "spark.executorEnv.PYTHONPATH": os.path.dirname(
         os.path.dirname(os.path.abspath(__file__))
     ),
-    # collect_list aggregations (the LSH buckets; above the vocab
-    # broadcast cap also the per-image shingle counts of
-    # pipeline._with_sh_cnt) run as ObjectHashAggregate, which silently
-    # degrades to SORT-based aggregation once a task sees more than this
-    # many distinct keys (default 128!) — the bench-scale bucket aggregate
-    # has ~200k groups, so every task paid a full sort of its band rows.
-    # Keys here are small (two longs, or one image id), so a
-    # multi-million-entry hash map is still far cheaper than the sort it
-    # replaces.
-    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "8388608",
     # AQE coalescing is byte-based and blind to per-row CPU. On the
     # 32k-image bench corpus (OPTIMIZATION_r06.md) the candidate-pair
     # distinct wrote ~1.5 MB of shuffle, and the default 1 MB floor
@@ -73,13 +80,12 @@ SETTINGS = {
     # setting is safe at any scale.
     "spark.sql.join.preferSortMergeJoin": "false",
     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "64m",
+    # pandas <-> Spark conversions (createDataFrame from pandas, toPandas)
+    # go through Arrow instead of row-by-row pickling
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # generic small-row batch sizes; image-bytes stages override them via
-    # heavy_payload_batches (see HEAVY_BATCH_CONFS below)
-    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
-    "spark.sql.parquet.columnarReaderBatchSize": "4096",
-    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # no web UI server (and no port to bind) for a batch job or a test
     "spark.ui.enabled": "false",
+    # one time zone for every timestamp, whatever the host's zone
     "spark.sql.session.timeZone": "UTC",
 }
 

@@ -760,11 +760,11 @@ def _gate(
     pair batch (sim_a, sim_b, cap_a, cap_b) with first-pass similarity
     ``adj``, as the columns
     ``hamming``, the SimHash distance (popcount of the xor); ``lcs``, the
-    caption LCS through ``lcs_fn`` (make_lcs_fn), null unless the row
-    clears tau and ``simhash_max_hamming``; and ``gated``, such a row whose
-    lcs ≥ min(lcs_min_len, min_len) and ≥ lcs_min_frac · min_len, or whose
-    shorter caption is empty. ``min_len`` counts characters (a null caption
-    gives NaN, which fails the rule)."""
+    caption LCS in UTF-8 bytes through ``lcs_fn`` (make_lcs_fn), null
+    unless the row clears tau and ``simhash_max_hamming``; and ``gated``,
+    such a row whose lcs ≥ min(lcs_min_len, min_len) and ≥ lcs_min_frac ·
+    min_len, or whose shorter caption is empty. ``min_len`` counts
+    characters (a null caption gives NaN, which fails the rule)."""
     def col(name: str) -> pa.Array:
         return batch.column(name).filter(keep)
 
@@ -964,29 +964,29 @@ def make_rescore_arrow_fn(cfg: SketchConfig, limit: int):
     return fn
 
 
-def make_lcs_fn(short_circuit: bool = True):
+def make_lcs_fn():
     """Caption batch (two pandas Series, the gate rows of one pair-kernel
-    batch, see ``_gate``) → longest common substring length via suffix
-    automaton (kernels.longest_common_substring).
+    batch, see ``_gate``) → longest common substring length in UTF-8 bytes,
+    the unit of the suffix automaton (kernels.longest_common_substring).
 
     The per-pair automaton call is the only per-element Python in the hot
     pipeline, so the batch short-circuits EQUAL captions vectorized first
-    (LCS(s, s) = len(s); one pandas ``==`` over the whole batch) — the
-    dominant duplicate class (exact dups + re-encodes, ~77% of hamming
-    survivors on the bench corpus) never reaches the automaton. Measured
-    against the alternatives (JVM k-gram arrays_overlap prefilter at
-    ~360 µs/pair, a DataFrame-level eq/ne branch split that doubled the
+    (LCS(s, s) = the byte length of s; one pandas ``==`` over the whole
+    batch) — the dominant duplicate class (exact dups + re-encodes, ~77% of
+    hamming survivors on the bench corpus) never reaches the automaton.
+    Measured against the alternatives (JVM k-gram arrays_overlap prefilter
+    at ~360 µs/pair, a DataFrame-level eq/ne branch split that doubled the
     former gate stage's join work): short-circuiting inside the batch is
     the only variant that is never slower than the plain loop at any
-    volume. ``short_circuit=False`` keeps the pure per-pair loop for parity
-    tests."""
+    volume."""
 
     def fn(a: pd.Series, b: pd.Series) -> pd.Series:
         av = a.fillna("")
         bv = b.fillna("")
         out = pd.Series(np.zeros(len(av), dtype=np.int64))
-        eq = (av == bv).to_numpy() if short_circuit else np.zeros(len(av), bool)
-        out[eq] = av[eq].str.len().to_numpy(dtype=np.int64)
+        eq = (av == bv).to_numpy()
+        utf8 = av[eq].str.encode("utf-8", errors="replace")
+        out[eq] = utf8.str.len().to_numpy(dtype=np.int64)
         ne = np.flatnonzero(~eq)
         out.iloc[ne] = np.array(
             [K.longest_common_substring(av.iloc[i], bv.iloc[i]) for i in ne],

@@ -15,15 +15,12 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _run(
-    workdir: str,
-    timeout_kill: float | None = None,
-    source: tuple[str, ...] = ("--fixture", "80"),
-):
+def _run(workdir: str, timeout_kill: float | None = None):
     cmd = [
         sys.executable,
         os.path.join(REPO, "scripts", "run_pipeline.py"),
-        *source,
+        "--fixture",
+        "80",
         "--workdir",
         workdir,
         "--cpus",
@@ -58,14 +55,19 @@ class TestKillResume:
         assert resumed["config_hash"] == fresh["config_hash"]
 
 
-def test_cli_images_routes_unknown_formats(tmp_path):
+def test_cli_images_routes_unknown_formats(tmp_path, spark, monkeypatch, capsys):
     """``--images`` on a parquet table holding one row in a format with no
     native codec: the run completes on the native rows instead of failing
-    in the sketch stage."""
+    in the sketch stage. The CLI runs in this process on the shared test
+    session: a fresh driver JVM's start and first-job warm-up would be
+    most of the cost (the 14-row corpus is negligible), and fresh-process
+    CLI runs are covered by ``TestKillResume``."""
+    import runpy
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from sylph_spark import fixtures
+    from sylph_spark import fixtures, session
 
     images, _ = fixtures.generate_corpus(n_base=8, seed=42)
     jpeg = {
@@ -92,6 +94,15 @@ def test_cli_images_routes_unknown_formats(tmp_path):
     src = tmp_path / "images"
     src.mkdir()
     pq.write_table(pa.table(rows, schema=schema), str(src / "part-0.parquet"))
-    out = _run(str(tmp_path / "run"), source=("--images", str(src)))
+    monkeypatch.setattr(session, "build_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    monkeypatch.setattr(
+        sys,
+        "argv",
+        ["run_pipeline.py", "--images", str(src), "--workdir", str(tmp_path / "run"), "--cpus", "4"],
+    )
+    # exits 0: main() returns without raising (a usage error is SystemExit)
+    runpy.run_path(os.path.join(REPO, "scripts", "run_pipeline.py"), run_name="__main__")
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["images_in"] == len(images)
     assert out["images_routed_out"] == 1

@@ -323,11 +323,11 @@ def _pair_batch(rows, gates, counts=None):
 
 def _gate_reference(sim_a, sim_b, cap_a, cap_b, adj, cfg):
     """(hamming, lcs, gated) of one scored row: the LCS runs only past tau
-    and the hamming cap; equal captions give their character length."""
+    and the hamming cap."""
     hamming = bin((sim_a ^ sim_b) & ((1 << 64) - 1)).count("1")
     if adj < cfg.tau or hamming > cfg.simhash_max_hamming:
         return hamming, None, False
-    lcs = len(cap_a) if cap_a == cap_b else K.longest_common_substring(cap_a, cap_b)
+    lcs = K.longest_common_substring(cap_a, cap_b)
     m = min(len(cap_a), len(cap_b))
     ok = m == 0 or (lcs >= min(cfg.lcs_min_len, m) and lcs >= cfg.lcs_min_frac * m)
     return hamming, lcs, ok

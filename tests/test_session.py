@@ -1,10 +1,11 @@
-"""Session layer: the fixed settings table, the scoped heavy-payload batch
-sizes, a spark-submit launch that keeps its own master, and the worker
-daemon's per-task fixed cost (zip directories re-read only on change, a
-frozen preloaded heap)."""
+"""Session layer: the fixed settings table (no restated Spark default), the
+scoped heavy-payload batch sizes, a spark-submit launch that keeps its own
+master, and the worker daemon's per-task fixed cost (zip directories
+re-read only on change, a frozen preloaded heap)."""
 
 import json
 import os
+import re
 import subprocess
 import sys
 import textwrap
@@ -12,7 +13,7 @@ import textwrap
 import pytest
 from pyspark.find_spark_home import _find_spark_home
 
-from sylph_spark.session import heavy_payload_batches
+from sylph_spark.session import SETTINGS, heavy_payload_batches
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ARROW_ROWS = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -24,26 +25,61 @@ def test_settings_table_and_heavy_payload_scope(spark):
         "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
         "spark.sql.join.preferSortMergeJoin": "false",
         "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "64m",
-        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "8388608",
-        ARROW_ROWS: "10000",
-        PARQUET_ROWS: "4096",
     }
     assert {k: spark.conf.get(k) for k in expected} == expected
+    # left to Spark's defaults, not set by the table: the values in effect
+    defaults = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        ARROW_ROWS: "10000",
+        PARQUET_ROWS: "4096",
+        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "128",
+    }
+    assert {k: spark.conf.get(k) for k in defaults} == defaults
 
     with heavy_payload_batches(spark):
         assert spark.conf.get(ARROW_ROWS) == spark.conf.get(PARQUET_ROWS) == "512"
     assert spark.conf.get(ARROW_ROWS) == "10000"
     assert spark.conf.get(PARQUET_ROWS) == "4096"
+    # confs that were unset before the scope are unset again after it
+    assert spark.conf.get(ARROW_ROWS, None) is None
+    assert spark.conf.get(PARQUET_ROWS, None) is None
 
-    # a conf that was unset before the scope is unset again after it
-    spark.conf.unset(PARQUET_ROWS)
+    # a conf that was set before the scope gets its value back
+    spark.conf.set(PARQUET_ROWS, "1024")
     try:
         with heavy_payload_batches(spark):
             assert spark.conf.get(PARQUET_ROWS) == "512"
-        assert spark.conf.get(PARQUET_ROWS, None) is None
-        assert spark.conf.get(ARROW_ROWS) == "10000"
+        assert spark.conf.get(PARQUET_ROWS) == "1024"
     finally:
-        spark.conf.set(PARQUET_ROWS, "4096")
+        spark.conf.unset(PARQUET_ROWS)
+
+
+def _conf_value(v: str):
+    """A conf string in one form: sizes as bytes, words lowercased."""
+    m = re.fullmatch(r"(\d+)\s*([kmgt]?)i?b?", v.strip().lower())
+    if m is None:
+        return v.strip().lower()
+    return int(m.group(1)) << (10 * " kmgt".index(m.group(2) or " "))
+
+
+def test_settings_restate_no_spark_default(spark):
+    """Every ``spark.sql.*`` entry of ``SETTINGS`` changes what Spark would
+    do without it: unset on the live session, Spark's default differs from
+    the table's value. (``session.timeZone`` is left out: its default is
+    the host's zone.)"""
+    keys = [k for k in SETTINGS if k.startswith("spark.sql.") and k != "spark.sql.session.timeZone"]
+    assert keys
+    for k in keys:
+        value = spark.conf.get(k)
+        assert _conf_value(value) == _conf_value(SETTINGS[k]), k
+        spark.conf.unset(k)
+        try:
+            default = spark.conf.get(k)
+        finally:
+            spark.conf.set(k, value)
+        assert _conf_value(default) != _conf_value(value), (k, default)
 
 
 PROBE = textwrap.dedent(
