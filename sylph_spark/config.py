@@ -44,7 +44,7 @@ class SketchConfig:
     # exponent root for containment → similarity (sylph k in ANI = idx^{1/k};
     # ani_k=1 reports raw containment as the similarity score)
     ani_k: float = 1.0
-    # verification stage
+    # verification stage (caption LCS lengths count UTF-8 bytes)
     simhash_max_hamming: int = 26
     lcs_min_len: int = 8
     lcs_min_frac: float = 0.25
@@ -70,23 +70,20 @@ class SketchConfig:
     bootstrap_seed: int = 7
     # stop-shingle masking for banding (corpus analog of sylph's repeat
     # masking, sketch.rs:590-600): shingles with document frequency above
-    # max(band_max_df_min, band_max_df_frac·n_items) are excluded from
-    # MinHash banding (but still scored) — boilerplate/template shingles
-    # otherwise create dense LSH buckets and quadratic candidate growth
+    # band_df_limit(n_items) = max(band_max_df_min, band_max_df_frac·n_items)
+    # are excluded from MinHash banding (but still scored) —
+    # boilerplate/template shingles otherwise create dense LSH buckets and
+    # quadratic candidate growth. band_max_df_min is ≥ 1 (a limit of 0 masks
+    # every shingle). The limit is RELATIVE on purpose: a df FRACTION is
+    # stationary as a stationary corpus grows, and fewer than Σcnt/limit ≤
+    # mean shingles per image / band_max_df_frac shingles can exceed it, so
+    # the stop set does not grow with n. A fixed absolute cap (abs=1024 in
+    # the 960k recall audit, BENCH/scaling_notes.md) starved the banding
+    # input instead: 0.5% of items lost EVERY combined-family shingle and
+    # dup-pair recall decayed 0.9912@480k → 0.9815@960k. Dense-bucket cost
+    # is bounded by bucket_degrade_size below.
     band_max_df_min: int = 32
     band_max_df_frac: float = 0.02
-    # optional absolute cap on the informative-shingle df (None = disabled,
-    # the default). A FIXED cap does not survive corpus growth: the 960k
-    # recall audit (BENCH/scaling_notes.md) showed that with abs=1024 the
-    # informative vocabulary stops scaling with n — 0.5% of items lose
-    # EVERY combined-family shingle to masking (8-9% per modality), become
-    # unbandable, and dup-pair recall decays 0.9912@480k → 0.9815@960k
-    # (every missed exact pair had two zero-informative members). The
-    # scale-invariant limit is the RELATIVE one (band_max_df_frac·n: a df
-    # FRACTION is stationary as a stationary corpus grows); dense-bucket
-    # cost is bounded by bucket_degrade_size below instead of by starving
-    # the banding input.
-    band_max_df_abs: int | None = None
     # buckets larger than this switch from full chunked all-pairs to banded
     # tri-diagonal chunk pairing (each pair_chunk-sized chunk pairs with
     # itself and its successor chunk in bucket-sorted id order): candidate
@@ -104,10 +101,9 @@ class SketchConfig:
     # the LARGEST bucket, not the number of buckets per task. With the
     # relative df limit a bucket can in principle reach
     # band_max_df_frac·n ids (~2M ids ≈ 30 MB at n=100M — fine; ~20M ids at
-    # n=1B — budget executor memory for it, or set band_max_df_abs to a
-    # deployment-sized cap / pre-split the band_hash key above a size
-    # threshold before the collect_list if corpora that far beyond the
-    # audited 960k are expected).
+    # n=1B — budget executor memory for it, or pre-split the band_hash key
+    # above a size threshold before the collect_list if corpora that far
+    # beyond the audited 960k are expected).
     bucket_degrade_size: int = 2048
     # LSH skew handling: bucket pair generation is UNCONDITIONALLY chunked —
     # every bucket of size s fans out over ceil(s/pair_chunk)² (ci,cj) tasks
@@ -119,6 +115,10 @@ class SketchConfig:
     @property
     def num_hashes(self) -> int:
         return self.num_bands * self.rows_per_band
+
+    def band_df_limit(self, n_items: int) -> int:
+        """The stop-shingle document-frequency limit over ``n_items``."""
+        return max(self.band_max_df_min, int(self.band_max_df_frac * n_items))
 
     def to_json(self) -> str:
         return json.dumps(asdict(self), sort_keys=True)

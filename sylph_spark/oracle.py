@@ -62,13 +62,6 @@ def corpus_counts(sketches: list[ItemSketch]) -> dict[int, int]:
     return dict(zip(vals.tolist(), cnts.tolist()))
 
 
-def band_df_limit(cfg: SketchConfig, n_items: int) -> int:
-    limit = max(cfg.band_max_df_min, int(cfg.band_max_df_frac * n_items))
-    if cfg.band_max_df_abs is not None:
-        limit = min(limit, cfg.band_max_df_abs)
-    return limit
-
-
 def lsh_buckets(
     sketches: list[ItemSketch], cfg: SketchConfig, counts: dict[int, int] | None = None
 ) -> dict[tuple[int, int], list[str]]:
@@ -77,7 +70,7 @@ def lsh_buckets(
     (e.g. the dense-degrade tri-diagonal property is defined over a
     bucket's own sorted members, not over any externally guessed subset).
     """
-    limit = band_df_limit(cfg, len(sketches)) if counts is not None else None
+    limit = cfg.band_df_limit(len(sketches)) if counts is not None else None
     fb, fr = cfg.family_bands, cfg.family_rows
     families = (
         (0, cfg.num_bands, cfg.rows_per_band, "shingles"),
@@ -240,7 +233,7 @@ def winner_rescore(
     for r in first.itertuples():
         for iid in (r.id_a, r.id_b):
             item_score[iid] = max(item_score.get(iid, float("-inf")), r.adj_sim)
-    limit = band_df_limit(cfg, len(sketches))
+    limit = cfg.band_df_limit(len(sketches))
     # preliminary clusters over first-pass edges: the competition scope
     pre = connected_components(
         sorted(item_score), first[["id_a", "id_b"]]
@@ -319,7 +312,7 @@ def verify_pairs(
             keep.append(False)
             continue
         lcs = K.longest_common_substring(a.caption, b.caption)
-        min_len = min(len(a.caption), len(b.caption))
+        min_len = min(len(a.caption.encode()), len(b.caption.encode()))  # bytes, as lcs
         thresh = min(cfg.lcs_min_len, min_len) if min_len else 0
         frac_ok = min_len == 0 or lcs >= cfg.lcs_min_frac * min_len
         keep.append(lcs >= thresh and frac_ok)

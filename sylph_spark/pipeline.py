@@ -48,18 +48,22 @@ is explained by a same-cluster winner is still a duplicate pair — dropping
 its edge would split true clusters and break dedup idempotence.
 
 Scale design notes (for the 10^12-row cluster, tested at local[*]):
-- joins on (image_id, shingle) / (band, band_hash) are plain shuffle hash
-  joins; AQE + skew-join splitting enabled in session.py;
-- LSH buckets are pair-generated in CHUNKS keyed (band, hash, ci, cj) so a
-  single hot bucket fans out across ~(size/chunk)² tasks instead of one —
-  the salted-key skew mitigation required by the north rule;
+- AQE, its skew-join splitting and partition coalescing are left at Spark
+  4.1's defaults (session.py says why);
+- LSH buckets are one (band, band_hash) aggregate, and their pairs are
+  generated in CHUNKS keyed (ci, cj) so a single hot bucket fans out
+  across ~(size/chunk)² tasks instead of one — the salted-key skew
+  mitigation required by the north rule;
 - shingle_counts is a map-side-combined hash aggregate. One driver
-  collect (the ``vocab`` node) fetches its cnt ≥ 2 slice, and one
-  broadcast of it serves both the banding kernel (stop-shingle mask) and
-  the pair_shingles kernel (multiplicities). Above ``VOCAB_BROADCAST_MAX``
-  shingles nothing is broadcast: one explode ⋈ shingle_counts → regroup
-  per image gives each image its own counts, which both kernels read in
-  its place;
+  collect (the ``vocab`` node) fetches its cnt ≥ 2 slice, which the
+  pair_shingles kernel reads as one broadcast. The banding kernel reads
+  only the stop set (count above the band df limit): fewer than
+  Σcnt/limit shingles, at most mean shingles per image / band_max_df_frac
+  whatever the corpus size, so it rides in the kernel's closure, cut from
+  the vocab slice on the driver. Above ``VOCAB_BROADCAST_MAX`` shingles
+  nothing is broadcast: the stop set is its own bounded collect, and the
+  one (image_id, shingle) join, explode ⋈ shingle_counts → regroup per
+  image, gives pair side a its own counts;
 - the pair kernel reads both items' captions, so the captions of every
   candidate pair cross into Python, not only those of the pairs the gate's
   LCS looks at; in exchange the gate needs no join and no Python crossing
@@ -92,9 +96,15 @@ from .io.catalog import StageCatalog
 from .session import heavy_payload_batches
 
 # the most cnt ≥ 2 shingles the vocab node broadcasts (12 bytes each); above
-# it the kernels read per-image counts (DedupStages._with_sh_cnt). It picks
-# a plan, not an output, so it is not part of SketchConfig.
+# it the pair kernel reads side a's per-image counts and the stop set is
+# collected on its own (DedupStages._stop_shingles). It picks a plan, not
+# an output, so it is not part of SketchConfig.
 VOCAB_BROADCAST_MAX = 5_000_000
+# the most stop shingles the driver collects for the band mask above the
+# vocab cap. Fewer than Σcnt/limit exist, at most mean shingles per image /
+# band_max_df_frac (6,734 at 48k images, 388 of them real), so a corpus
+# reaches this only if its images average 20k shingles.
+STOP_SHINGLES_MAX = 1_000_000
 
 
 def input_fingerprint(images: DataFrame) -> str:
@@ -187,6 +197,7 @@ GRAPH = (
     Node("shingle_counts", ("sketches",), "checkpoint", "shingle_counts"),
     Node("n_items", ("sketches",), "count", "counts(2)"),
     # the one driver collect of shingle_counts, read by both kernels below
+    # (the band kernel through the stop set cut from it)
     Node("vocab", ("shingle_counts",), "value", "counts(2)"),
     Node("candidates", ("sketches", "shingle_counts", "n_items", "vocab"), "lazy"),
     # pair_shingles feeds both scoring passes; lazy candidates
@@ -251,15 +262,16 @@ class DedupStages:
         )
 
     def _stage_vocab(self, counts: DataFrame):
-        """The multiplicities both kernels read (udfs._count_table): the
-        cnt ≥ 2 slice of shingle_counts, sorted by shingle and broadcast;
-        a shingle absent from it occurs once. One action probes the size
-        and fetches the slice, ``limit(cap + 1).toArrow()`` (the
-        probe-and-fetch of cc.connected_components), which bounds the
-        driver transfer. Above ``VOCAB_BROADCAST_MAX`` rows it returns None
-        and the kernels read each image's own counts (``_with_sh_cnt``).
-        A driver value is not committed, so the durable path runs this
-        collect on every pass, a fully resumed one included."""
+        """The multiplicities the pair kernel reads (udfs._count_table), and
+        below the cap the source of the band kernel's stop set: the cnt ≥ 2
+        slice of shingle_counts, sorted by shingle and broadcast; a shingle
+        absent from it occurs once. One action probes the size and fetches
+        the slice, ``limit(cap + 1).toArrow()`` (the probe-and-fetch of
+        cc.connected_components), which bounds the driver transfer. Above
+        ``VOCAB_BROADCAST_MAX`` rows it returns None, and the pair kernel
+        reads side a's own counts (``_stage_pair_shingles``). A driver value
+        is not committed, so the durable path runs this collect on every
+        pass, a fully resumed one included."""
         tbl = (
             counts.filter(F.col("cnt") >= 2)
             .limit(VOCAB_BROADCAST_MAX + 1)
@@ -273,33 +285,26 @@ class DedupStages:
             (keys[order], tbl.column("cnt").to_numpy()[order])
         )
 
-    def _with_sh_cnt(
-        self, sketches: DataFrame, cols: list[str], counts: DataFrame, vocab
-    ) -> DataFrame:
-        """``cols`` of the sketches, plus, when the vocabulary is above the
-        broadcast cap (``vocab`` None), ``sh_cnt``: the image's shingles
-        that occur more than once in the corpus, with their counts (null
-        when there are none), from one explode ⋈ shingle_counts → regroup
-        per image. Both kernels read it in place of the broadcast."""
-        df = sketches.select(*cols)
+    def _stop_shingles(self, counts: DataFrame, n_items: int, vocab) -> np.ndarray:
+        """The sorted shingles whose corpus count exceeds the band df limit
+        (the stop set the band kernel masks). Below the cap they are cut
+        from the ``vocab`` slice on the driver, with no Spark job: the
+        limit is ≥ 1, so no shingle missing from the cnt ≥ 2 slice is one.
+        Above it one action fetches ``cnt > limit``, probed and bounded
+        like the vocab fetch."""
+        limit = self.cfg.band_df_limit(n_items)
         if vocab is not None:
-            return df
-        sh_cnt = (
-            sketches.select("image_id", F.explode("shingles").alias("shingle"))
-            .join(counts.filter(F.col("cnt") >= 2), "shingle")
-            .groupBy("image_id")
-            .agg(F.collect_list(F.struct("shingle", "cnt")).alias("sh_cnt"))
+            keys, cnts = vocab.value
+            return keys[cnts > limit]
+        tbl = (
+            counts.filter(F.col("cnt") > limit)
+            .select("shingle")
+            .limit(STOP_SHINGLES_MAX + 1)
+            .toArrow()
         )
-        return df.join(sh_cnt, "image_id", "left")
-
-    def _band_df_limit(self, n_items: int) -> int:
-        """Relative informative-shingle df limit (see config.band_max_df_abs
-        for why a fixed absolute cap decays recall as the corpus grows)."""
-        cfg = self.cfg
-        limit = max(cfg.band_max_df_min, int(cfg.band_max_df_frac * n_items))
-        if cfg.band_max_df_abs is not None:
-            limit = min(limit, cfg.band_max_df_abs)
-        return limit
+        if tbl.num_rows > STOP_SHINGLES_MAX:
+            raise ValueError(f"over {STOP_SHINGLES_MAX} shingles occur in > {limit} images")
+        return np.sort(tbl.column("shingle").to_numpy())
 
     def _stage_candidates(
         self, sketches: DataFrame, counts: DataFrame, n_items: int, vocab
@@ -307,21 +312,18 @@ class DedupStages:
         """MinHash/LSH banding → distinct candidate pairs (id_a < id_b).
         ``n_items`` (sketch rows) is threaded in from the stage manifests,
         so it is not re-counted here. One mapInArrow kernel
-        (udfs.make_multi_band_fn) drops stop-shingles and bands all three
-        LSH families (source-aware banding, see SketchConfig), reading the
-        counts from the ``vocab`` broadcast or, above its cap, from
-        ``sh_cnt``."""
+        (udfs.make_multi_band_fn) drops the stop-shingles
+        (``_stop_shingles``) and bands all three LSH families (source-aware
+        banding, see SketchConfig)."""
         cfg = self.cfg
         # stop-shingle masking (corpus analog of sylph's repeat masking,
         # sketch.rs:590-600): drop shingles with document frequency above the
         # limit from BANDING input — boilerplate shingles otherwise create
         # dense buckets and quadratic candidate growth. Scoring still uses
         # the full sets.
-        bands = self._with_sh_cnt(
-            sketches, ["image_id", "img_shingles", "cap_shingles"], counts, vocab
-        ).mapInArrow(
-            udfs.make_multi_band_fn(cfg, self._band_df_limit(n_items), vocab),
-            schema=udfs.BAND_SCHEMA,
+        stop = self._stop_shingles(counts, n_items, vocab)
+        bands = sketches.select("image_id", "img_shingles", "cap_shingles").mapInArrow(
+            udfs.make_multi_band_fn(cfg, stop), schema=udfs.BAND_SCHEMA
         )
         # Bucketize in ONE hash aggregate (no window: the previous
         # row_number/count-over pair forced a full sort-shuffle of the band
@@ -411,9 +413,19 @@ class DedupStages:
         gates every pair: no explode, no regrouping aggregate and no second
         crossing into Python. The counts come from the ``vocab`` broadcast
         or, above its cap, from side a's ``sh_cnt`` (every shared shingle is
-        in a)."""
+        in a): the image's shingles that occur more than once in the corpus,
+        with their counts (null when there are none), from one explode ⋈
+        shingle_counts → regroup per image."""
         cols = ["image_id", "n_shingles", "shingles", "simhash", "caption"]
-        prof_a = self._with_sh_cnt(sketches, cols, counts, vocab)
+        prof_a = sketches.select(*cols)
+        if vocab is None:
+            sh_cnt = (
+                sketches.select("image_id", F.explode("shingles").alias("shingle"))
+                .join(counts.filter(F.col("cnt") >= 2), "shingle")
+                .groupBy("image_id")
+                .agg(F.collect_list(F.struct("shingle", "cnt")).alias("sh_cnt"))
+            )
+            prof_a = prof_a.join(sh_cnt, "image_id", "left")
 
         def side(df: DataFrame, s: str) -> DataFrame:
             return df.withColumnsRenamed(
@@ -522,7 +534,7 @@ class DedupStages:
             pairs.groupBy("bucket")
             .cogroup(items.groupBy("bucket"))
             .applyInArrow(
-                udfs.make_rescore_arrow_fn(cfg, self._band_df_limit(n_items)),
+                udfs.make_rescore_arrow_fn(cfg, cfg.band_df_limit(n_items)),
                 schema=udfs.SCORE_SCHEMA,
             )
         )

@@ -189,11 +189,11 @@ def _band_batch(ids_rep, bands, hashes) -> pa.RecordBatch:
 
 
 def _count_table(batch: pa.RecordBatch, counts_bc):
-    """The sorted (shingles, counts) a kernel reads corpus multiplicities
-    from: the cnt ≥ 2 slice of shingle_counts, as the broadcast
-    ``counts_bc`` or, above the broadcast cap (``counts_bc`` None), as the
-    union of the batch's own ``sh_cnt`` lists (each image's shingles with
-    cnt ≥ 2; a shingle's count is the same in every row)."""
+    """The sorted (shingles, counts) the pair kernel reads corpus
+    multiplicities from: the cnt ≥ 2 slice of shingle_counts, as the
+    broadcast ``counts_bc`` or, above the broadcast cap (``counts_bc``
+    None), as the union of the batch's own ``sh_cnt`` lists (side a's
+    shingles with cnt ≥ 2; a shingle's count is the same in every row)."""
     if counts_bc is not None:
         return counts_bc.value
     sh_cnt = batch.column(batch.schema.get_field_index("sh_cnt")).flatten()
@@ -202,29 +202,36 @@ def _count_table(batch: pa.RecordBatch, counts_bc):
     return keys, fields["cnt"].to_numpy()[first]
 
 
-def _multiplicity(keys: np.ndarray, cnts: np.ndarray, vals: np.ndarray) -> np.ndarray:
-    """The corpus count of each of ``vals`` by ``searchsorted`` into the
-    sorted ``keys`` (``cnts`` aligned): a shingle absent from the cnt ≥ 2
-    slice occurs once."""
-    out = np.ones(vals.size, dtype=np.int32)
+def _lookup(keys: np.ndarray, vals: np.ndarray):
+    """(pos, hit): where each of ``vals`` sits in the sorted ``keys``
+    (``searchsorted``) and whether it is there."""
     pos = np.searchsorted(keys, vals)
     hit = pos < keys.size
     hit[hit] = keys[pos[hit]] == vals[hit]
+    return pos, hit
+
+
+def _multiplicity(keys: np.ndarray, cnts: np.ndarray, vals: np.ndarray) -> np.ndarray:
+    """The corpus count of each of ``vals`` by lookup in the sorted
+    ``keys`` (``cnts`` aligned): a shingle absent from the cnt ≥ 2 slice
+    occurs once."""
+    out = np.ones(vals.size, dtype=np.int32)
+    pos, hit = _lookup(keys, vals)
     out[hit] = cnts[pos[hit]]
     return out
 
 
-def make_multi_band_fn(cfg: SketchConfig, limit: int, counts_bc=None):
-    """mapInArrow: (image_id, img_shingles, cap_shingles[, sh_cnt]) → band
-    rows (image_id, band, band_hash) for ALL THREE LSH families in one
-    pass, whole-batch vectorized: the combined img ∪ cap set bands
-    wide/shallow for cross-modal partial similarity, the image-only and
-    caption-only families narrow/deep for pairs near-identical in that
-    modality (``band`` is offset per family). Stop-shingles (corpus count
-    above ``limit``) are dropped first, with the counts read through
-    ``_count_table``. ``counts_bc`` is a SparkContext.broadcast, which
-    ships ONCE per executor, while a closure capture would re-deserialize
-    the (possibly multi-MB) arrays with every task."""
+def make_multi_band_fn(cfg: SketchConfig, stop: np.ndarray):
+    """mapInArrow: (image_id, img_shingles, cap_shingles) → band rows
+    (image_id, band, band_hash) for ALL THREE LSH families in one pass,
+    whole-batch vectorized: the combined img ∪ cap set bands wide/shallow
+    for cross-modal partial similarity, the image-only and caption-only
+    families narrow/deep for pairs near-identical in that modality
+    (``band`` is offset per family). The stop-shingles ``stop`` (sorted:
+    the shingles whose corpus count exceeds the band df limit) are dropped
+    first by membership, the repeat mask of sylph's ``duplicate_set``
+    (sketch.rs:590-600). Fewer than Σcnt/limit shingles can exceed the
+    limit, so the closure carries a small array on every path."""
     families = (
         (0, cfg.num_bands, cfg.rows_per_band),
         (cfg.num_bands, cfg.family_bands, cfg.family_rows),
@@ -239,13 +246,12 @@ def make_multi_band_fn(cfg: SketchConfig, limit: int, counts_bc=None):
             n = batch.num_rows
             idx_id = batch.schema.get_field_index("image_id")
             ids_np = np.array(batch.column(idx_id).to_pylist(), dtype=object)
-            counts = _count_table(batch, counts_bc)
             img_flat, img_cnt = _list_col_numpy(batch, "img_shingles")
             cap_flat, cap_cnt = _list_col_numpy(batch, "cap_shingles")
             img_pid = np.repeat(np.arange(n), img_cnt)
             cap_pid = np.repeat(np.arange(n), cap_cnt)
-            im = _multiplicity(*counts, img_flat) <= limit
-            cm = _multiplicity(*counts, cap_flat) <= limit
+            im = ~_lookup(stop, img_flat)[1]
+            cm = ~_lookup(stop, cap_flat)[1]
             img_f, img_p = img_flat[im], img_pid[im]
             cap_f, cap_p = cap_flat[cm], cap_pid[cm]
             # combined family = img ∪ cap multiset per item (min over the
@@ -763,8 +769,9 @@ def _gate(
     caption LCS in UTF-8 bytes through ``lcs_fn`` (make_lcs_fn), null
     unless the row clears tau and ``simhash_max_hamming``; and ``gated``,
     such a row whose lcs ≥ min(lcs_min_len, min_len) and ≥ lcs_min_frac ·
-    min_len, or whose shorter caption is empty. ``min_len`` counts
-    characters (a null caption gives NaN, which fails the rule)."""
+    min_len, or whose shorter caption is empty. ``min_len`` counts UTF-8
+    bytes, the unit of ``lcs`` (a null caption gives NaN, which fails the
+    rule)."""
     def col(name: str) -> pa.Array:
         return batch.column(name).filter(keep)
 
@@ -776,8 +783,8 @@ def _gate(
     cap_a, cap_b = col("cap_a").filter(sel), col("cap_b").filter(sel)
     v = lcs_fn(cap_a.to_pandas(), cap_b.to_pandas()).to_numpy()
     min_len = np.minimum(
-        pc.utf8_length(cap_a).to_numpy(zero_copy_only=False),
-        pc.utf8_length(cap_b).to_numpy(zero_copy_only=False),
+        pc.binary_length(cap_a).to_numpy(zero_copy_only=False),
+        pc.binary_length(cap_b).to_numpy(zero_copy_only=False),
     )
     lcs = np.zeros(ok.size, np.int64)
     lcs[ok] = v
@@ -910,9 +917,7 @@ def _rescore_bucket(
         np.arange(items.num_rows), pc.list_value_length(ish_list).to_numpy()
     )
     ish = ish_list.flatten().to_numpy()
-    pos = np.searchsorted(uniq, ish)
-    hit = pos < uniq.size
-    hit[hit] = uniq[pos[hit]] == ish[hit]
+    pos, hit = _lookup(uniq, ish)
     ii = ii[hit]
     key = cl[ii] * uniq.size + pos[hit]
     # winner per key = the highest-ranked item holding the shingle

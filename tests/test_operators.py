@@ -4,7 +4,6 @@ stage ships and of the txt_langid entry SQL, over small synthetic inputs."""
 
 from collections import defaultdict
 from dataclasses import replace
-from types import SimpleNamespace
 
 import numpy as np
 import pyarrow as pa
@@ -55,7 +54,7 @@ class TestDedupOps:
         ]
         assert 0.65 <= float(np.median(jac)) <= 0.75
         # the sets are image shingles with no caption; every shingle occurs
-        # once (no counts), under any stop-shingle limit
+        # once, so none is a stop-shingle
         batch = pa.RecordBatch.from_arrays(
             [
                 pa.array(ids, pa.string()),
@@ -64,12 +63,9 @@ class TestDedupOps:
             ],
             names=["image_id", "img_shingles", "cap_shingles"],
         )
-        no_counts = SimpleNamespace(
-            value=(np.empty(0, np.int64), np.empty(0, np.int32))
-        )
 
         def candidate_pairs(cfg):
-            fn = udfs.make_multi_band_fn(cfg, 1, no_counts)
+            fn = udfs.make_multi_band_fn(cfg, np.empty(0, np.int64))
             buckets = defaultdict(set)
             for out in fn(iter([batch])):
                 for iid, band, h in zip(*(c.to_pylist() for c in out.columns)):

@@ -6,6 +6,7 @@ path-equivalence tests, /root/reference/tests/integration_test.rs:246-295).
 
 import os
 import shutil
+from dataclasses import replace
 
 import numpy as np
 import pytest
@@ -372,22 +373,65 @@ def test_pair_shingles_plan_shape(spark_result):
     assert not re.search(r"Python|Arrow|Pandas|Exchange|Join", plan), plan
 
 
-def test_candidates_plan_shape(spark_result):
-    """Plan-shape guard for the candidates stage over committed sketches
-    and shingle_counts, with the vocab broadcast: one MapInArrow drops
-    stop-shingles and bands all three LSH families, with no join (the
-    counts are looked up in the kernel); the exchanges, explodes and
-    aggregates are those of bucketing and pair generation, pinned from
-    the built plan. A per-family explode ⋈ counts → regroup branch fails
-    here."""
+def _plan_ops(df) -> dict[str, int]:
+    """How many of each shuffle-shaping operator the executed plan of
+    ``df`` holds."""
     import re
 
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return {op: len(re.findall(rf"\b{op}\b", plan)) for op in ("Exchange", "Sort", "Window", "Expand")}
+
+
+def test_sketches_plan_shape(spark, spark_result, corpus, tmp_path):
+    """Plan-shape guard for the sketches stage over a committed
+    one-file images table, the under-partitioned input: one exchange
+    (hash on image_id) spreads it before the MapInArrow, with no sort,
+    window or expand (values pinned from the built plan)."""
+    pipe, _, _ = spark_result
+    images, _ = corpus
+    path = str(tmp_path / "images")
+    images_df_from_pandas(spark, images).coalesce(1).write.parquet(path)
+    ops = _plan_ops(pipe._stage_sketches(spark.read.parquet(path)))
+    assert ops["Exchange"] <= 1 and ops["Sort"] == 0, ops
+    assert ops["Window"] == 0 and ops["Expand"] == 0, ops
+
+
+def test_survivors_plan_shape(spark_result):
+    """Plan-shape guard for the survivors stage over committed clusters
+    and verified: the rep_score aggregate and the per-cluster min_by
+    aggregate are the only exchanges, min_by's sort aggregate the only
+    sorts (the small rep_score side is broadcast), with no window and no
+    expand (values pinned from the built plan)."""
     pipe, out, _ = spark_result
+    ops = _plan_ops(pipe._stage_survivors(out["clusters"], out["verified"]))
+    assert ops["Exchange"] <= 2 and ops["Sort"] <= 2, ops
+    assert ops["Window"] == 0 and ops["Expand"] == 0, ops
+
+
+@pytest.mark.parametrize("vocab_max", [None, 0])
+def test_candidates_plan_shape(spark_result, vocab_max, monkeypatch):
+    """Plan-shape guard for the candidates stage over committed sketches
+    and shingle_counts, with the vocab broadcast and above its cap
+    (``VOCAB_BROADCAST_MAX`` at 0): one MapInArrow drops stop-shingles and
+    bands all three LSH families, with no join on either path (the kernel
+    reads the stop set, not per-image counts); the exchanges, explodes and
+    aggregates are those of bucketing and pair generation, pinned from
+    the built plan. A per-family explode ⋈ counts → regroup branch, or a
+    ``sh_cnt`` join onto the band input, fails here."""
+    import re
+
+    from sylph_spark import pipeline
+
+    if vocab_max is not None:
+        monkeypatch.setattr(pipeline, "VOCAB_BROADCAST_MAX", vocab_max)
+    pipe, out, _ = spark_result
+    vocab = pipe._stage_vocab(out["shingle_counts"])
+    assert (vocab is None) == (vocab_max == 0)
     df = pipe._stage_candidates(
         out["sketches"],
         out["shingle_counts"],
         pipe.catalog.manifest("sketches").rows,
-        pipe._stage_vocab(out["shingle_counts"]),
+        vocab,
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, plan
@@ -627,23 +671,32 @@ def test_distributed_cc_pipeline_parity(spark, corpus, monkeypatch):
 
 def test_banding_join_path_parity(spark, corpus, volatile_result, monkeypatch):
     """Above ``VOCAB_BROADCAST_MAX`` cnt ≥ 2 shingles nothing is broadcast:
-    the banding and pair_shingles kernels read each image's ``sh_cnt``
-    (explode ⋈ shingle_counts → regroup per image) in place of the vocab
-    broadcast. Forcing that path (cap 0) must give the same candidates,
-    pair_shingles, scored, cluster labels and survivors as the default
-    broadcast path. The fixture's duplicates are near-identical, so any
-    banding finds them: the band kernel is also compared row for row on
-    its sketches, fed both ways."""
-    from types import SimpleNamespace
-
-    from sylph_spark import pipeline, udfs
+    the pair_shingles kernel reads side a's ``sh_cnt`` (explode ⋈
+    shingle_counts → regroup per image) in place of the vocab broadcast,
+    and the band kernel's stop set is collected on its own. Forcing that
+    path (cap 0) must give the same candidates, pair_shingles, scored,
+    cluster labels and survivors as the default broadcast path, and the
+    stop set cut from the vocab slice must equal the one collected at
+    cap 0, under the default limit and under one low enough to mask
+    shingles of this corpus."""
+    from sylph_spark import pipeline
     from sylph_spark.pipeline import DedupStages, run_volatile
 
     images, _ = corpus
     cfg = SketchConfig()
+    broadcast, _ = volatile_result
+    sketches, counts = broadcast["sketches"], broadcast["shingle_counts"]
+    n_items = sketches.count()
+    vocab = DedupStages(spark, cfg)._stage_vocab(counts)
+    assert vocab is not None
+    sliced = {}
+    for low in (False, True):
+        c = replace(cfg, band_max_df_min=2) if low else cfg
+        sliced[low] = DedupStages(spark, c)._stop_shingles(counts, n_items, vocab)
+    assert sliced[True].size > sliced[False].size
+
     monkeypatch.setattr(pipeline, "VOCAB_BROADCAST_MAX", 0)
     joined = run_volatile(spark, images_df_from_pandas(spark, images), cfg)
-    broadcast, _ = volatile_result
     assert broadcast["candidates"].count() > 0
     # pair_shingles from sh_cnt against the broadcast (inter_cnt compared
     # as a sorted array)
@@ -652,30 +705,12 @@ def test_banding_join_path_parity(spark, corpus, volatile_result, monkeypatch):
         assert joined[stage].columns == broadcast[stage].columns, stage
 
     stages = DedupStages(spark, cfg)
-    sketches, counts = broadcast["sketches"], broadcast["shingle_counts"]
     assert stages._stage_vocab(counts) is None
-    with_cnt = stages._with_sh_cnt(
-        sketches, ["image_id", "img_shingles", "cap_shingles"], counts, None
-    ).toArrow()
-    assert with_cnt.column("sh_cnt").null_count < with_cnt.num_rows
-    shared = counts.filter(F.col("cnt") >= 2).toArrow()
-    keys = shared.column("shingle").to_numpy()
-    order = np.argsort(keys)
-    bc = SimpleNamespace(value=(keys[order], shared.column("cnt").to_numpy()[order]))
-
-    def band_rows(fn, table):
-        return {
-            tuple(r.values())
-            for b in fn(iter(table.to_batches(max_chunksize=50)))
-            for r in b.to_pylist()
-        }
-
-    limit = stages._band_df_limit(sketches.count())
-    from_bc = band_rows(
-        udfs.make_multi_band_fn(cfg, limit, bc), with_cnt.drop(["sh_cnt"])
-    )
-    assert from_bc == band_rows(udfs.make_multi_band_fn(cfg, limit), with_cnt)
-    assert len({r[1] for r in from_bc}) == cfg.num_bands + 2 * cfg.family_bands
+    for low in (False, True):
+        c = replace(cfg, band_max_df_min=2) if low else cfg
+        got = DedupStages(spark, c)._stop_shingles(counts, n_items, None)
+        assert got.dtype == np.int64
+        assert np.array_equal(got, sliced[low]), low
 
 
 @pytest.fixture(scope="module")

@@ -244,9 +244,11 @@ GATE_ROWS = [
     (0, (1 << 26) - 1, "a caption", "a caption"),  # hamming 26, equal captions
     (0, -1 ^ ((1 << 37) - 1), "a caption", "a caption"),  # hamming 27: no LCS
     (5, 5, "", "a caption"),  # one empty caption: min_len 0 passes
-    # LCS "ééé" is 6 UTF-8 bytes: it passes against min_len 6 characters
-    # (min(8, 6)), and would fail against 12 bytes (min(8, 12))
+    # LCS and min_len count UTF-8 bytes: "ééé" (6 bytes) fails against
+    # min(8, 12 bytes), though it would pass against min(8, 6 characters);
+    # "éééé" (8 bytes) passes against min(8, 8 bytes)
     (7, 7, "éééééé", "ééé" + "x" * 30),
+    (7, 7, "éééé", "éééé" + "x" * 30),
     (9, 9, "the same words here", "other words entirely"),  # LCS 7 < 8
 ]
 
@@ -328,7 +330,7 @@ def _gate_reference(sim_a, sim_b, cap_a, cap_b, adj, cfg):
     if adj < cfg.tau or hamming > cfg.simhash_max_hamming:
         return hamming, None, False
     lcs = K.longest_common_substring(cap_a, cap_b)
-    m = min(len(cap_a), len(cap_b))
+    m = min(len(cap_a.encode()), len(cap_b.encode()))
     ok = m == 0 or (lcs >= min(cfg.lcs_min_len, m) and lcs >= cfg.lcs_min_frac * m)
     return hamming, lcs, ok
 
@@ -416,17 +418,18 @@ def test_pair_shingles_kernel_matches_reference():
     assert "a00004" not in ids  # empty intersection
     assert "a00005" in ids and "a00006" not in ids  # prefilter boundary
     assert set(got["adjust_status"]) >= {"high", "low"}
-    # the gate rows (a00007-a00011) and the row just under tau (a00003)
+    # the gate rows (a00007-a00012) and the row just under tau (a00003)
     g = got.set_index("id_a")
-    assert (g.loc[[f"a{i:05d}" for i in range(7, 12)], "adj_sim"] >= cfg.tau).all()
+    assert (g.loc[[f"a{i:05d}" for i in range(7, 13)], "adj_sim"] >= cfg.tau).all()
     assert np.isnan(g.at["a00003", "lcs"]) and not g.at["a00003", "gated"]
     assert g.at["a00007", "hamming"] == 26 and g.at["a00007", "lcs"] == len("a caption")
     assert g.at["a00007", "gated"]
     assert g.at["a00008", "hamming"] == 27 and np.isnan(g.at["a00008", "lcs"])
     assert not g.at["a00008", "gated"]
     assert g.at["a00009", "lcs"] == 0 and g.at["a00009", "gated"]
-    assert g.at["a00010", "lcs"] == 6 and g.at["a00010", "gated"]
-    assert g.at["a00011", "lcs"] == 7 and not g.at["a00011", "gated"]
+    assert g.at["a00010", "lcs"] == 6 and not g.at["a00010", "gated"]
+    assert g.at["a00011", "lcs"] == 8 and g.at["a00011", "gated"]
+    assert g.at["a00012", "lcs"] == 7 and not g.at["a00012", "gated"]
     # the random rows reach both sides of the hamming cap and of the rule
     assert got["gated"].any() and (~got["gated"] & got["lcs"].notna()).any()
     # tau equal to a00003's adj_sim lets it through

@@ -96,7 +96,7 @@ class TestRescoreKernel:
 
         # df limit 4: shingle 999 (in all 6 items) never competes; shingle
         # 100 is informative and shared by both clusters {A,B,C,D} and {X,Y}
-        cfg = SketchConfig(band_max_df_abs=4)
+        cfg = SketchConfig(band_max_df_min=4)
         sketches = [
             _sketch("A", [1, 2, 3, 4, 100, 999]),
             _sketch("B", [1, 2, 3, 4, 5, 100, 999]),
@@ -106,7 +106,7 @@ class TestRescoreKernel:
             _sketch("Y", [100, 200, 201, 202, 203, 999]),
         ]
         counts = oracle.corpus_counts(sketches)
-        assert oracle.band_df_limit(cfg, len(sketches)) == 4
+        assert cfg.band_df_limit(len(sketches)) == 4
         assert counts[999] > 4 and counts[100] == 4
         scored = pd.DataFrame(
             [
@@ -145,7 +145,7 @@ class TestRescoreKernel:
                 "shingles": [by_id[i].shingles.astype(np.int64) for i in order],
             }
         )
-        limit = oracle.band_df_limit(cfg, len(sketches))
+        limit = cfg.band_df_limit(len(sketches))
         got = (
             udfs.make_rescore_arrow_fn(cfg, limit)(pairs, items)
             .to_pandas()
