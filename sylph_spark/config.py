@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -56,13 +56,6 @@ class SketchConfig:
     # λ estimation guards (constants.rs:4, cmdline.rs:94-95)
     min_count_correct: float = 3.0
     estimator: str = "ratio"
-    # two-pass winner-table rescoring (contain.rs:410-459 winner table,
-    # consumed at contain.rs:637-645; derep at contain.rs:353-375): each
-    # shingle is owned by the highest-scoring first-pass item containing it;
-    # pairs are rescored on the shingles they still own (kmers_lost tracks
-    # the reassigned ones) and dropped when reassignment exceeds
-    # tau^ani_k · total_kmers. False = single-pass ablation.
-    winner_rescore: bool = True
     # bootstrap CI resamples per scored pair (contain.rs:849-898; reference
     # uses 100 with --ci). 0 = off (CI columns emitted as NaN) — it is a
     # per-pair 100× resampling cost, so off by default at scale.
@@ -112,10 +105,6 @@ class SketchConfig:
     pair_chunk: int = 256
     seed: int = 42
 
-    @property
-    def num_hashes(self) -> int:
-        return self.num_bands * self.rows_per_band
-
     def band_df_limit(self, n_items: int) -> int:
         """The stop-shingle document-frequency limit over ``n_items``."""
         return max(self.band_max_df_min, int(self.band_max_df_frac * n_items))
@@ -125,7 +114,3 @@ class SketchConfig:
 
     def config_hash(self) -> str:
         return hashlib.sha256(self.to_json().encode()).hexdigest()[:16]
-
-    @staticmethod
-    def from_json(s: str) -> "SketchConfig":
-        return SketchConfig(**json.loads(s))

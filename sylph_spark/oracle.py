@@ -223,7 +223,7 @@ def winner_rescore(
         "median_cov",
         "kmers_lost",
     ]
-    if not cfg.winner_rescore or scored.empty:
+    if scored.empty:
         out = scored.copy()
         out["kmers_lost"] = 0
         return out

@@ -13,10 +13,10 @@ materialiser:
 - ``Durable`` (``DedupPipeline.run``): each stage commits a table through
   StageCatalog, or is skipped when a committed manifest matches the config
   hash and input fingerprint, so a killed job resumes at the first stage
-  without one. Row counts come from the manifests.
-- ``Volatile`` (``run_volatile``): localCheckpoint barriers and ``count()``
-  row counts, no catalog. Checkpoints truncate lineage, so a lost executor
-  fails the run: this path is not fault-tolerant.
+  without one.
+- ``Volatile`` (``run_volatile``): localCheckpoint barriers, no catalog.
+  Checkpoints truncate lineage, so a lost executor fails the run: this
+  path is not fault-tolerant.
 
 Stages:
 
@@ -55,15 +55,17 @@ Scale design notes (for the 10^12-row cluster, tested at local[*]):
   across ~(size/chunk)² tasks instead of one — the salted-key skew
   mitigation required by the north rule;
 - shingle_counts is a map-side-combined hash aggregate. One driver
-  collect (the ``vocab`` node) fetches its cnt ≥ 2 slice, which the
-  pair_shingles kernel reads as one broadcast. The banding kernel reads
-  only the stop set (count above the band df limit): fewer than
-  Σcnt/limit shingles, at most mean shingles per image / band_max_df_frac
-  whatever the corpus size, so it rides in the kernel's closure, cut from
-  the vocab slice on the driver. Above ``VOCAB_BROADCAST_MAX`` shingles
-  nothing is broadcast: the stop set is its own bounded collect, and the
-  one (image_id, shingle) join, explode ⋈ shingle_counts → regroup per
-  image, gives pair side a its own counts;
+  value (the ``vocab`` node, the only stage that reads the sketch row
+  count) carries what both kernels read of it: the cnt ≥ 2 slice as one
+  broadcast, which the pair kernel looks multiplicities up in, and the
+  stop set (count above the band df limit), which the banding kernel
+  masks and the rescore kernel keeps out of the winner competition. The
+  stop set has fewer than Σcnt/limit shingles, at most mean shingles per
+  image / band_max_df_frac whatever the corpus size, so it rides in both
+  kernels' closures. Below ``VOCAB_BROADCAST_MAX`` shingles it is cut from
+  the slice on the driver; above it nothing is broadcast, the stop set is
+  its own bounded collect, and the one (image_id, shingle) join, explode
+  ⋈ shingle_counts → regroup per image, gives pair side a its own counts;
 - the pair kernel reads both items' captions, so the captions of every
   candidate pair cross into Python, not only those of the pairs the gate's
   LCS looks at; in exchange the gate needs no join and no Python crossing
@@ -85,6 +87,7 @@ from typing import NamedTuple
 import numpy as np
 import pandas as pd
 
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -97,11 +100,11 @@ from .session import heavy_payload_batches
 
 # the most cnt ≥ 2 shingles the vocab node broadcasts (12 bytes each); above
 # it the pair kernel reads side a's per-image counts and the stop set is
-# collected on its own (DedupStages._stop_shingles). It picks a plan, not
+# collected on its own (DedupStages._stage_vocab). It picks a plan, not
 # an output, so it is not part of SketchConfig.
 VOCAB_BROADCAST_MAX = 5_000_000
-# the most stop shingles the driver collects for the band mask above the
-# vocab cap. Fewer than Σcnt/limit exist, at most mean shingles per image /
+# the most stop shingles the driver collects above the vocab cap. Fewer
+# than Σcnt/limit exist, at most mean shingles per image /
 # band_max_df_frac (6,734 at 48k images, 388 of them real), so a corpus
 # reaches this only if its images average 20k shingles.
 STOP_SHINGLES_MAX = 1_000_000
@@ -179,12 +182,11 @@ def lcs_prefilter_stats(
 
 class Node(NamedTuple):
     """One node of the stage graph. ``volatile`` is what the volatile path
-    does with it: "checkpoint" (localCheckpoint, timed under ``barrier``),
-    "time" (the node materialises itself, timed under ``barrier``), "lazy"
-    (left to Catalyst to fuse into the next barrier's job), "count" (the
-    row count of its one input) or "value" (a driver-side value its builder
-    computes, on both paths); the last two are not stage tables. The
-    durable path commits every stage."""
+    does with it: "checkpoint" (localCheckpoint), "lazy" (left as built:
+    Catalyst fuses it into the next barrier's job, unless its builder runs
+    jobs of its own) or "value" (a driver-side value its builder computes,
+    on both paths, not a stage table). The durable path commits every
+    stage. A node with a ``barrier`` is timed under that key."""
 
     name: str
     inputs: tuple[str, ...]
@@ -192,14 +194,24 @@ class Node(NamedTuple):
     barrier: str | None = None
 
 
+class Vocab(NamedTuple):
+    """What the kernels read of shingle_counts (``DedupStages._stage_vocab``):
+    ``counts``, the broadcast sorted (shingles, counts) of its cnt ≥ 2
+    slice, None above ``VOCAB_BROADCAST_MAX``; ``stop``, the sorted
+    shingles whose count exceeds the band df limit."""
+
+    counts: Broadcast | None
+    stop: np.ndarray
+
+
 GRAPH = (
     Node("sketches", ("images",), "checkpoint", "sketches"),
     Node("shingle_counts", ("sketches",), "checkpoint", "shingle_counts"),
-    Node("n_items", ("sketches",), "count", "counts(2)"),
-    # the one driver collect of shingle_counts, read by both kernels below
-    # (the band kernel through the stop set cut from it)
-    Node("vocab", ("shingle_counts",), "value", "counts(2)"),
-    Node("candidates", ("sketches", "shingle_counts", "n_items", "vocab"), "lazy"),
+    Node("n_items", ("sketches",), "value", "counts(2)"),
+    # the one driver collect of shingle_counts and the only reader of
+    # n_items: the kernels below read the df limit through its stop set
+    Node("vocab", ("shingle_counts", "n_items"), "value", "counts(2)"),
+    Node("candidates", ("sketches", "vocab"), "lazy"),
     # pair_shingles feeds both scoring passes; lazy candidates
     # materialises inside its barrier
     Node(
@@ -212,16 +224,16 @@ GRAPH = (
     # selects them and gated filters on them
     Node("scored", ("pair_shingles",), "lazy"),
     Node("gated", ("pair_shingles",), "lazy"),
-    Node("rescored", ("pair_shingles", "sketches", "n_items"), "checkpoint", "rescored"),
+    Node("rescored", ("pair_shingles", "sketches", "vocab"), "checkpoint", "rescored"),
     # verified's one consumer (survivors' rep_score) references it once and
     # both its join inputs read checkpoints: the tiny join fuses into the
     # survivors job instead of paying its own barrier
     Node("verified", ("rescored", "gated"), "lazy"),
     # the CC driver loop (bounded Arrow collect + numpy) materialises itself
-    Node("clusters", ("sketches", "gated"), "time", "clusters(cc)"),
+    Node("clusters", ("sketches", "gated"), "lazy", "clusters(cc)"),
     Node("survivors", ("clusters", "verified"), "lazy"),
 )
-STAGES = [n.name for n in GRAPH if n.volatile not in ("count", "value")]
+STAGES = [n.name for n in GRAPH if n.volatile != "value"]
 
 
 class DedupStages:
@@ -261,41 +273,42 @@ class DedupStages:
             .agg(F.count(F.lit(1)).cast("int").alias("cnt"))
         )
 
-    def _stage_vocab(self, counts: DataFrame):
-        """The multiplicities the pair kernel reads (udfs._count_table), and
-        below the cap the source of the band kernel's stop set: the cnt ≥ 2
-        slice of shingle_counts, sorted by shingle and broadcast; a shingle
-        absent from it occurs once. One action probes the size and fetches
-        the slice, ``limit(cap + 1).toArrow()`` (the probe-and-fetch of
-        cc.connected_components), which bounds the driver transfer. Above
-        ``VOCAB_BROADCAST_MAX`` rows it returns None, and the pair kernel
-        reads side a's own counts (``_stage_pair_shingles``). A driver value
-        is not committed, so the durable path runs this collect on every
-        pass, a fully resumed one included."""
+    def _stage_n_items(self, sketches: DataFrame) -> int:
+        return sketches.count()
+
+    def _stage_vocab(self, counts: DataFrame, n_items: int) -> Vocab:
+        """What both kernels read of shingle_counts, decided once as sylph
+        decides its repeat mask (sketch.rs:590-600):
+
+        - ``counts``, the multiplicities the pair kernel reads
+          (udfs._count_table): the cnt ≥ 2 slice, sorted by shingle and
+          broadcast; a shingle absent from it occurs once. One action
+          probes the size and fetches the slice, ``limit(cap + 1).toArrow()``
+          (the probe-and-fetch of cc.connected_components), which bounds
+          the driver transfer. Above ``VOCAB_BROADCAST_MAX`` rows it is
+          None, and the pair kernel reads side a's own counts
+          (``_stage_pair_shingles``).
+        - ``stop``, the shingles whose count exceeds the band df limit over
+          ``n_items``: the band kernel masks them and the rescore kernel
+          keeps them out of the winner competition. Below the cap they are
+          cut from the slice with no Spark job (the limit is ≥ 1, so no
+          shingle missing from it is one); above it one more action fetches
+          ``cnt > limit``, probed and bounded the same way.
+
+        A driver value is not committed, so the durable path runs these
+        collects on every pass, a fully resumed one included."""
+        limit = self.cfg.band_df_limit(n_items)
         tbl = (
             counts.filter(F.col("cnt") >= 2)
             .limit(VOCAB_BROADCAST_MAX + 1)
             .toArrow()
         )
-        if tbl.num_rows > VOCAB_BROADCAST_MAX:
-            return None
-        keys = tbl.column("shingle").to_numpy()
-        order = np.argsort(keys)
-        return self.spark.sparkContext.broadcast(
-            (keys[order], tbl.column("cnt").to_numpy()[order])
-        )
-
-    def _stop_shingles(self, counts: DataFrame, n_items: int, vocab) -> np.ndarray:
-        """The sorted shingles whose corpus count exceeds the band df limit
-        (the stop set the band kernel masks). Below the cap they are cut
-        from the ``vocab`` slice on the driver, with no Spark job: the
-        limit is ≥ 1, so no shingle missing from the cnt ≥ 2 slice is one.
-        Above it one action fetches ``cnt > limit``, probed and bounded
-        like the vocab fetch."""
-        limit = self.cfg.band_df_limit(n_items)
-        if vocab is not None:
-            keys, cnts = vocab.value
-            return keys[cnts > limit]
+        if tbl.num_rows <= VOCAB_BROADCAST_MAX:
+            keys = tbl.column("shingle").to_numpy()
+            order = np.argsort(keys)
+            keys, cnts = keys[order], tbl.column("cnt").to_numpy()[order]
+            bc = self.spark.sparkContext.broadcast((keys, cnts))
+            return Vocab(bc, keys[cnts > limit])
         tbl = (
             counts.filter(F.col("cnt") > limit)
             .select("shingle")
@@ -304,26 +317,21 @@ class DedupStages:
         )
         if tbl.num_rows > STOP_SHINGLES_MAX:
             raise ValueError(f"over {STOP_SHINGLES_MAX} shingles occur in > {limit} images")
-        return np.sort(tbl.column("shingle").to_numpy())
+        return Vocab(None, np.sort(tbl.column("shingle").to_numpy()))
 
-    def _stage_candidates(
-        self, sketches: DataFrame, counts: DataFrame, n_items: int, vocab
-    ) -> DataFrame:
+    def _stage_candidates(self, sketches: DataFrame, vocab: Vocab) -> DataFrame:
         """MinHash/LSH banding → distinct candidate pairs (id_a < id_b).
-        ``n_items`` (sketch rows) is threaded in from the stage manifests,
-        so it is not re-counted here. One mapInArrow kernel
-        (udfs.make_multi_band_fn) drops the stop-shingles
-        (``_stop_shingles``) and bands all three LSH families (source-aware
-        banding, see SketchConfig)."""
+        One mapInArrow kernel (udfs.make_multi_band_fn) drops the
+        stop-shingles (``vocab.stop``) and bands all three LSH families
+        (source-aware banding, see SketchConfig)."""
         cfg = self.cfg
         # stop-shingle masking (corpus analog of sylph's repeat masking,
         # sketch.rs:590-600): drop shingles with document frequency above the
         # limit from BANDING input — boilerplate shingles otherwise create
         # dense buckets and quadratic candidate growth. Scoring still uses
         # the full sets.
-        stop = self._stop_shingles(counts, n_items, vocab)
         bands = sketches.select("image_id", "img_shingles", "cap_shingles").mapInArrow(
-            udfs.make_multi_band_fn(cfg, stop), schema=udfs.BAND_SCHEMA
+            udfs.make_multi_band_fn(cfg, vocab.stop), schema=udfs.BAND_SCHEMA
         )
         # Bucketize in ONE hash aggregate (no window: the previous
         # row_number/count-over pair forced a full sort-shuffle of the band
@@ -396,7 +404,11 @@ class DedupStages:
         )
 
     def _stage_pair_shingles(
-        self, candidates: DataFrame, sketches: DataFrame, counts: DataFrame, vocab
+        self,
+        candidates: DataFrame,
+        sketches: DataFrame,
+        counts: DataFrame,
+        vocab: Vocab,
     ) -> DataFrame:
         """(id_a, id_b) → (id_a, id_b, total_kmers, inter_cnt) + the
         first-pass score columns + the gate columns (hamming, lcs, gated),
@@ -411,14 +423,14 @@ class DedupStages:
         mapInArrow kernel (udfs.make_pair_shingles_fn) intersects them,
         applies the size prefilter, looks up the multiplicities, scores and
         gates every pair: no explode, no regrouping aggregate and no second
-        crossing into Python. The counts come from the ``vocab`` broadcast
-        or, above its cap, from side a's ``sh_cnt`` (every shared shingle is
-        in a): the image's shingles that occur more than once in the corpus,
-        with their counts (null when there are none), from one explode ⋈
-        shingle_counts → regroup per image."""
+        crossing into Python. The counts come from the ``vocab.counts``
+        broadcast or, above its cap, from side a's ``sh_cnt`` (every shared
+        shingle is in a): the image's shingles that occur more than once in
+        the corpus, with their counts (null when there are none), from one
+        explode ⋈ shingle_counts → regroup per image."""
         cols = ["image_id", "n_shingles", "shingles", "simhash", "caption"]
         prof_a = sketches.select(*cols)
-        if vocab is None:
+        if vocab.counts is None:
             sh_cnt = (
                 sketches.select("image_id", F.explode("shingles").alias("shingle"))
                 .join(counts.filter(F.col("cnt") >= 2), "shingle")
@@ -455,7 +467,7 @@ class DedupStages:
             )
         )
         return pairs.mapInArrow(
-            udfs.make_pair_shingles_fn(self.cfg, vocab),
+            udfs.make_pair_shingles_fn(self.cfg, vocab.counts),
             schema=udfs.PAIR_SHINGLES_SCHEMA,
         )
 
@@ -464,7 +476,7 @@ class DedupStages:
         return pair_shingles.select(*udfs.SCORE_PA_SCHEMA.names)
 
     def _stage_rescored(
-        self, pair_shingles: DataFrame, sketches: DataFrame, n_items: int
+        self, pair_shingles: DataFrame, sketches: DataFrame, vocab: Vocab
     ) -> DataFrame:
         """Two-pass winner-table rescoring (contain.rs:410-459 winner table,
         consumption at contain.rs:637-645, derep at contain.rs:353-375).
@@ -484,9 +496,9 @@ class DedupStages:
         arbitrates among genomes claimed present in the SAME sample
         (contain.rs:410), and the sample analog is the duplicate cluster,
         so unrelated clusters never steal a pair's shingles; (2) shingles
-        above the banding df limit never compete — the corpus analog of
-        removing repeat k-mers from genome sketches BEFORE the winner
-        table sees them (sketch.rs:595-600).
+        above the banding df limit (``vocab.stop``) never compete — the
+        corpus analog of removing repeat k-mers from genome sketches BEFORE
+        the winner table sees them (sketch.rs:595-600).
 
         Scale shape: the winner table is state local to one cluster, so the
         stage is ONE cogroup keyed by a bucket of clusters,
@@ -506,8 +518,6 @@ class DedupStages:
         cluster is the trivial case: every winner is one of its own pair,
         so the pair keeps its first-pass score with kmers_lost = 0."""
         cfg = self.cfg
-        if not cfg.winner_rescore:
-            return self._stage_scored(pair_shingles)
         # preliminary clusters = competition scope (first-pass edges only);
         # below the driver threshold the labels come out of one driver CC
         # pass and are broadcast into both joins below
@@ -534,7 +544,7 @@ class DedupStages:
             pairs.groupBy("bucket")
             .cogroup(items.groupBy("bucket"))
             .applyInArrow(
-                udfs.make_rescore_arrow_fn(cfg, cfg.band_df_limit(n_items)),
+                udfs.make_rescore_arrow_fn(cfg, vocab.stop),
                 schema=udfs.SCORE_SCHEMA,
             )
         )
@@ -591,8 +601,8 @@ class DedupStages:
     def run_graph(
         self, images: DataFrame, mat, stage_times: dict | None = None
     ) -> dict[str, DataFrame]:
-        """Materialise every node of ``GRAPH`` through ``mat`` (``commit``
-        a stage, give a stage's ``rows``) and return the ten stages.
+        """Materialise every node of ``GRAPH`` through ``mat.commit`` and
+        return the ten stages.
 
         Each node runs on its own thread as soon as its inputs are ready:
         nodes that do not depend on each other run as concurrent Spark jobs,
@@ -601,8 +611,9 @@ class DedupStages:
         scheduler only interleaves tasks. A node's jobs carry its name as
         their Spark job description. With ``stage_times``, the wall seconds
         of each node with a ``barrier`` accumulate under that key (the sketch
-        row count and the vocab collect under "counts(2)"); overlapping barriers overlap on the wall
-        clock, so their sum can exceed the elapsed time."""
+        row count and the vocab collects under "counts(2)"); overlapping
+        barriers overlap on the wall clock, so their sum can exceed the
+        elapsed time."""
         sc = self.spark.sparkContext
         lock = threading.Lock()
 
@@ -620,11 +631,8 @@ class DedupStages:
             try:
                 with scope:
                     t0 = time.time()
-                    if node.volatile == "count":
-                        out = mat.rows(node.inputs[0], args[0])
-                    else:
-                        build = getattr(self, "_stage_" + node.name)
-                        out = mat.commit(node, partial(build, *args))
+                    build = getattr(self, "_stage_" + node.name)
+                    out = mat.commit(node, partial(build, *args))
                     dt = time.time() - t0
             finally:
                 sc.setJobDescription(None)
@@ -649,8 +657,7 @@ class DedupStages:
 class Durable:
     """Catalog materialiser: commit each stage unless a committed manifest
     matches the config hash and input fingerprint (checkpoint/resume, north
-    rule; the input side mirrors contain.rs:503-516 compatibility). Row
-    counts come from the manifests, with no count action."""
+    rule; the input side mirrors contain.rs:503-516 compatibility)."""
 
     catalog: StageCatalog
     h: str
@@ -665,20 +672,14 @@ class Durable:
             cat.write(build(), node.name, self.h, extra={"input_fp": self.fp})
         return cat.read(node.name)
 
-    def rows(self, name: str, df: DataFrame) -> int:
-        return self.catalog.manifest(name).rows
-
 
 class Volatile:
     """In-memory materialiser: localCheckpoint the "checkpoint" nodes, leave
-    the others as built, count rows with ``count()``."""
+    the others as built."""
 
     def commit(self, node: Node, build) -> DataFrame:
         df = build()
         return df.localCheckpoint() if node.volatile == "checkpoint" else df
-
-    def rows(self, name: str, df: DataFrame) -> int:
-        return df.count()
 
 
 class DedupPipeline(DedupStages):

@@ -16,6 +16,8 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from pyspark.sql.pandas.types import from_arrow_schema
+
 from . import codecs
 from . import kernels as K
 from .config import SketchConfig
@@ -26,13 +28,6 @@ SKETCH_SCHEMA = (
 )
 
 BAND_SCHEMA = "image_id string, band int, band_hash long"
-
-SCORE_SCHEMA = (
-    "id_a string, id_b string, contain_count int, total_kmers int, "
-    "naive_sim double, adj_sim double, adjust_status string, lambda double, "
-    "median_cov double, kmers_lost int, "
-    "ani_lo double, ani_hi double, lambda_lo double, lambda_hi double"
-)
 
 
 def make_sketch_arrow_fn(cfg: SketchConfig):
@@ -302,6 +297,7 @@ SCORE_PA_SCHEMA = pa.schema(
         ("lambda_hi", pa.float64()),
     ]
 )
+SCORE_SCHEMA = from_arrow_schema(SCORE_PA_SCHEMA)
 
 _TAIL_THR_CACHE: dict[float, float] = {}
 
@@ -716,14 +712,7 @@ PAIR_SHINGLES_PA_SCHEMA = pa.schema(
     ]
     + GATE_PA_FIELDS
 )
-PAIR_SHINGLES_SCHEMA = (
-    "id_a string, id_b string, total_kmers int, "
-    "inter_cnt array<struct<shingle:long,cnt:int>>, contain_count int, "
-    "naive_sim double, adj_sim double, adjust_status string, lambda double, "
-    "median_cov double, kmers_lost int, "
-    "ani_lo double, ani_hi double, lambda_lo double, lambda_hi double, "
-    "hamming int, lcs bigint, gated boolean"
-)
+PAIR_SHINGLES_SCHEMA = from_arrow_schema(PAIR_SHINGLES_PA_SCHEMA)
 
 
 def _shared_shingles(batch: pa.RecordBatch, counts, min_contain: float):
@@ -867,14 +856,15 @@ def make_pair_shingles_fn(cfg: SketchConfig, counts_bc=None):
 
 
 def _rescore_bucket(
-    pairs: pa.Table, items: pa.Table, limit: int, reass_frac: float
+    pairs: pa.Table, items: pa.Table, stop: np.ndarray, reass_frac: float
 ) -> pa.RecordBatch:
     """Winner-table reassignment for one bucket of preliminary clusters —
     oracle.winner_rescore in whole-bucket numpy, no per-row Python.
 
     ``pairs`` holds the bucket's first-pass pairs (id_a, id_b, adj_sim,
     total_kmers, inter_cnt = [(shingle, corpus cnt)]); ``items`` holds every
-    endpoint of them (image_id, pre_cluster, shingles). Returns the scorer
+    endpoint of them (image_id, pre_cluster, shingles). A shared shingle
+    competes unless it is in the sorted stop set ``stop``. Returns the scorer
     input (id_a, id_b, total_kmers, covs, kmers_lost) of the pairs that pass
     the derep filter (contain.rs:353-375), ``covs`` counting only the
     shingles each pair still owns."""
@@ -907,10 +897,10 @@ def _rescore_bucket(
     flat = inter.flatten()
     fields = dict(zip((f.name for f in flat.type), flat.flatten()))
     psh, pcnt = fields["shingle"].to_numpy(), fields["cnt"].to_numpy()
-    # shingles above the df limit never compete (repeat-mask analog,
-    # sketch.rs:595-600); a competing shingle is keyed by (cluster, shingle
-    # code), so clusters sharing a bucket never compete with each other
-    compete = pcnt <= limit
+    # stop shingles never compete (repeat-mask analog, sketch.rs:595-600);
+    # a competing shingle is keyed by (cluster, shingle code), so clusters
+    # sharing a bucket never compete with each other
+    compete = ~_lookup(stop, psh)[1]
     uniq = np.unique(psh[compete])
     ish_list = col(items, "shingles")
     ii = np.repeat(
@@ -954,16 +944,17 @@ def _rescore_bucket(
     )
 
 
-def make_rescore_arrow_fn(cfg: SketchConfig, limit: int):
+def make_rescore_arrow_fn(cfg: SketchConfig, stop: np.ndarray):
     """cogroup ``applyInArrow`` kernel of the rescored stage: (pair rows,
     item rows) of one bucket of preliminary clusters → rescored rows in
-    SCORE_SCHEMA. ``limit`` is the banding df limit above which shingles
+    SCORE_SCHEMA. ``stop`` is the sorted stop set (the shingles whose corpus
+    count exceeds the band df limit, ``pipeline.Vocab``), whose shingles
     never compete."""
     score = _batch_scorer(cfg)
     reass_frac = cfg.tau**cfg.ani_k
 
     def fn(pairs: pa.Table, items: pa.Table) -> pa.Table:
-        batch = _rescore_bucket(pairs, items, limit, reass_frac)
+        batch = _rescore_bucket(pairs, items, stop, reass_frac)
         return pa.Table.from_batches([score(batch)])
 
     return fn

@@ -276,29 +276,22 @@ def test_durable_equals_volatile(spark_result, volatile_result):
 def test_runner_order_and_overlap(spark):
     """The runner starts each node only after all its inputs have finished,
     and runs independent nodes concurrently (clusters ∥ rescored), whatever
-    the materialiser does. The probe materialises a lazy node instantly,
-    as the volatile path does, and every other node in 0.1 s."""
+    the materialiser does. The probe materialises a node with a barrier in
+    0.1 s and one without instantly, as the volatile path does."""
     import threading
     import time
 
     from sylph_spark.pipeline import GRAPH, DedupStages
 
     spans, lock = {}, threading.Lock()
-    count_of = {n.inputs[0]: n.name for n in GRAPH if n.volatile == "count"}
 
     class Probe:
-        def span(self, name, secs=0.1):
-            t0 = time.monotonic()
-            time.sleep(secs)
-            with lock:
-                spans[name] = (t0, time.monotonic())
-            return name
-
         def commit(self, node, build):
-            return self.span(node.name, 0.0 if node.volatile == "lazy" else 0.1)
-
-        def rows(self, name, df):
-            return self.span(count_of[name])
+            t0 = time.monotonic()
+            time.sleep(0.1 if node.barrier else 0.0)
+            with lock:
+                spans[node.name] = (t0, time.monotonic())
+            return node.name
 
     out = DedupStages(spark, SketchConfig()).run_graph("images", Probe())
     assert out == {s: s for s in STAGES}
@@ -334,7 +327,8 @@ def test_rescored_plan_shape(spark_result):
 
     pipe, out, _ = spark_result
     n_items = pipe.catalog.manifest("sketches").rows
-    df = pipe._stage_rescored(out["pair_shingles"], out["sketches"], n_items)
+    vocab = pipe._stage_vocab(out["shingle_counts"], n_items)
+    df = pipe._stage_rescored(out["pair_shingles"], out["sketches"], vocab)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapCoGroupsInArrow" in plan
     assert len(re.findall(r"\bExchange\b", plan)) <= 2, plan
@@ -352,8 +346,9 @@ def test_pair_shingles_plan_shape(spark_result):
     import re
 
     pipe, out, _ = spark_result
-    vocab = pipe._stage_vocab(out["shingle_counts"])
-    assert vocab is not None
+    n_items = pipe.catalog.manifest("sketches").rows
+    vocab = pipe._stage_vocab(out["shingle_counts"], n_items)
+    assert vocab.counts is not None
     df = pipe._stage_pair_shingles(
         out["candidates"], out["sketches"], out["shingle_counts"], vocab
     )
@@ -425,14 +420,10 @@ def test_candidates_plan_shape(spark_result, vocab_max, monkeypatch):
     if vocab_max is not None:
         monkeypatch.setattr(pipeline, "VOCAB_BROADCAST_MAX", vocab_max)
     pipe, out, _ = spark_result
-    vocab = pipe._stage_vocab(out["shingle_counts"])
-    assert (vocab is None) == (vocab_max == 0)
-    df = pipe._stage_candidates(
-        out["sketches"],
-        out["shingle_counts"],
-        pipe.catalog.manifest("sketches").rows,
-        vocab,
-    )
+    n_items = pipe.catalog.manifest("sketches").rows
+    vocab = pipe._stage_vocab(out["shingle_counts"], n_items)
+    assert (vocab.counts is None) == (vocab_max == 0)
+    df = pipe._stage_candidates(out["sketches"], vocab)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, plan
     assert "Join" not in plan, plan
@@ -687,12 +678,12 @@ def test_banding_join_path_parity(spark, corpus, volatile_result, monkeypatch):
     broadcast, _ = volatile_result
     sketches, counts = broadcast["sketches"], broadcast["shingle_counts"]
     n_items = sketches.count()
-    vocab = DedupStages(spark, cfg)._stage_vocab(counts)
-    assert vocab is not None
     sliced = {}
     for low in (False, True):
         c = replace(cfg, band_max_df_min=2) if low else cfg
-        sliced[low] = DedupStages(spark, c)._stop_shingles(counts, n_items, vocab)
+        vocab = DedupStages(spark, c)._stage_vocab(counts, n_items)
+        assert vocab.counts is not None
+        sliced[low] = vocab.stop
     assert sliced[True].size > sliced[False].size
 
     monkeypatch.setattr(pipeline, "VOCAB_BROADCAST_MAX", 0)
@@ -704,13 +695,12 @@ def test_banding_join_path_parity(spark, corpus, volatile_result, monkeypatch):
         assert _canon(joined[stage]) == _canon(broadcast[stage]), stage
         assert joined[stage].columns == broadcast[stage].columns, stage
 
-    stages = DedupStages(spark, cfg)
-    assert stages._stage_vocab(counts) is None
     for low in (False, True):
         c = replace(cfg, band_max_df_min=2) if low else cfg
-        got = DedupStages(spark, c)._stop_shingles(counts, n_items, None)
-        assert got.dtype == np.int64
-        assert np.array_equal(got, sliced[low]), low
+        vocab = DedupStages(spark, c)._stage_vocab(counts, n_items)
+        assert vocab.counts is None
+        assert vocab.stop.dtype == np.int64
+        assert np.array_equal(vocab.stop, sliced[low]), low
 
 
 @pytest.fixture(scope="module")

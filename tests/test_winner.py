@@ -76,14 +76,6 @@ class TestWinnerRescoreOracle:
         assert pairs[("A", "D")].kmers_lost == 2
         assert pairs[("A", "D")].contain_count == 3
 
-    def test_disabled_flag_passthrough(self):
-        cfg = SketchConfig(winner_rescore=False)
-        sketches = [_sketch("A", [1, 2]), _sketch("B", [1, 2])]
-        counts = oracle.corpus_counts(sketches)
-        scored = pd.DataFrame([{"id_a": "A", "id_b": "B", "adj_sim": 0.9}])
-        out = oracle.winner_rescore(scored, sketches, counts, cfg)
-        assert len(out) == 1 and out["kmers_lost"].iloc[0] == 0
-
 
 class TestRescoreKernel:
     """udfs.make_rescore_arrow_fn on one bucket that holds two preliminary
@@ -94,8 +86,9 @@ class TestRescoreKernel:
 
         from sylph_spark import udfs
 
-        # df limit 4: shingle 999 (in all 6 items) never competes; shingle
-        # 100 is informative and shared by both clusters {A,B,C,D} and {X,Y}
+        # df limit 4: shingle 999 (in all 6 items) is the one stop shingle
+        # and never competes; shingle 100, exactly at the limit, is
+        # informative and shared by both clusters {A,B,C,D} and {X,Y}
         cfg = SketchConfig(band_max_df_min=4)
         sketches = [
             _sketch("A", [1, 2, 3, 4, 100, 999]),
@@ -146,8 +139,10 @@ class TestRescoreKernel:
             }
         )
         limit = cfg.band_df_limit(len(sketches))
+        stop = np.array(sorted(s for s, c in counts.items() if c > limit), np.int64)
+        assert stop.tolist() == [999]
         got = (
-            udfs.make_rescore_arrow_fn(cfg, limit)(pairs, items)
+            udfs.make_rescore_arrow_fn(cfg, stop)(pairs, items)
             .to_pandas()
             .sort_values(["id_a", "id_b"])
             .reset_index(drop=True)
