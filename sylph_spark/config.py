@@ -53,9 +53,9 @@ class SketchConfig:
     # analog of sylph's min-ANI cut contain.rs:746-764 applied early).
     # Kept well under tau so λ-boosted pairs (adj = naive/(1-e^-λ)) survive.
     score_min_contain: float = 0.25
-    # λ estimation guards (constants.rs:4, cmdline.rs:94-95)
+    # λ estimation guards (constants.rs:4, cmdline.rs:94-95); λ is always
+    # the ratio estimator (inference.rs:207-242), sylph's default
     min_count_correct: float = 3.0
-    estimator: str = "ratio"
     # bootstrap CI resamples per scored pair (contain.rs:849-898; reference
     # uses 100 with --ci). 0 = off (CI columns emitted as NaN) — it is a
     # per-pair 100× resampling cost, so off by default at scale.

@@ -7,9 +7,12 @@ bluenote-1577/sylph:
   (/root/reference/src/seeding.rs:4-52, Thomas Wang style, including the
   known "bugged but shipped" variant noted at seeding.rs:5).
 - FracMinHash selection ``hash < 2**64 // c`` (seeding.rs:108,142-144).
-- ``ratio_lambda`` Poisson coverage estimator (inference.rs:207-242).
-- ``mme_lambda`` method-of-moments estimator (inference.rs:126-155).
-- ``mle_zip`` zero-inflated-Poisson Newton-Raphson (inference.rs:157-205).
+- ``ratio_lambda`` Poisson coverage estimator (inference.rs:207-242), the
+  one λ estimator on the scoring path, as in sylph's default.
+- ``mle_zip`` zero-inflated-Poisson Newton-Raphson (inference.rs:157-205)
+  and ``binary_search_lambda`` negative-binomial grid search
+  (inference.rs:29-102), sylph's hidden-flag estimators, which only the E2
+  and E4 entry queries call.
 - ``ani_from_lambda`` zero-truncation-corrected containment → similarity
   (contain.rs:817-847) and the naive index (contain.rs:655-660).
 - coverage-vector statistics: median / Poisson-tail cut / zero padding
@@ -368,26 +371,14 @@ def image_shingles_batch(
     return _unique_per_segment(np.concatenate(pids), np.concatenate(vals))
 
 
-def caption_shingles_batch(captions: list, k: int, c: int):
-    """caption_shingles over a whole batch → (pid, vals) sorted flat pairs."""
-    bufs = [
-        np.frombuffer(cap.encode("utf-8", errors="replace"), dtype=np.uint8)
-        for cap in captions
-    ]
-    lens = np.array([b.size for b in bufs], dtype=np.int64)
-    if lens.sum() == 0:
-        return np.empty(0, np.int64), np.empty(0, U64)
-    flat = np.concatenate([b for b in bufs if b.size])
-    return caption_shingles_flat(flat, lens, k, c)
-
-
 def caption_shingles_flat(flat: np.ndarray, lens: np.ndarray, k: int, c: int):
-    """caption_shingles_batch over captions ALREADY flattened to one UTF-8
-    byte buffer (``flat``) with per-caption byte lengths (``lens``) — the
-    zero-copy entry point for Arrow string columns, whose data buffer IS
-    this layout (udfs.make_sketch_arrow_fn). Bit-identical to the list
-    form: Python's utf-8 encode of an Arrow-delivered string round-trips
-    the Arrow bytes exactly."""
+    """caption_shingles over a whole batch of captions ALREADY flattened to
+    one UTF-8 byte buffer (``flat``) with per-caption byte lengths
+    (``lens``) → (pid, vals) sorted flat pairs — the zero-copy entry point
+    for Arrow string columns, whose data buffer IS this layout
+    (udfs.make_sketch_arrow_fn). Bit-identical to per-caption
+    caption_shingles: Python's utf-8 encode of an Arrow-delivered string
+    round-trips the Arrow bytes exactly."""
     if flat.size == 0:
         return np.empty(0, np.int64), np.empty(0, U64)
     packed_all = _pack_windows_u64(flat, k)  # windows over the flat buffer
@@ -665,20 +656,6 @@ def ratio_lambda(
     return count_p1 / count * (most_ind + 1)
 
 
-def mme_lambda(full_covs: np.ndarray) -> float | None:
-    """Method of moments: λ = v/m + m − 1 (inference.rs:126-155)."""
-    full_covs = np.asarray(full_covs, dtype=np.int64)
-    nonzero = full_covs[full_covs != 0]
-    if nonzero.size < SAMPLE_SIZE_CUTOFF:
-        return None
-    if np.unique(nonzero).size == 1:
-        return None
-    m = mean(full_covs)
-    v = var(full_covs)
-    lam = v / m + m - 1.0
-    return lam if lam >= 0.0 else None
-
-
 def mle_zip(full_covs: np.ndarray, k: float) -> float | None:
     """Zero-inflated Poisson MLE via Newton-Raphson (inference.rs:157-205)."""
     full_covs = np.asarray(full_covs, dtype=np.int64)
@@ -746,18 +723,6 @@ def binary_search_lambda(full_covs: np.ndarray) -> float | None:
     return best
 
 
-def kmer_identity(counts: np.ndarray, k: float) -> float | None:
-    """E10 k-mer identity / unknown estimate (contain.rs:901-951):
-    eps = Σcnt_{>1} / (Σcnt_{>1} + #cnt_{=1} + 0.1), identity = eps^{1/k}."""
-    counts = np.asarray(counts, dtype=np.int64)
-    num_gt1 = int(counts[counts > 1].sum())
-    num_eq1 = int((counts == 1).sum())
-    eps = num_gt1 / (num_gt1 + num_eq1 + 0.1)
-    if eps == 0.0:
-        return None
-    return eps ** (1.0 / k)
-
-
 # ---------------------------------------------------------------------------
 # Similarity from λ (contain.rs:817-847) + regime switch (contain.rs:692-713)
 # ---------------------------------------------------------------------------
@@ -789,13 +754,11 @@ def adjust_status(
     median_cov: float,
     full_covs: np.ndarray,
     min_count_correct: float = DEFAULT_MIN_COUNT_CORRECT,
-    estimator: str = "ratio",
-    k: float = 31.0,
 ) -> tuple[str, float | None]:
     """High / Low / Lambda(λ) regime switch — contain.rs:692-713."""
     if median_cov > MEDIAN_ANI_THRESHOLD:
         return ("high", None)
-    lam = _lambda_estimate(full_covs, estimator, k, min_count_correct)
+    lam = ratio_lambda(full_covs, min_count_correct)
     if lam is None:
         return ("low", None)
     return ("lambda", lam)
@@ -817,7 +780,6 @@ def score_pair(
     total_kmers: int,
     k: float,
     min_count_correct: float = DEFAULT_MIN_COUNT_CORRECT,
-    estimator: str = "ratio",
 ) -> dict | None:
     """Full sylph scoring of one (item, corpus) containment — the E-chain.
 
@@ -830,7 +792,7 @@ def score_pair(
         return None
     n_ani = naive_ani(stats["contain_count"], total_kmers, k)
     status, lam = adjust_status(
-        stats["median_cov"], stats["full_covs"], min_count_correct, estimator, k
+        stats["median_cov"], stats["full_covs"], min_count_correct
     )
     f_cov = final_coverage(status, lam, stats["median_cov"], stats["geq1_mean_cov"])
     opt_lambda = lam if status == "lambda" else None
@@ -858,38 +820,18 @@ def score_pair(
 # ---------------------------------------------------------------------------
 
 
-def _lambda_estimate(
-    full_covs: np.ndarray,
-    estimator: str,
-    k: float,
-    min_count_correct: float = DEFAULT_MIN_COUNT_CORRECT,
-) -> float | None:
-    """Dispatch to the configured λ estimator (the match arm the reference
-    runs both for the point estimate and inside the bootstrap loop)."""
-    if estimator == "ratio":
-        return ratio_lambda(full_covs, min_count_correct)
-    if estimator == "mme":
-        return mme_lambda(full_covs)
-    if estimator == "mle":
-        return mle_zip(full_covs, k)
-    if estimator == "nb":
-        return binary_search_lambda(full_covs)
-    raise ValueError(f"unknown estimator {estimator}")
-
-
 def bootstrap_interval(
     full_covs: np.ndarray,
     k: float,
     min_count_correct: float = DEFAULT_MIN_COUNT_CORRECT,
     iters: int = 100,
     seed: int = 7,
-    estimator: str = "ratio",
 ) -> tuple[float | None, float | None, float | None, float | None]:
     """(ani_lo, ani_hi, lambda_lo, lambda_hi); None unless ≥50 successes.
 
-    Resamples with the CONFIGURED estimator (contain.rs:866-877 bootstraps
-    whatever `--estimator` selected), so the CI brackets the same statistic
-    as the point estimate."""
+    Resamples with ratio_lambda, the point estimate's estimator
+    (contain.rs:866-877 bootstraps whichever estimator scored the pair), so
+    the CI brackets the same statistic as the point estimate."""
     full_covs = np.asarray(full_covs, dtype=np.int64)
     n = full_covs.size
     if n == 0:
@@ -899,7 +841,7 @@ def bootstrap_interval(
     res_lambda: list[float] = []
     for _ in range(iters):
         rand_vec = full_covs[rng.integers(0, n, size=n)]
-        lam = _lambda_estimate(rand_vec, estimator, k, min_count_correct)
+        lam = ratio_lambda(rand_vec, min_count_correct)
         ani = ani_from_lambda(lam, k, rand_vec)
         if ani is not None and lam is not None:
             if not math.isnan(ani) and not math.isnan(lam):

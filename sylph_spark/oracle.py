@@ -148,13 +148,7 @@ def score_candidates(
         if inter.size < cfg.score_min_contain * small.shingles.size:
             continue  # prefilter (cannot reach tau; see config.score_min_contain)
         covs = np.array([counts[int(s)] for s in inter], dtype=np.int64)
-        res = K.score_pair(
-            covs,
-            small.shingles.size,
-            cfg.ani_k,
-            cfg.min_count_correct,
-            cfg.estimator,
-        )
+        res = K.score_pair(covs, small.shingles.size, cfg.ani_k, cfg.min_count_correct)
         if res is None:
             continue
         rows.append(
@@ -272,9 +266,7 @@ def winner_rescore(
         if kept.size == 0:
             continue
         covs = np.array([counts[int(s)] for s in kept], dtype=np.int64)
-        res = K.score_pair(
-            covs, total, cfg.ani_k, cfg.min_count_correct, cfg.estimator
-        )
+        res = K.score_pair(covs, total, cfg.ani_k, cfg.min_count_correct)
         if res is None:
             continue
         rows.append(

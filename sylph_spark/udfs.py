@@ -319,25 +319,6 @@ def _tail_threshold(m: float) -> float:
     return got
 
 
-def _value_runs(kvals: np.ndarray, kpidx: np.ndarray, n: int):
-    """Value-run decomposition of per-row SORTED nonzero values (``kvals``
-    ascending within each row, ``kpidx`` the non-decreasing row index):
-    returns (run_row, run_val, run_cnt, n_runs) where each run is a maximal
-    (row, value) group — the vectorized histogram underlying both λ
-    estimators (inference.rs:126-155, 207-242)."""
-    if kvals.size == 0:
-        z = np.empty(0, np.int64)
-        return z, z, z, np.zeros(n, dtype=np.int64)
-    newrun = np.ones(kvals.size, dtype=bool)
-    newrun[1:] = (kpidx[1:] != kpidx[:-1]) | (kvals[1:] != kvals[:-1])
-    run_starts = np.flatnonzero(newrun)
-    run_row = kpidx[run_starts]
-    run_val = kvals[run_starts]
-    run_cnt = np.diff(np.append(run_starts, kvals.size))
-    n_runs = np.bincount(run_row, minlength=n)
-    return run_row, run_val, run_cnt, n_runs
-
-
 def _ratio_lambda_rows(
     kvals: np.ndarray,
     kpidx: np.ndarray,
@@ -346,14 +327,22 @@ def _ratio_lambda_rows(
     mcc: float,
 ) -> np.ndarray:
     """Vectorized ratio_lambda (inference.rs:207-242) over ``n`` rows of
-    sorted nonzero values: modal run by (count, value) ascending lexsort →
-    last run per row; λ = cnt[i*+1]/cnt[i*]·(i*+1). NaN wherever the kernel
-    returns None (sample cutoff, single distinct value, missing i*+1 bin,
-    min-count guards) — identical guards to kernels.ratio_lambda."""
-    run_row, run_val, run_cnt, n_runs = _value_runs(kvals, kpidx, n)
+    SORTED nonzero values (``kvals`` ascending within each row, ``kpidx``
+    the non-decreasing row index): each maximal (row, value) run is one
+    histogram bin; modal run by (count, value) ascending lexsort → last run
+    per row; λ = cnt[i*+1]/cnt[i*]·(i*+1). NaN wherever the kernel returns
+    None (sample cutoff, single distinct value, missing i*+1 bin, min-count
+    guards) — identical guards to kernels.ratio_lambda."""
     lam = np.full(n, np.nan)
-    if run_row.size == 0:
+    if kvals.size == 0:
         return lam
+    newrun = np.ones(kvals.size, dtype=bool)
+    newrun[1:] = (kpidx[1:] != kpidx[:-1]) | (kvals[1:] != kvals[:-1])
+    run_starts = np.flatnonzero(newrun)
+    run_row = kpidx[run_starts]
+    run_val = kvals[run_starts]
+    run_cnt = np.diff(np.append(run_starts, kvals.size))
+    n_runs = np.bincount(run_row, minlength=n)
     ord2 = np.lexsort((run_val, run_cnt, run_row))
     rr_sorted = run_row[ord2]
     last_mask = np.ones(rr_sorted.size, dtype=bool)
@@ -382,39 +371,10 @@ def _ratio_lambda_rows(
     return lam
 
 
-def _mme_lambda_rows(
-    kvals: np.ndarray,
-    kpidx: np.ndarray,
-    nz_cnt: np.ndarray,
-    full_size: np.ndarray,
-    n: int,
-) -> np.ndarray:
-    """Vectorized mme_lambda (inference.rs:126-155): λ = v/m + m − 1 over the
-    zero-padded coverage vector (population moments), guards identical to
-    kernels.mme_lambda (≥25 nonzero, ≥2 distinct nonzero values, λ ≥ 0)."""
-    lam = np.full(n, np.nan)
-    if kvals.size == 0:
-        return lam
-    _, _, _, n_runs = _value_runs(kvals, kpidx, n)  # n_runs = distinct nz vals
-    fs = np.maximum(full_size, 1).astype(np.float64)
-    kv = kvals.astype(np.float64)
-    m = np.bincount(kpidx, weights=kv, minlength=n) / fs
-    d = kv - m[kpidx]
-    ssq = np.bincount(kpidx, weights=d * d, minlength=n)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        v = (ssq + (full_size - nz_cnt) * m * m) / fs
-        lam_val = v / m + m - 1.0
-    eligible = (
-        (nz_cnt >= K.SAMPLE_SIZE_CUTOFF) & (n_runs >= 2) & (lam_val >= 0.0)
-    )
-    lam[eligible] = lam_val[eligible]
-    return lam
-
-
 def _score_batch_fast(batch: pa.RecordBatch, cfg: SketchConfig, has_lost: bool):
-    """Whole-batch numpy scoring (ratio/mme estimators, with or without
-    bootstrap CIs): one lexsort + segment reductions replace the per-pair
-    score_pair loop — the serial-Python hot path at 10⁹ scored pairs."""
+    """Whole-batch numpy scoring (with or without bootstrap CIs): one
+    lexsort + segment reductions replace the per-pair score_pair loop — the
+    serial-Python hot path at 10⁹ scored pairs."""
     idx = batch.schema.get_field_index
     covs_arr = batch.column(idx("covs"))
     # ListArray offsets are contiguous by construction (list i spans
@@ -459,15 +419,12 @@ def _score_batch_fast(batch: pa.RecordBatch, cfg: SketchConfig, has_lost: bool):
         naive = (cc / total) ** inv_k
 
     # λ estimation (inference.rs) over the kept multiset, all pairs at once:
-    # per-pair sorted nonzero values → vectorized estimator rows. λ only
+    # per-pair sorted nonzero values → vectorized ratio λ rows. λ only
     # applies outside the high regime (contain.rs:692-713), so mask after.
     kvals = svals[kept_el]
     kpidx = pidx[kept_el]
     high = keep & (med.astype(np.float64) > K.MEDIAN_ANI_THRESHOLD)
-    if cfg.estimator == "ratio":
-        lam = _ratio_lambda_rows(kvals, kpidx, kept_cnt, n, mcc)
-    else:  # mme — moments over the zero-padded vector
-        lam = _mme_lambda_rows(kvals, kpidx, kept_cnt, full_size, n)
+    lam = _ratio_lambda_rows(kvals, kpidx, kept_cnt, n, mcc)
     lam[~keep | high] = np.nan
     has_lam = ~np.isnan(lam)
 
@@ -531,11 +488,11 @@ def _bootstrap_ci_rows(
     to kernels.bootstrap_interval's per-iteration draws (one
     ``default_rng(seed).integers(0, n, (iters, n))`` call consumes the PCG
     stream exactly as ``iters`` size-n calls do; verified empirically).
-    Pairs are then processed in element-budgeted chunks so the λ machinery
-    (_ratio_lambda_rows / _mme_lambda_rows) runs ONCE per chunk over
-    (pairs·iters) resample rows instead of per pair per iteration — the
-    pairs × iters tensorization that removes the per-pair Python loop from
-    the CI path (VERDICT r3 #2)."""
+    Pairs are then processed in element-budgeted chunks so
+    _ratio_lambda_rows runs ONCE per chunk over (pairs·iters) resample rows
+    instead of per pair per iteration — the pairs × iters tensorization
+    that removes the per-pair Python loop from the CI path (VERDICT r3
+    #2)."""
     n = keep.size
     iters, seed = cfg.bootstrap_iters, cfg.bootstrap_seed
     inv_k = 1.0 / cfg.ani_k
@@ -565,12 +522,7 @@ def _bootstrap_ci_rows(
         ch_kp = np.concatenate(kp_list)
         ch_nz = np.concatenate(nz_list)
         ch_fs = np.repeat(sizes, iters)
-        if cfg.estimator == "ratio":
-            lam = _ratio_lambda_rows(
-                ch_kv, ch_kp, ch_nz, rows, cfg.min_count_correct
-            )
-        else:
-            lam = _mme_lambda_rows(ch_kv, ch_kp, ch_nz, ch_fs, rows)
+        lam = _ratio_lambda_rows(ch_kv, ch_kp, ch_nz, rows, cfg.min_count_correct)
         # ani_from_lambda, all rows at once
         with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
             adj = ch_nz / (1.0 - np.exp(-lam)) / ch_fs
@@ -613,9 +565,10 @@ def _bootstrap_ci_rows(
 
 
 def _score_batch_slow(batch: pa.RecordBatch, cfg: SketchConfig, has_lost: bool):
-    """Per-pair loop over kernels.score_pair — the general path (mme/mle/nb
-    estimators, bootstrap CIs) and the cross-check reference for the fast
-    path (tests assert fast ≡ slow on identical batches)."""
+    """Per-pair loop over kernels.score_pair and kernels.bootstrap_interval
+    — the cross-check reference for the fast path (tests assert fast ≡ slow
+    on identical batches) and the loop the per-pair scorer microbenches
+    time."""
     nan = float("nan")
     idx = batch.schema.get_field_index
     ids_a = batch.column(idx("id_a")).to_pylist()
@@ -626,9 +579,7 @@ def _score_batch_slow(batch: pa.RecordBatch, cfg: SketchConfig, has_lost: bool):
     cols: dict[str, list] = {f.name: [] for f in SCORE_PA_SCHEMA}
     for i in range(batch.num_rows):
         covs = np.asarray(covs_l[i], dtype=np.int64)
-        res = K.score_pair(
-            covs, int(total[i]), cfg.ani_k, cfg.min_count_correct, cfg.estimator
-        )
+        res = K.score_pair(covs, int(total[i]), cfg.ani_k, cfg.min_count_correct)
         if res is None:
             continue
         ci = (None, None, None, None)
@@ -639,7 +590,6 @@ def _score_batch_slow(batch: pa.RecordBatch, cfg: SketchConfig, has_lost: bool):
                 cfg.min_count_correct,
                 iters=cfg.bootstrap_iters,
                 seed=cfg.bootstrap_seed,
-                estimator=cfg.estimator,
             )
         cols["id_a"].append(ids_a[i])
         cols["id_b"].append(ids_b[i])
@@ -664,10 +614,10 @@ def make_score_arrow_fn(cfg: SketchConfig, force_slow: bool = False):
     where ``covs`` is the pair's array of intersecting-shingle corpus
     multiplicities — the E1/E6/E7 scoring chain (contain.rs:601-745).
 
-    The ratio and mme estimators take the vectorized whole-batch path —
+    Scoring takes the vectorized whole-batch path, ratio λ estimator and
     bootstrap CIs included (resamples tensorized pairs × iters, RNG-stream
-    identical to the kernel loop); the mle/nb estimators take the per-pair
-    kernel loop. ``kmers_lost`` (winner-table reassignment count,
+    identical to the kernel loop); ``force_slow`` takes the per-pair kernel
+    loop instead. ``kmers_lost`` (winner-table reassignment count,
     contain.rs:641) is passed through when present (rescore pass), 0
     otherwise; CI columns are NaN unless bootstrapping."""
     score = _batch_scorer(cfg, force_slow)
@@ -680,9 +630,8 @@ def make_score_arrow_fn(cfg: SketchConfig, force_slow: bool = False):
 
 
 def _batch_scorer(cfg: SketchConfig, force_slow: bool = False):
-    """batch → scored batch, on the fast path for the ratio/mme estimators."""
-    fast = not force_slow and cfg.estimator in ("ratio", "mme")
-    score = _score_batch_fast if fast else _score_batch_slow
+    """batch → scored batch, on the fast path unless ``force_slow``."""
+    score = _score_batch_slow if force_slow else _score_batch_fast
 
     def run(batch: pa.RecordBatch) -> pa.RecordBatch:
         return score(batch, cfg, batch.schema.get_field_index("kmers_lost") >= 0)

@@ -171,12 +171,6 @@ class TestEstimators:
         # min_count_correct guard: cnt[i*+1] < 3 → None
         assert K.ratio_lambda(self._padded({1: 30, 2: 2}, 10)) is None
 
-    def test_mme_lambda(self):
-        covs = self._padded({1: 30, 2: 15, 3: 5}, zeros=50)
-        m = covs.mean()
-        v = covs.var()
-        assert K.mme_lambda(covs) == pytest.approx(v / m + m - 1.0)
-
     def test_mle_zip_recovers_lambda(self):
         # simulate ZIP data: Poisson(1.2) with extra zeros
         rng = np.random.default_rng(7)
@@ -244,13 +238,6 @@ class TestEstimators:
         assert lam is not None and max(0.003, m - 2) <= lam <= m + 5
         assert K.binary_search_lambda(np.array([2, 2, 2])) is None  # no ones
 
-    def test_kmer_identity_hand_computed(self):
-        # counts: 30 ones, 10 twos → eps = 20/(20+30+0.1)
-        counts = np.array([1] * 30 + [2] * 10)
-        eps = 20 / (20 + 30 + 0.1)
-        assert K.kmer_identity(counts, 7.0) == pytest.approx(eps ** (1 / 7.0))
-        assert K.kmer_identity(np.array([1, 1, 1]), 7.0) is None
-
     def test_bootstrap_deterministic(self):
         covs = np.array([0] * 50 + [1] * 60 + [2] * 30 + [3] * 10)
         r1 = K.bootstrap_interval(covs, 31.0)
@@ -304,6 +291,14 @@ class TestSketchBatchParity:
         grays[2] = np.zeros((3, 3), dtype=np.float32)  # nb < k_block → no shingles
         return grays, caps
 
+    @staticmethod
+    def _caption_ref(caps, cfg):
+        """Per-caption caption_shingles laid out as the batch kernels'
+        (pid, vals) sorted flat pairs."""
+        per = [K.caption_shingles(cap, cfg.k_caption, cfg.c) for cap in caps]
+        pid = np.repeat(np.arange(len(per), dtype=np.int64), [v.size for v in per])
+        return pid, np.concatenate(per)
+
     def test_image_caption_union_simhash_parity(self):
         from sylph_spark.config import SketchConfig
 
@@ -313,7 +308,9 @@ class TestSketchBatchParity:
         img_pid, img_vals = K.image_shingles_batch(
             grays, cfg.block_px, cfg.q_shift, cfg.k_block, cfg.c, cfg.n_grids
         )
-        cap_pid, cap_vals = K.caption_shingles_batch(caps, cfg.k_caption, cfg.c)
+        lens = np.array([len(cap.encode()) for cap in caps], dtype=np.int64)
+        flat = np.frombuffer("".join(caps).encode(), dtype=np.uint8)
+        cap_pid, cap_vals = K.caption_shingles_flat(flat, lens, cfg.k_caption, cfg.c)
         uni_pid, uni_vals = K.union_per_segment(
             img_pid, img_vals, cap_pid, cap_vals
         )
@@ -333,7 +330,7 @@ class TestSketchBatchParity:
         """caption_shingles_flat fed straight from an Arrow string column's
         raw buffers (the make_sketch_arrow_fn fast path — including a
         SLICED array, whose offsets buffer is unsliced) must be
-        bit-identical to the list-of-str batch path, unicode included."""
+        bit-identical to per-caption caption_shingles, unicode included."""
         import pyarrow as pa
 
         from sylph_spark.config import SketchConfig
@@ -356,15 +353,13 @@ class TestSketchBatchParity:
                 data[off[0] : off[-1]], np.diff(off), cfg.k_caption, cfg.c
             )
 
-        ref_pid, ref_vals = K.caption_shingles_batch(caps, cfg.k_caption, cfg.c)
+        ref_pid, ref_vals = self._caption_ref(caps, cfg)
         arr = pa.array(caps, pa.string())
         got_pid, got_vals = from_arrow(arr)
         np.testing.assert_array_equal(got_pid, ref_pid)
         np.testing.assert_array_equal(got_vals, ref_vals)
         # sliced array: same captions minus the first → pids shift by 1
-        sref_pid, sref_vals = K.caption_shingles_batch(
-            caps[1:], cfg.k_caption, cfg.c
-        )
+        sref_pid, sref_vals = self._caption_ref(caps[1:], cfg)
         sgot_pid, sgot_vals = from_arrow(arr.slice(1, len(caps) - 1))
         np.testing.assert_array_equal(sgot_pid, sref_pid)
         np.testing.assert_array_equal(sgot_vals, sref_vals)

@@ -368,16 +368,7 @@ def test_pair_shingles_plan_shape(spark_result):
     assert not re.search(r"Python|Arrow|Pandas|Exchange|Join", plan), plan
 
 
-def _plan_ops(df) -> dict[str, int]:
-    """How many of each shuffle-shaping operator the executed plan of
-    ``df`` holds."""
-    import re
-
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return {op: len(re.findall(rf"\b{op}\b", plan)) for op in ("Exchange", "Sort", "Window", "Expand")}
-
-
-def test_sketches_plan_shape(spark, spark_result, corpus, tmp_path):
+def test_sketches_plan_shape(spark, spark_result, corpus, tmp_path, plan_ops):
     """Plan-shape guard for the sketches stage over a committed
     one-file images table, the under-partitioned input: one exchange
     (hash on image_id) spreads it before the MapInArrow, with no sort,
@@ -386,19 +377,19 @@ def test_sketches_plan_shape(spark, spark_result, corpus, tmp_path):
     images, _ = corpus
     path = str(tmp_path / "images")
     images_df_from_pandas(spark, images).coalesce(1).write.parquet(path)
-    ops = _plan_ops(pipe._stage_sketches(spark.read.parquet(path)))
+    ops = plan_ops(pipe._stage_sketches(spark.read.parquet(path)))
     assert ops["Exchange"] <= 1 and ops["Sort"] == 0, ops
     assert ops["Window"] == 0 and ops["Expand"] == 0, ops
 
 
-def test_survivors_plan_shape(spark_result):
+def test_survivors_plan_shape(spark_result, plan_ops):
     """Plan-shape guard for the survivors stage over committed clusters
     and verified: the rep_score aggregate and the per-cluster min_by
     aggregate are the only exchanges, min_by's sort aggregate the only
     sorts (the small rep_score side is broadcast), with no window and no
     expand (values pinned from the built plan)."""
     pipe, out, _ = spark_result
-    ops = _plan_ops(pipe._stage_survivors(out["clusters"], out["verified"]))
+    ops = plan_ops(pipe._stage_survivors(out["clusters"], out["verified"]))
     assert ops["Exchange"] <= 2 and ops["Sort"] <= 2, ops
     assert ops["Window"] == 0 and ops["Expand"] == 0, ops
 
